@@ -287,38 +287,19 @@ def _empty_history(spark) -> DataFrame:
     return spark.createDataFrame([], HISTORY_SCHEMA)
 
 
-def all_histories(rows: DataFrame,
-                  present_hint: set | None = None
-                  ) -> tuple[DataFrame, DataFrame, DataFrame, set]:
+def all_histories(rows: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame, set]:
     """(node_hist, way_hist, rel_hist, present_types) from the deduped
     batch∪state rows.  ``present_types`` ⊆ {node, way, relation} lets the
     caller skip downstream per-type work (way/relation rendering) without
     re-probing the frames.
 
-    Type-emptiness early-exit: which builders run at all is decided by
-    ``present_hint`` when the caller already knows a type superset
-    driver-side (the incremental closure's small path holds every
-    batch/fetch key as a packed (id<<2)|type long, so the hint costs
-    zero jobs; a superset is safe — a hinted-but-empty type just builds
-    an empty history), else by one cheap distinct aggregate.  Most
-    minutely batches touch no relation (and node-only batches touch no
-    way), and each skipped builder skips several jobs (its own
+    Type-emptiness early-exit: one cheap distinct aggregate decides which
+    builders run at all.  Each skipped builder skips several jobs (its own
     checkpoints, and for relations the member-table checkpoints +
-    fixpoint machinery).  For single-type (node-only) batches the rows
-    frame has exactly one consumer, so its checkpoint is skipped too —
-    the whole histories stage is then ONE job."""
+    fixpoint machinery)."""
     spark = rows.sparkSession
-    if present_hint is not None:
-        present = set(present_hint)
-    else:
-        rows = rows.localCheckpoint(eager=True)
-        present = {
-            r["type"]
-            for r in rows.select("type").distinct().collect()
-        }
-    multi_consumer = bool(present & {"way", "relation"})
-    if present_hint is not None and multi_consumer:
-        rows = rows.localCheckpoint(eager=True)
+    rows = rows.localCheckpoint(eager=True)
+    present = {r["type"] for r in rows.select("type").distinct().collect()}
     nh = node_histories(rows).localCheckpoint(eager=True)
     if "way" in present:
         wh = way_histories(rows, nh).localCheckpoint(eager=True)
@@ -329,3 +310,122 @@ def all_histories(rows: DataFrame,
     else:
         rh = _empty_history(spark)
     return nh, wh, rh, present
+
+
+# ------------------------------------------------------------- driver route
+# The small-batch twin of dedup_batch_union + all_histories over row
+# dicts (OSM_COLUMNS + in_batch): the same rules as the DataFrame
+# builders above, each entity's winners held as {id: (in_row, before_row)}.
+def _ts_key(r) -> tuple:
+    # Spark orders a null timestamp below every other (last in desc)
+    ts = r["timestamp"]
+    return (ts is not None, ts)
+
+
+def _order(r) -> tuple:
+    # max_by's struct(timestamp, version) order
+    v = r["version"]
+    return (*_ts_key(r), v is not None, v)
+
+
+def _dedup_py(rows: list[dict]) -> list[dict]:
+    """dedup_batch_union: one row per (id, type, version), the in-batch
+    copy (then the latest) kept, ``in_batch`` OR-merged."""
+    best: dict[tuple, dict] = {}
+    for r in rows:
+        k = (r["id"], r["type"], r["version"])
+        cur = best.get(k)
+        if cur is None:
+            best[k] = r
+            continue
+        keep = r if (r["in_batch"], _ts_key(r)) > (cur["in_batch"], _ts_key(cur)) else cur
+        best[k] = {**keep, "in_batch": cur["in_batch"] or r["in_batch"]}
+    return list(best.values())
+
+
+def _histories_py(flagged) -> dict:
+    """_histories: per id, the max-(timestamp, version) row among the
+    window-flagged rows and among the before-flagged rows."""
+    out: dict = {}
+    for r, w_ok, b_ok in flagged:
+        in_row, before_row = out.get(r["id"], (None, None))
+        if w_ok and (in_row is None or _order(r) > _order(in_row)):
+            in_row = r
+        if b_ok and (before_row is None or _order(r) > _order(before_row)):
+            before_row = r
+        out[r["id"]] = (in_row, before_row)
+    return out
+
+
+def histories_py(rows: list[dict]) -> tuple[dict, dict, dict]:
+    """(node_hist, way_hist, rel_hist) as {id: (in_row, before_row)} from
+    the undeduped batch∪state row dicts of a small scope."""
+    rows = _dedup_py(rows)
+    by_type: dict[str, list] = {"node": [], "way": [], "relation": []}
+    for r in rows:
+        if r["type"] in by_type:
+            by_type[r["type"]].append(r)
+
+    nh = _histories_py((r, r["in_batch"], not r["in_batch"]) for r in by_type["node"])
+
+    def way_flags(r):
+        nds = r["nds"]
+        if nds is None:
+            return False, False
+        refs = [None if nd is None else nd["ref"] for nd in nds]
+        complete = all(ref in nh for ref in refs)
+        win = r["in_batch"] or any(ref in nh and nh[ref][0] is not None for ref in refs)
+        before = not r["in_batch"] and all(ref in nh and nh[ref][1] is not None for ref in refs)
+        return complete and win, complete and before
+
+    wh = _histories_py((r, *way_flags(r)) for r in by_type["way"])
+
+    rels = by_type["relation"]
+    rel_ids = {r["id"] for r in rels}
+    known = {"node": nh, "way": wh, "relation": rel_ids}
+
+    def members(r):
+        return [(m["type"], m["ref"]) if m is not None else (None, None)
+                for m in (r["members"] or [])]
+
+    def nw_flags(ms):
+        # (any node/way member in-window, every node/way member before-window)
+        hs = [(nh if t == "node" else wh).get(ref) for t, ref in ms if t in ("node", "way")]
+        return (any(h is not None and h[0] is not None for h in hs),
+                all(h is not None and h[1] is not None for h in hs))
+
+    def child_rels(ms):
+        return [ref for t, ref in ms if t == "relation" and ref in rel_ids]
+
+    # relation window/before flags from each id's LATEST row: least /
+    # greatest fixpoint over member relations, MAX_REL_DEPTH rounds
+    latest: dict = {}
+    for r in rels:
+        if r["id"] not in latest or _order(r) > _order(latest[r["id"]]):
+            latest[r["id"]] = r
+    base = {rid: (r["in_batch"], *nw_flags(members(r))) for rid, r in latest.items()}
+    kids = {rid: child_rels(members(r)) for rid, r in latest.items()}
+    state = {rid: (ib or any_in, not ib and all_before)
+             for rid, (ib, any_in, all_before) in base.items()}
+    for _ in range(MAX_REL_DEPTH if any(kids.values()) else 0):
+        nxt = {
+            rid: (ib or any_in or any(state[k][0] for k in kids[rid]),
+                  not ib and all_before and all(state[k][1] for k in kids[rid]))
+            for rid, (ib, any_in, all_before) in base.items()
+        }
+        converged = nxt == state
+        state = nxt
+        if converged:
+            break
+
+    def rel_flags(r):
+        ms = members(r)
+        complete = all(t in known and ref in known[t] for t, ref in ms if t is not None)
+        any_in, all_before = nw_flags(ms)
+        ks = child_rels(ms)
+        win = r["in_batch"] or any_in or any(state[k][0] for k in ks)
+        before = not r["in_batch"] and all_before and all(state[k][1] for k in ks)
+        return complete and win, complete and before
+
+    rh = _histories_py((r, *rel_flags(r)) for r in rels)
+    return nh, wh, rh

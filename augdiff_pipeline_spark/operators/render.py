@@ -22,8 +22,10 @@ emission state machine (/root/reference/ad/src/main/scala/RowsToJson.scala:272-3
   after-feature + invisible before-feature; delete → invisible
   before-feature only.
 
-All geometry work happens in applyInPandas/mapInPandas Arrow kernels
-over batch-scoped groups; the node-coordinate lookup is broadcast.
+Geometry work happens in mapInPandas Arrow kernels over batch-scoped
+groups, with the node-coordinate lookup broadcast — or, for a small
+batch, on the driver (``feature_lines_py``).  Both call the same
+per-entity functions (``way_wkb``, ``relation_wkb``, ``feature_line``).
 """
 
 from __future__ import annotations
@@ -37,8 +39,82 @@ from pyspark.sql import functions as F
 
 from ..functions.osm_tags import is_area_py, is_multipolygon_py
 from ..geometry import assembly, core, wkb
+from .history import MAX_REL_DEPTH
 
 _MODE_COLS = {"after": ("ax", "ay"), "before": ("bx", "by")}
+
+
+# ------------------------------------------------------- per-entity kernels
+# Plain functions over one entity: the mapInPandas kernels below and the
+# driver route (feature_lines_py) both call them, so geometry and
+# emission exist once.
+def way_wkb(tags, xs, ys) -> bytes | None:
+    """One way's WKB from its node coordinates in nd order: a Polygon
+    when the way is an area and closed, else a LineString; None when it
+    has no nodes or any node coordinate is missing."""
+    x = np.array(xs, dtype=np.float64)
+    y = np.array(ys, dtype=np.float64)
+    if len(x) == 0 or np.isnan(x).any() or np.isnan(y).any():
+        return None
+    coords = np.stack([x, y], axis=1)
+    closed = len(coords) >= 2 and (coords[0] == coords[-1]).all()
+    tags_d = dict(tags) if tags is not None else {}
+    if is_area_py(tags_d) and closed and len(coords) >= 4:
+        geom: core.Geometry = core.Polygon((coords,))
+    else:
+        geom = core.LineString(coords)
+    return wkb.dumps(geom)
+
+
+def _way_pts_wkb(tags, pts) -> bytes | None:
+    return way_wkb(tags, [p["x"] for p in pts], [p["y"] for p in pts])
+
+
+def relation_wkb(tags, ms) -> bytes:
+    """One relation's WKB from its members in member order.  Each item
+    of ``ms`` carries mtype, role and the member's geometry source: x/y
+    for a node, way_wkb for a way, rel_wkb for a relation (None when
+    unresolved — the member is then dropped from roles, types and geoms
+    in lockstep)."""
+    roles, types, geoms = [], [], []
+    for m in ms:
+        g: core.Geometry | None = None
+        if m["mtype"] == "node" and m["x"] is not None and not pd.isna(m["x"]):
+            g = core.Point(float(m["x"]), float(m["y"]))
+        elif m["mtype"] == "way" and m["way_wkb"] is not None:
+            g = wkb.loads(bytes(m["way_wkb"]))
+        elif m["mtype"] == "relation" and m["rel_wkb"] is not None:
+            g = wkb.loads(bytes(m["rel_wkb"]))
+        if g is None:
+            continue
+        roles.append(m["role"])
+        types.append(m["mtype"])
+        geoms.append(g)
+    tags_d = dict(tags) if tags is not None else {}
+    geom: core.Geometry | None
+    if is_multipolygon_py(tags_d):
+        geom = assembly.build_multipolygon(roles, geoms, types)
+        if geom is None:
+            geom = core.GeometryCollection(tuple(geoms))
+    elif geoms and all(isinstance(g, (core.LineString, core.MultiLineString)) for g in geoms):
+        geom = assembly.build_multiline(geoms) or core.GeometryCollection(tuple(geoms))
+    else:
+        geom = core.GeometryCollection(tuple(geoms))
+    return wkb.dumps(geom)
+
+
+def feature_line(gwkb, row, visible_override) -> str:
+    """One GeoJSON feature line: ``row``'s metadata, ``gwkb``'s geometry,
+    ``visible`` forced when ``visible_override`` is not None."""
+    return json.dumps(
+        {
+            "type": "Feature",
+            "geometry": core.to_geojson_dict(wkb.loads(bytes(gwkb))),
+            "properties": _props(row, visible_override),
+        },
+        ensure_ascii=False,
+        separators=(",", ":"),
+    )
 
 
 def node_points(node_hist: DataFrame) -> DataFrame:
@@ -82,24 +158,10 @@ def way_wkbs(way_hist: DataFrame, node_pts: DataFrame, mode: str) -> DataFrame:
 
     def kernel(it):
         for pdf in it:
-            out_ids, out_wkb = [], []
-            for wid, pts, tags in zip(pdf["id"], pdf["pts"], pdf["tags"]):
-                xs = np.array([p["x"] for p in pts], dtype=np.float64)
-                ys = np.array([p["y"] for p in pts], dtype=np.float64)
-                if len(xs) == 0 or np.isnan(xs).any() or np.isnan(ys).any() or any(p["x"] is None for p in pts):
-                    out_ids.append(wid)
-                    out_wkb.append(None)
-                    continue
-                coords = np.stack([xs, ys], axis=1)
-                closed = len(coords) >= 2 and (coords[0] == coords[-1]).all()
-                tags_d = dict(tags) if tags is not None else {}
-                if is_area_py(tags_d) and closed and len(coords) >= 4:
-                    geom: core.Geometry = core.Polygon((coords,))
-                else:
-                    geom = core.LineString(coords)
-                out_ids.append(wid)
-                out_wkb.append(wkb.dumps(geom))
-            yield pd.DataFrame({"id": out_ids, "wkb": out_wkb})
+            yield pd.DataFrame({
+                "id": pdf["id"],
+                "wkb": [_way_pts_wkb(tags, pts) for pts, tags in zip(pdf["pts"], pdf["tags"])],
+            })
 
     return agg.mapInPandas(kernel, "id long, wkb binary")
 
@@ -148,24 +210,11 @@ def way_wkbs_both(way_hist: DataFrame, node_pts: DataFrame) -> DataFrame:
 
     def kernel(it):
         for pdf in it:
-            out_ids, out_modes, out_wkb = [], [], []
-            for wid, mode, pts, tags in zip(pdf["id"], pdf["mode"], pdf["pts"], pdf["tags"]):
-                xs = np.array([p["x"] for p in pts], dtype=np.float64)
-                ys = np.array([p["y"] for p in pts], dtype=np.float64)
-                out_ids.append(wid)
-                out_modes.append(mode)
-                if len(xs) == 0 or np.isnan(xs).any() or np.isnan(ys).any() or any(p["x"] is None for p in pts):
-                    out_wkb.append(None)
-                    continue
-                coords = np.stack([xs, ys], axis=1)
-                closed = len(coords) >= 2 and (coords[0] == coords[-1]).all()
-                tags_d = dict(tags) if tags is not None else {}
-                if is_area_py(tags_d) and closed and len(coords) >= 4:
-                    geom: core.Geometry = core.Polygon((coords,))
-                else:
-                    geom = core.LineString(coords)
-                out_wkb.append(wkb.dumps(geom))
-            yield pd.DataFrame({"id": out_ids, "mode": out_modes, "wkb": out_wkb})
+            yield pd.DataFrame({
+                "id": pdf["id"],
+                "mode": pdf["mode"],
+                "wkb": [_way_pts_wkb(tags, pts) for pts, tags in zip(pdf["pts"], pdf["tags"])],
+            })
 
     return agg.mapInPandas(kernel, "id long, mode string, wkb binary")
 
@@ -175,10 +224,9 @@ def relation_wkbs(
     node_pts: DataFrame,
     way_wkb: DataFrame,
     mode: str,
-    max_rounds: int = 8,
 ) -> DataFrame:
-    """(id, wkb) for every renderable relation in ``mode`` — bounded
-    rounds over the relation-membership DAG."""
+    """(id, wkb) for every renderable relation in ``mode`` — at most
+    MAX_REL_DEPTH rounds over the relation-membership DAG."""
     xcol, ycol = _MODE_COLS[mode]
     row = (
         F.coalesce(F.col("in_row"), F.col("before_row"))
@@ -227,7 +275,7 @@ def relation_wkbs(
 
     done: DataFrame | None = None
     pending = base
-    for _ in range(max_rounds):
+    for _ in range(MAX_REL_DEPTH):
         if pending.isEmpty():
             break
         if done is not None:
@@ -270,37 +318,10 @@ def _assemble_relations(members: DataFrame) -> DataFrame:
 
     def kernel(it):
         for pdf in it:
-            out_ids, out_wkb = [], []
-            for rid, tags, ms in zip(pdf["id"], pdf["tags"], pdf["ms"]):
-                roles, types, geoms = [], [], []
-                for m in ms:
-                    g: core.Geometry | None = None
-                    if m["mtype"] == "node" and m["x"] is not None and not pd.isna(m["x"]):
-                        g = core.Point(float(m["x"]), float(m["y"]))
-                    elif m["mtype"] == "way" and m["way_wkb"] is not None:
-                        g = wkb.loads(bytes(m["way_wkb"]))
-                    elif m["mtype"] == "relation" and m["rel_wkb"] is not None:
-                        g = wkb.loads(bytes(m["rel_wkb"]))
-                    if g is None:
-                        continue  # unresolved member dropped (aligned arrays)
-                    roles.append(m["role"])
-                    types.append(m["mtype"])
-                    geoms.append(g)
-                tags_d = dict(tags) if tags is not None else {}
-                geom: core.Geometry | None
-                if is_multipolygon_py(tags_d):
-                    geom = assembly.build_multipolygon(roles, geoms, types)
-                    if geom is None:
-                        geom = core.GeometryCollection(tuple(geoms))
-                elif geoms and all(
-                    isinstance(g, (core.LineString, core.MultiLineString)) for g in geoms
-                ):
-                    geom = assembly.build_multiline(geoms) or core.GeometryCollection(tuple(geoms))
-                else:
-                    geom = core.GeometryCollection(tuple(geoms))
-                out_ids.append(rid)
-                out_wkb.append(wkb.dumps(geom))
-            yield pd.DataFrame({"id": out_ids, "wkb": out_wkb})
+            yield pd.DataFrame({
+                "id": pdf["id"],
+                "wkb": [relation_wkb(tags, ms) for tags, ms in zip(pdf["tags"], pdf["ms"])],
+            })
 
     return agg.mapInPandas(kernel, "id long, wkb binary")
 
@@ -346,20 +367,8 @@ def emit_features(
         for pdf in it:
             out_id, out_line = [], []
             for gwkb, row, vo in zip(pdf["gwkb"], pdf["row"], pdf["vis_override"]):
-                geom = wkb.loads(bytes(gwkb))
-                props = _props(row, None if pd.isna(vo) else bool(vo))
                 out_id.append(int(row["id"]))
-                out_line.append(
-                    json.dumps(
-                        {
-                            "type": "Feature",
-                            "geometry": core.to_geojson_dict(geom),
-                            "properties": props,
-                        },
-                        ensure_ascii=False,
-                        separators=(",", ":"),
-                    )
-                )
+                out_line.append(feature_line(gwkb, row, None if pd.isna(vo) else bool(vo)))
             yield pd.DataFrame(
                 {
                     "etype": pd.Series([etype] * len(out_id), dtype="object"),
@@ -386,3 +395,104 @@ def _props(row, visible_override) -> dict:
         "version": int(row["version"]),
         "visible": bool(row["visible"]) if visible_override is None else bool(visible_override),
     }
+
+
+# ------------------------------------------------------------- driver route
+# The small-batch twin of node_points → way_wkbs_both → relation_wkbs →
+# emit_features over the {id: (in_row, before_row)} dicts that
+# history.histories_py returns: same steps and rules, dicts in place of
+# DataFrames, the per-entity kernels above shared.
+def _mode_row(hist_entry, mode: str):
+    in_row, before_row = hist_entry
+    if mode == "after":
+        return in_row if in_row is not None else before_row
+    return before_row
+
+
+def _xy(row) -> tuple:
+    """(lon, lat) as doubles, None where the row or the value is null."""
+    if row is None:
+        return None, None
+    return tuple(None if row[c] is None else float(row[c]) for c in ("lon", "lat"))
+
+
+def _relation_wkbs_py(rel_hist: dict, mode: str, node_xy: dict, way_w: dict) -> dict:
+    """relation_wkbs on dicts: the same MAX_REL_DEPTH rounds, where a
+    relation waits while a renderable member relation is unassembled,
+    and the leftovers (cycles, depth overflow) are assembled with the
+    member geometries known at the start of the last round."""
+    rows = {rid: r for rid, h in rel_hist.items() if (r := _mode_row(h, mode)) is not None}
+
+    def members(r, rel_w):
+        ms = []
+        for m in r["members"]:
+            mtype, ref = (m["type"], m["ref"]) if m is not None else (None, None)
+            x, y = node_xy.get(ref, (None, None)) if mtype == "node" else (None, None)
+            ms.append({
+                "mtype": mtype, "role": None if m is None else m["role"], "x": x, "y": y,
+                "way_wkb": way_w.get(ref) if mtype == "way" else None,
+                "rel_wkb": rel_w.get(ref) if mtype == "relation" else None,
+            })
+        return ms
+
+    def blocked(r, rel_w):
+        return any(
+            m is not None and m["type"] == "relation" and m["ref"] in rows
+            and m["ref"] not in rel_w
+            for m in r["members"]
+        )
+
+    # a relation without members has no member rows to assemble from
+    pending = {rid: r for rid, r in rows.items() if r["members"]}
+    done: dict = {}
+    seen: dict = {}
+    for _ in range(MAX_REL_DEPTH):
+        if not pending:
+            break
+        seen = dict(done)
+        waiting = {}
+        for rid, r in pending.items():
+            if blocked(r, seen):
+                waiting[rid] = r
+            else:
+                done[rid] = relation_wkb(r["tags"], members(r, seen))
+        pending = waiting
+    for rid, r in pending.items():
+        done[rid] = relation_wkb(r["tags"], members(r, seen))
+    return done
+
+
+def feature_lines_py(node_hist: dict, way_hist: dict, rel_hist: dict) -> list[str]:
+    """The batch's feature lines in sink order (node/way/relation, then
+    id, then sub) from driver-held histories."""
+    mode_wkbs = {}
+    for mode in ("after", "before"):
+        node_xy = {nid: _xy(_mode_row(h, mode)) for nid, h in node_hist.items()}
+        node_w = {
+            nid: wkb.dumps(core.Point(float(x), float(y)))
+            for nid, (x, y) in node_xy.items()
+            if x is not None
+        }
+        way_w = {}
+        for wid, h in way_hist.items():
+            r = _mode_row(h, mode)
+            if r is None or not r["nds"]:
+                continue
+            pts = [node_xy.get(None if nd is None else nd["ref"], (None, None)) for nd in r["nds"]]
+            way_w[wid] = way_wkb(r["tags"], [p[0] for p in pts], [p[1] for p in pts])
+        rel_w = _relation_wkbs_py(rel_hist, mode, node_xy, way_w)
+        mode_wkbs[mode] = (node_w, way_w, rel_w)
+
+    lines = []
+    for i, hist in enumerate((node_hist, way_hist, rel_hist)):
+        after_w, before_w = mode_wkbs["after"][i], mode_wkbs["before"][i]
+        for eid in sorted(hist):
+            in_row, before_row = hist[eid]
+            if in_row is None:
+                continue
+            # create/modify → visible after-line; modify/delete → invisible before-line
+            if in_row["visible"] and after_w.get(eid) is not None:
+                lines.append(feature_line(after_w[eid], in_row, None))
+            if before_row is not None and before_w.get(eid) is not None:
+                lines.append(feature_line(before_w[eid], before_row, False))
+    return lines

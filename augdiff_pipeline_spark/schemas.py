@@ -56,9 +56,8 @@ OSM_COLUMNS = [f.name for f in OSM_SCHEMA.fields]
 
 # Shape of a history frame (operators/history._histories): the winning
 # in-window / before-window row per entity id.  Used to early-exit the
-# history builders with a local empty relation when a batch touches no
-# entity of a type — at minutely cadence most batches touch no relation,
-# and skipping the builder skips its checkpoints (several Spark jobs).
+# history builders with a local empty relation when the rows hold no
+# entity of a type.
 _OSM_ROW_STRUCT = T.StructType(
     [T.StructField(f.name, f.dataType, True) for f in OSM_SCHEMA.fields]
 )

@@ -41,20 +41,23 @@ from augdiff_pipeline_spark.sources.state import StateTable
 GOLDEN = os.path.join(os.path.dirname(__file__), "data", "tombstone_delete_golden.jsonl")
 
 
+BASE_ROWS = [
+    _node_row(9001, 1, _ts(0), lon=20.0, lat=60.0),
+    _node_row(9002, 1, _ts(0), lon=20.5, lat=60.0),
+    _node_row(9003, 1, _ts(0), lon=20.5, lat=60.5),
+    _node_row(9004, 1, _ts(0), lon=21.0, lat=61.0),
+    _way_row(9100, 1, _ts(0), nds=[9001, 9002, 9003], tags={"highway": "service"}),
+    _rel_row(9200, 1, _ts(0), members=[("way", 9100, "")], tags={"type": "multilinestring"}),
+]
+BATCH_ROWS = [
+    _tombstone(9004, "node", 2, _ts(1)),
+    _tombstone(9100, "way", 2, _ts(1)),
+    _tombstone(9200, "relation", 2, _ts(1)),
+]
+
+
 def test_tombstone_deletes_match_reference_golden(spark, tmp_path):
-    base_rows = [
-        _node_row(9001, 1, _ts(0), lon=20.0, lat=60.0),
-        _node_row(9002, 1, _ts(0), lon=20.5, lat=60.0),
-        _node_row(9003, 1, _ts(0), lon=20.5, lat=60.5),
-        _node_row(9004, 1, _ts(0), lon=21.0, lat=61.0),
-        _way_row(9100, 1, _ts(0), nds=[9001, 9002, 9003], tags={"highway": "service"}),
-        _rel_row(9200, 1, _ts(0), members=[("way", 9100, "")], tags={"type": "multilinestring"}),
-    ]
-    batch = [
-        _tombstone(9004, "node", 2, _ts(1)),
-        _tombstone(9100, "way", 2, _ts(1)),
-        _tombstone(9200, "relation", 2, _ts(1)),
-    ]
+    base_rows, batch = BASE_ROWS, BATCH_ROWS
     root = str(tmp_path)
     state = StateTable(root + "/state")
     index = SnapshotTable(root + "/index")
