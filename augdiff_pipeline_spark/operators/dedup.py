@@ -3,10 +3,11 @@
 - exact_dedup: hash-groupBy on a normalized fingerprint (md5) — fully
   native, shuffles once on the 128-bit key.
 - minhash_lsh_pairs: char-shingle MinHash + banded LSH: one Arrow kernel
-  emits (doc_id, band, band_hash) rows (numpy multiply-shift hashing —
-  deterministic across executors, no Python ``hash``); a self-join on
-  (band, band_hash) yields candidate pairs; an exact n-gram Jaccard
-  kernel verifies.  The self-join shuffles only signature rows
+  emits each doc's band hashes (numpy multiply-shift hashing —
+  deterministic across executors, no Python ``hash``); a groupBy on
+  (band, band_hash) collects each LSH bucket's doc ids, the bucket's
+  candidate pairs are emitted in-kernel, and an exact n-gram Jaccard
+  kernel verifies them.  The groupBy shuffles only signature rows
   (docs × bands), never document text.  The signature kernel is fully
   vectorized across the batch (concatenated-buffer sliding-window
   hashing + per-salt ``minimum.reduceat``) — no per-doc Python loop.
@@ -19,19 +20,24 @@
 - simhash_column / simhash_pairs: 64-bit SimHash computed ENTIRELY in
   native Spark SQL (whole-stage codegen, zero Python): token hash is the
   low 64 bits of md5 (reproducible in any engine), bit-vote via
-  higher-order aggregate/zip_with.  Candidate bands are derived from the
-  threshold — bands = max_hamming + 1 — so by pigeonhole every pair with
-  hamming ≤ max_hamming shares at least one exact band: the candidate
+  explode(tokens) -> 64 conditional SUMs in one groupBy -> bit fold.
+  Candidate bands are derived from the threshold — bands =
+  max_hamming + 1 — so by pigeonhole every pair with hamming ≤
+  max_hamming shares at least one exact band: the candidate
   stage is lossless and the output is exactly the brute-force pair set,
   verified by a DuckDB oracle.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..functions.text import fingerprint
 
@@ -132,11 +138,32 @@ def minhash_signature(text: str, num_perm: int, seed: int = 1) -> np.ndarray:
     return _mix64(sh[None, :] ^ salts[:, None]).min(axis=1)
 
 
+def _band_hashes(hv: np.ndarray, offs: np.ndarray, num_perm: int, bands: int) -> np.ndarray:
+    """(n_docs, bands) uint64 LSH band hashes of a batch's shingle CSR
+    (``_batch_shingle_hashes`` output; segments never empty)."""
+    n = len(offs)
+    rows_per_band = num_perm // bands
+    salts = _salts(num_perm, 1)
+    # signature matrix: one vectorized pass per salt over ALL shingles
+    # in the batch.  Measured: the per-salt 1-D loop beats a 2-D
+    # (shingles x salts) mix + axis-0 reduceat by ~5x — the 2-D
+    # intermediate thrashes cache.
+    sigs = np.empty((n, num_perm), dtype=np.uint64)
+    for j in range(num_perm):
+        sigs[:, j] = np.minimum.reduceat(_mix64(hv ^ salts[j]), offs)
+    # band hash: mix-fold each band's rows, vectorized over docs
+    bh = np.empty((n, bands), dtype=np.uint64)
+    for b in range(bands):
+        h = np.full(n, np.uint64(b), dtype=np.uint64)
+        for r in range(rows_per_band):
+            h = _mix64(h ^ sigs[:, b * rows_per_band + r])
+        bh[:, b] = h
+    return bh
+
+
 def minhash_bands(docs: DataFrame, num_perm: int = 128, bands: int = 64,
                   text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """(doc_id, band, band_hash) — the LSH bucket rows."""
-    rows_per_band = num_perm // bands
-    salts = _salts(num_perm, 1)
 
     def kernel(it):
         for pdf in it:
@@ -149,21 +176,7 @@ def minhash_bands(docs: DataFrame, num_perm: int = 128, bands: int = 64,
                 )
                 continue
             hv, offs, _ = _batch_shingle_hashes(list(pdf[text_col]))
-            # signature matrix: one vectorized pass per salt over ALL
-            # shingles in the batch (segments never empty: padding
-            # guarantees ≥1 shingle per doc).  Measured: the per-salt
-            # 1-D loop beats a 2-D (shingles x salts) mix + axis-0
-            # reduceat by ~5x — the 2-D intermediate thrashes cache.
-            sigs = np.empty((n, num_perm), dtype=np.uint64)
-            for j in range(num_perm):
-                sigs[:, j] = np.minimum.reduceat(_mix64(hv ^ salts[j]), offs)
-            # band hash: mix-fold each band's rows, vectorized over docs
-            bh = np.empty((n, bands), dtype=np.uint64)
-            for b in range(bands):
-                h = np.full(n, np.uint64(b), dtype=np.uint64)
-                for r in range(rows_per_band):
-                    h = _mix64(h ^ sigs[:, b * rows_per_band + r])
-                bh[:, b] = h
+            bh = _band_hashes(hv, offs, num_perm, bands)
             yield pd.DataFrame(
                 {
                     "doc_id": np.repeat(pdf[id_col].to_numpy(dtype=np.int64), bands),
@@ -257,11 +270,9 @@ def _bucket_pairs(rows: DataFrame, key_cols: list[str], id_col: str,
     DROPPED (their members pair via their other, rarer bands — the
     standard "too common to be a useful signature" cap in large-scale
     dedup).  None = exact (no cap); the exactness contracts run uncapped
-    at fixture scale.  For buckets too large even to collect_list
-    (>~10^6 ids = ~8 MB single aggregation value), see
-    ``_self_join_pairs`` — but note any such bucket implies >=10^11
-    output pairs, so at that size the real production answer is a
-    ``max_bucket`` cap, not a bigger join.
+    at fixture scale.  A bucket too large even to collect_list
+    (>~10^6 ids = ~8 MB single aggregation value) implies >=10^11
+    output pairs, so at that size the answer is a ``max_bucket`` cap.
 
     ``payload_col`` (an integral column) rides along: the output gains
     (pa, pb) carrying each side's payload — this lets a caller verify
@@ -296,57 +307,6 @@ def _bucket_pairs(rows: DataFrame, key_cols: list[str], id_col: str,
     return out.distinct() if dedupe else out
 
 
-def _self_join_pairs(rows: DataFrame, key_cols: list[str], id_col: str,
-                     hot_threshold: int = 256, n_chunks: int = 8) -> DataFrame:
-    """All unordered id pairs (a < b) of rows sharing ``key_cols``, with
-    EXPLICIT quadratic-skew handling — the strategy for buckets too
-    large for ``_bucket_pairs``'s collect_list (a 10^7-row bucket's id
-    list would be an ~80 MB aggregation value in one task).
-
-    Buckets above ``hot_threshold`` are triangle-salted: rows get a
-    chunk id u = xxhash64(id) % n_chunks, the left side duplicates to
-    cells (u, v) for v >= u, the right side to (u, v) for u <= v, and the
-    join key gains (u, v) — one hot bucket spreads over
-    n_chunks(n_chunks+1)/2 tasks at ~n_chunks x row duplication.
-    Cold buckets take the plain self-join.  Output is identical to the
-    unsalted join (the pair set is a disjoint union over cells).
-    """
-    sizes = rows.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("_bsz"))
-    hot_keys = sizes.filter(F.col("_bsz") > hot_threshold)
-    tagged = rows.join(F.broadcast(hot_keys), list(key_cols), "left")
-    cold = tagged.filter(F.col("_bsz").isNull()).drop("_bsz")
-    hot = (
-        tagged.filter(F.col("_bsz").isNotNull())
-        .drop("_bsz")
-        .withColumn("_u", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_chunks)).cast("int"))
-    )
-    lc, rc = cold.alias("l"), cold.alias("r")
-    cold_pairs = (
-        lc.join(rc, F.expr(" AND ".join(f"l.{c} = r.{c}" for c in key_cols)))
-        .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        .select(F.col(f"l.{id_col}").alias("a"), F.col(f"r.{id_col}").alias("b"))
-    )
-    hl = hot.withColumn("_v", F.explode(F.sequence(F.col("_u"), F.lit(n_chunks - 1)))).alias("l")
-    hr = hot.withColumn("_v", F.col("_u")).withColumn(
-        "_u", F.explode(F.sequence(F.lit(0), F.col("_v")))
-    ).alias("r")
-    # least/greatest (not l < r): in a cross-chunk cell (u, v) an
-    # unordered pair appears exactly once, with no control over which
-    # element landed on the left — canonicalize instead of filtering
-    hot_pairs = (
-        hl.join(
-            hr,
-            F.expr(" AND ".join(f"l.{c} = r.{c}" for c in list(key_cols) + ["_u", "_v"])),
-        )
-        .filter(F.col(f"l.{id_col}") != F.col(f"r.{id_col}"))
-        .select(
-            F.least(F.col(f"l.{id_col}"), F.col(f"r.{id_col}")).alias("a"),
-            F.greatest(F.col(f"l.{id_col}"), F.col(f"r.{id_col}")).alias("b"),
-        )
-    )
-    return cold_pairs.unionByName(hot_pairs).distinct()
-
-
 # Above this many estimated shingle-hash bytes (8 x total text chars)
 # the verify stage does NOT broadcast the corpus shingle dictionary —
 # it falls back to joining candidate pairs back onto the text column
@@ -356,36 +316,65 @@ DEFAULT_MAX_SHINGLE_BROADCAST_BYTES = 512 * 1024 * 1024
 # Below this many estimated shingle bytes the fused plan builds its
 # verify state (rank CSR / bitset) on the driver from one Arrow pull —
 # at that size the serial build is sub-100ms and the distributed
-# dictionary+pack jobs would cost more than they save; above it the
-# build is distributed (round 6, guide §2 scale-adaptivity).
+# dictionary + encode jobs would cost more than they save; above it
+# the build is distributed (guide §2 scale-adaptivity).
 _DRIVER_BUILD_BYTES = 32 * 1024 * 1024
+
+# Bitset verify route (inside the fused plan): when the corpus' DISTINCT
+# shingle count is small, every doc's shingle set packs into an
+# n_ranks-bit bitset (uint64 words) and |Sa ∩ Sb| is popcount(A & B) —
+# no per-pair segment gathers at all.  Tiles verify via one sgemm over
+# the unpacked 0/1 rows (exact: counts ≤ n_ranks ≪ 2^24 accumulate
+# exactly in float32), which replaces ~|S| random DRAM touches per pair
+# with dense BLAS — measured ~10-100x per-pair vs the rank-CSR bitmap
+# kernel on a 2k-rank corpus.  Small universes are exactly the corpora
+# where candidate volume explodes (random docs share many shingles), so
+# this is the regime that needs the cheap verify.  Gates: the unpacked
+# per-tile float block stays tens of MB (n_ranks cap) and the broadcast
+# bitset matrix stays under the shingle-broadcast budget (docs x W x 8).
+_MAX_BITSET_RANKS = 1 << 15
+
+
+def _encode(d: np.ndarray, hashes: np.ndarray, cnts, route: str) -> np.ndarray:
+    """Encode doc-major shingle-hash segments (uint64, sorted unique per
+    doc, ``cnts`` hashes per doc) against the sorted corpus dictionary
+    ``d``: the flat int32 rank segments for route 'csr', or the
+    (n_docs, W) uint64 bitset matrix for route 'bitset' (bit r of a row
+    is set iff the doc holds rank r).
+
+    The rank inverse is a CHUNKED searchsorted writing straight into the
+    int32 output, so temporaries stay ~32 MB however many hashes one
+    call encodes (the driver build encodes the whole corpus at once).
+    Ranks are monotone in hash and segments are hash-sorted, so the
+    flattened (doc, word) index is non-decreasing and one
+    bitwise_or.reduceat builds every word with no scatter loop."""
+    ranks = np.empty(len(hashes), dtype=np.int32)
+    step = 1 << 22  # ~32 MB of int64 positions per chunk, arena-reused
+    for s in range(0, len(hashes), step):
+        ranks[s: s + step] = np.searchsorted(d, hashes[s: s + step])
+    if route == "csr":
+        return ranks
+    n, w = len(cnts), (len(d) + 63) >> 6
+    words = np.zeros(n * w, dtype=np.uint64)
+    if len(ranks):
+        flat = np.repeat(np.arange(n, dtype=np.int64), cnts) * w + (ranks >> 6)
+        starts = np.flatnonzero(np.concatenate([[True], flat[1:] != flat[:-1]]))
+        bits = np.uint64(1) << (ranks.astype(np.uint64) & np.uint64(63))
+        words[flat[starts]] = np.bitwise_or.reduceat(bits, starts)
+    return words.reshape(n, w)
 
 
 def _csr_ranks(hv) -> tuple[np.ndarray, int]:
     """Dense int32 ranks of a CSR hash buffer (and the distinct count),
-    identical to np.unique(return_inverse) but allocation-lean: ONE
-    sort copy (sorted in place), a flag-diff dictionary extraction, and
-    a CHUNKED searchsorted inverse writing straight into the int32
-    output.  np.unique's argsort+take+int64-inverse shape allocates
-    ~3x the buffer in fresh int64 temporaries — measured 27-46 s for a
-    60M-element corpus on the ballooned-VM driver (first-touch fault
-    tax, BASELINE.md methodology) vs seconds for this form; on healthy
-    hardware it is still ~2x less driver memory traffic."""
-    n = len(hv)
-    if n == 0:
-        return np.empty(0, dtype=np.int32), 0
-    buf = hv.copy()
-    buf.sort()
-    flags = np.empty(n, dtype=bool)
-    flags[0] = True
-    np.not_equal(buf[1:], buf[:-1], out=flags[1:])
-    uniq = buf[flags]
-    del buf, flags
-    inv = np.empty(n, dtype=np.int32)
-    step = 1 << 22  # ~32 MB of int64 positions per chunk, arena-reused
-    for s in range(0, n, step):
-        inv[s: s + step] = np.searchsorted(uniq, hv[s: s + step])
-    return inv, len(uniq)
+    identical to np.unique(return_inverse) but allocation-lean: the
+    sorted dictionary (one sort copy) then ``_encode``'s chunked
+    searchsorted inverse.  np.unique's return_inverse shape
+    (argsort + take + int64 inverse) allocates ~3x the buffer in fresh
+    int64 temporaries — measured 27-46 s for a 60M-element corpus on the
+    ballooned-VM driver (first-touch fault tax, BASELINE.md methodology)
+    vs seconds for this form."""
+    d = np.unique(hv)
+    return _encode(d, hv, None, "csr"), len(d)
 
 
 def _csr_intersections(ranks, offs, cnts, ia, ib, n_ranks, bitmap=None):
@@ -439,83 +428,6 @@ def _verify_schema():
     )
 
 
-def _sorted_csr_from_arrow(ids: np.ndarray, hv: np.ndarray, cnts: np.ndarray
-                           ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, int]:
-    """Reorder doc-major CSR segments into ascending-doc-id order (so
-    the verify kernel can np.searchsorted ids) and RANK-COMPRESS the
-    hash values: segment hashes become dense int32 ranks over the corpus
-    dictionary.  Rank compression (a) halves the broadcast (int32 vs
-    int64 — at the 512 MB budget that is 256 MB saved on every executor)
-    and (b) is what lets the verify kernel offset-shift each pair's
-    segment into one globally monotonic array (rank + pair_no * n_ranks
-    fits int64; raw 64-bit hashes cannot be shifted).  np.unique is
-    order-preserving, so segments stay sorted-unique.  Pure array ops,
-    one sort over the corpus dictionary — paid once per call, on the
-    driver, before the broadcast."""
-    # rank FIRST (in original segment order — ranking is per-element,
-    # order-free), so the reorder gathers int32 ranks instead of uint64
-    # hashes, and do the gather in doc blocks: per-block int64 index
-    # temporaries stay ~tens of MB (warm-arena reuse) instead of three
-    # corpus-sized fresh buffers (np.arange + 2x np.repeat) — the same
-    # bounded-temporary discipline as the verify kernel, applied to the
-    # one serial driver stage of the fused plan.
-    ranks_orig, n_ranks = _csr_ranks(hv)
-    offs = np.concatenate([[0], np.cumsum(cnts)[:-1]]).astype(np.int64)
-    order = np.argsort(ids, kind="stable")
-    cnts_o = cnts[order]
-    offs_o = np.concatenate([[0], np.cumsum(cnts_o)[:-1]]).astype(np.int64)
-    tot = int(cnts_o.sum())
-    ranks = np.empty(tot, dtype=np.int32)
-    step = 1 << 14  # 16k docs/block
-    for s in range(0, len(order), step):
-        sel = order[s: s + step]
-        cn = cnts[sel]
-        bo = np.concatenate([[0], np.cumsum(cn)[:-1]]).astype(np.int64)
-        blk = int(cn.sum())
-        idx = (np.arange(blk, dtype=np.int64)
-               - np.repeat(bo, cn) + np.repeat(offs[sel], cn))
-        dst = offs_o[s]
-        ranks[dst: dst + blk] = ranks_orig[idx]
-    return ids[order], ranks, offs_o, cnts_o, n_ranks
-
-
-# Bitset verify route (inside the fused plan): when the corpus' DISTINCT
-# shingle count is small, every doc's shingle set packs into an
-# n_ranks-bit bitset (uint64 words) and |Sa ∩ Sb| is popcount(A & B) —
-# no per-pair segment gathers at all.  Tiles verify via one sgemm over
-# the unpacked 0/1 rows (exact: counts ≤ n_ranks ≪ 2^24 accumulate
-# exactly in float32), which replaces ~|S| random DRAM touches per pair
-# with dense BLAS — measured ~10-100x per-pair vs the rank-CSR bitmap
-# kernel on a 2k-rank corpus.  Small universes are exactly the corpora
-# where candidate volume explodes (random docs share many shingles), so
-# this is the regime that needs the cheap verify.  Gates: the unpacked
-# per-tile float block stays tens of MB (n_ranks cap) and the broadcast
-# bitset matrix stays under the shingle-broadcast budget (docs x W x 8).
-_MAX_BITSET_RANKS = 1 << 15
-
-
-def _bitset_from_csr(ranks: np.ndarray, offs: np.ndarray, cnts: np.ndarray,
-                     n_ranks: int) -> np.ndarray:
-    """(n_docs, W) uint64 bitset matrix from sorted-unique rank segments.
-
-    Segments are ascending within each doc (rank is monotone in hash and
-    segments are hash-sorted), so the flattened (doc, word) index is
-    globally non-decreasing — one bitwise_or.reduceat builds every word
-    with no scatter loop."""
-    n = len(cnts)
-    W = (n_ranks + 63) >> 6
-    if len(ranks) == 0:
-        return np.zeros((n, W), dtype=np.uint64)
-    di = np.repeat(np.arange(n, dtype=np.int64), cnts)
-    flat = di * W + (ranks.astype(np.int64) >> 6)
-    vals = np.uint64(1) << (ranks.astype(np.uint64) & np.uint64(63))
-    starts = np.flatnonzero(np.concatenate([[True], flat[1:] != flat[:-1]]))
-    red = np.bitwise_or.reduceat(vals, starts)
-    out = np.zeros(n * W, dtype=np.uint64)
-    out[flat[starts]] = red
-    return out.reshape(n, W)
-
-
 _UNPACK_LUT = None
 
 
@@ -548,9 +460,9 @@ def _fused_verify_route(n_docs: int, n_ranks: int, budget: int) -> str:
 
 def _reorder_csr(ids: np.ndarray, flat: np.ndarray, cnts: np.ndarray):
     """Reorder doc-major CSR segments into ascending-doc-id order (the
-    verify kernels binary-search ids).  Same block-bounded gather as
-    _sorted_csr_from_arrow, minus the ranking step (segments already
-    carry int32 ranks when this is called)."""
+    verify kernels binary-search ids).  The gather runs in 16k-doc
+    blocks, so its int64 index temporaries stay ~tens of MB instead of
+    three corpus-sized buffers (np.arange + 2x np.repeat)."""
     offs = np.concatenate([[0], np.cumsum(cnts)[:-1]]).astype(np.int64)
     order = np.argsort(ids, kind="stable")
     cnts_o = cnts[order]
@@ -567,6 +479,96 @@ def _reorder_csr(ids: np.ndarray, flat: np.ndarray, cnts: np.ndarray):
         dst = offs_o[s]
         out[dst: dst + blk] = flat[idx]
     return ids[order], out, offs_o, cnts_o
+
+
+def _verify_state(combined: DataFrame, est_bytes: int | None, budget: int):
+    """(broadcast, route): the fused plan's verify state and its route.
+
+    ``combined`` is the checkpointed (doc_id, band_hashes, hashes)
+    table.  Every doc's hash segment is ``_encode``d against the sorted
+    corpus dictionary, then the docs are sorted by id; the broadcast
+    holds (ids, ranks, offs, cnts, n_ranks) for route 'csr' and
+    (ids, bitset matrix, cnts) for route 'bitset'.
+
+    Where the encode runs adapts to the input size.  Below
+    ``_DRIVER_BUILD_BYTES`` of estimated shingle bytes the whole hash
+    CSR is collected in one Arrow pull and encoded on the driver, with
+    the dictionary taken from the collected hashes: a sub-100 ms serial
+    build, where the two distributed jobs would cost ~0.4 s more at the
+    5k-doc contract corpus.  Above it the dictionary comes from a native
+    explode+distinct (map-side partial aggregation collapses the ~40-60x
+    cross-doc shingle duplication before the shuffle) and one mapInArrow
+    pass encodes on executors, so the driver collects int32 ranks or
+    packed words instead of the int64 hash CSR (a serial driver rank
+    build measured 16-22 s at 200k docs) and only sorts them by id.  A
+    dictionary that alone would exceed ``budget`` (near-unique shingles)
+    takes the driver build, which is no worse there."""
+    sc = combined.sparkSession.sparkContext
+    hashes = combined.select("doc_id", "hashes")
+    d = None
+    if est_bytes is None or est_bytes > _DRIVER_BUILD_BYTES:
+        dict_col = hashes.select(F.explode("hashes").alias("h")).distinct().toArrow()["h"]
+        if dict_col.length() * 8 <= budget:
+            d = np.sort(dict_col.to_numpy().view(np.uint64))
+    if d is None:
+        tbl = hashes.toArrow()
+        ids = tbl["doc_id"].to_numpy()
+        hcol = tbl["hashes"].combine_chunks()
+        cnts = hcol.value_lengths().to_numpy(zero_copy_only=False).astype(np.int64)
+        hv = hcol.flatten().to_numpy(zero_copy_only=False).view(np.uint64)
+        # Driver sizing: this build transiently holds the Arrow table
+        # (``hv`` is a view of it), the dictionary's sort copy and the
+        # int32 ranks before the broadcast ships — ~2.5x the budgeted bytes
+        # peak.  Assert loudly instead of letting a mis-set budget OOM
+        # the driver mid-broadcast.
+        assert hv.nbytes <= 4 * budget, (
+            f"fused minhash CSR is {hv.nbytes >> 20} MiB on the driver — "
+            "max_shingle_broadcast_bytes is set past what driver memory can "
+            "absorb (peak ~2.5x CSR bytes); lower the budget to route to the "
+            "distributed verify"
+        )
+        d = np.unique(hv)
+        route = _fused_verify_route(len(ids), len(d), budget)
+        enc = _encode(d, hv, cnts, route)
+        del tbl, hcol, hv
+    else:
+        route = _fused_verify_route(combined.count(), len(d), budget)
+        w = (len(d) + 63) >> 6
+        bcd = sc.broadcast(d)
+
+        def encode_kernel(it):
+            for rb in it:
+                hcol = rb.column("hashes")
+                cnts = hcol.value_lengths().to_numpy(zero_copy_only=False).astype(np.int64)
+                hv = hcol.flatten().to_numpy(zero_copy_only=False).view(np.uint64)
+                enc = _encode(bcd.value, hv, cnts, route)
+                lens = cnts if route == "csr" else np.full(len(cnts), w)
+                offs = pa.array(np.concatenate([[0], np.cumsum(lens)]).astype(np.int32))
+                vals = enc if route == "csr" else enc.ravel().view(np.int64)
+                yield pa.RecordBatch.from_arrays(
+                    [rb.column("doc_id"), pa.array(cnts), pa.ListArray.from_arrays(offs, vals)],
+                    names=["doc_id", "cnt", "enc"],
+                )
+
+        etype = "int" if route == "csr" else "bigint"
+        try:
+            tbl = hashes.mapInArrow(
+                encode_kernel, f"doc_id long, cnt long, enc array<{etype}>"
+            ).toArrow()
+        finally:
+            bcd.destroy()
+        ids = tbl["doc_id"].to_numpy()
+        cnts = tbl["cnt"].to_numpy()
+        enc = tbl["enc"].combine_chunks().flatten().to_numpy(zero_copy_only=False)
+        if route == "bitset":
+            enc = enc.view(np.uint64).reshape(len(ids), w)
+        del tbl
+    if route == "bitset":
+        order = np.argsort(ids, kind="stable")
+        state = (ids[order], enc[order], cnts[order])
+    else:
+        state = (*_reorder_csr(ids, enc, cnts), len(d))
+    return sc.broadcast(state), route
 
 
 def _minhash_pairs_fused(docs: DataFrame, num_perm: int, bands: int,
@@ -589,38 +591,25 @@ def _minhash_pairs_fused(docs: DataFrame, num_perm: int, bands: int,
     shuffle candidates to meet their text; this path's budget is
     exactly what lets it skip that).
 
-    The verify state (rank CSR or bitset matrix) is built DISTRIBUTED
-    (round 6; guide §5 "the driver should do almost no data work"):
-    the shingle dictionary comes from a native explode+distinct over
-    the checkpoint (map-side partial aggregation collapses the ~40-60x
-    cross-doc shingle duplication before the shuffle), only the sorted
-    uniques are collected, and a second kernel pass ranks each doc's
-    segment against the broadcast dictionary executor-side — the
-    driver then collects int32 ranks (half the round-5 bytes) or
-    packed bitset words (1/16th) instead of the raw int64 hash CSR,
-    and its only remaining serial work is one argsort-by-id gather.
-    The round-5 shape (collect the full int64 CSR, rank it serially on
-    the driver — measured 16-22s at 200k docs) survives only as the
-    fallback when the dictionary itself would not fit the broadcast
-    budget (near-zero duplication corpora), where it is no worse.
+    The verify state (rank CSR or bitset matrix, ``_verify_state``) is
+    broadcast; the bucket-cell job depends only on the checkpoint, so it
+    runs on a second driver thread, in the caller's job group, while the
+    state is built.
 
-    The bitset verify is chunk-vectorized ACROSS cells (round 6): cells
-    are grouped by tile shape, stacked, and each group resolves through
-    one batched sgemm (A @ A^T over LUT-expanded 0/1 rows) plus a
-    conservative float32 threshold prefilter; only the ~kept pairs take
-    the exact int64/float64 jaccard path, whose output is bit-identical
-    to the unconditional round-5 computation (the prefilter keeps a
-    strict superset: G is exact in float32 for counts <= 2^15 and the
-    1.0 margin dominates every rounding term).  This removes the
-    per-cell Python/BLAS-call overhead that dominated wall-clock at
-    ~190k small cells per 50k docs (measured 0.22us/pair batched vs
-    ~0.9us/pair per-cell, single-thread BLAS).
+    Verify kernels: the rank-CSR one intersects each pair's rank
+    segments through a reusable membership bitmap.  The bitset one is
+    chunk-vectorized ACROSS cells: cells are grouped by tile shape,
+    stacked, and each group resolves through one batched sgemm
+    (A @ A^T over LUT-expanded 0/1 rows) plus a conservative float32
+    threshold prefilter; only the kept pairs take the exact
+    int64/float64 jaccard path, so the output is bit-identical to the
+    CSR kernel (the prefilter keeps a strict superset: G is exact in
+    float32 for counts <= 2^15 and the 1.0 margin dominates every
+    rounding term).  Batching removes the per-cell Python/BLAS-call
+    overhead that dominates at ~190k small cells per 50k docs (measured
+    0.22us/pair batched vs ~0.9us/pair per-cell, single-thread BLAS).
     """
     spark = docs.sparkSession
-    rows_per_band = num_perm // bands
-    salts = _salts(num_perm, 1)
-
-    acc_docs = spark.sparkContext.accumulator(0)
 
     def sig_csr_kernel(it):
         for pdf in it:
@@ -632,18 +621,8 @@ def _minhash_pairs_fused(docs: DataFrame, num_perm: int, bands: int,
                     "hashes": pd.Series([], dtype="object"),
                 })
                 continue
-            acc_docs.add(n)
             hv, offs, cnts = _batch_shingle_hashes(list(pdf[text_col]))
-            sigs = np.empty((n, num_perm), dtype=np.uint64)
-            for j in range(num_perm):
-                sigs[:, j] = np.minimum.reduceat(_mix64(hv ^ salts[j]), offs)
-            bh = np.empty((n, bands), dtype=np.uint64)
-            for b in range(bands):
-                h = np.full(n, np.uint64(b), dtype=np.uint64)
-                for r in range(rows_per_band):
-                    h = _mix64(h ^ sigs[:, b * rows_per_band + r])
-                bh[:, b] = h
-            bh64 = bh.astype(np.int64)
+            bh64 = _band_hashes(hv, offs, num_perm, bands).astype(np.int64)
             hv64 = hv.astype(np.int64)
             yield pd.DataFrame({
                 "doc_id": pdf[id_col].to_numpy(dtype=np.int64),
@@ -651,27 +630,10 @@ def _minhash_pairs_fused(docs: DataFrame, num_perm: int, bands: int,
                 "hashes": [hv64[offs[i]: offs[i] + cnts[i]] for i in range(n)],
             })
 
-    # SPARK_GRAFT_MH_DEBUG=1: per-stage wall-clock to stderr — the knob
-    # that attributes fused-plan time between the parallel kernel, the
-    # dictionary/pack jobs, and the bucket/verify stage.
-    import os as _os
-    import sys as _sys
-    import time as _time
-    _dbg = _os.environ.get("SPARK_GRAFT_MH_DEBUG") == "1"
-    _t0 = _time.time()
-
     combined = docs.select(id_col, text_col).mapInPandas(
         sig_csr_kernel, "doc_id long, band_hashes array<long>, hashes array<long>"
     ).localCheckpoint(eager=True)
-    n_docs = int(acc_docs.value)
-    if _dbg:
-        print(f"# mh_fused sig_kernel+ckpt: {_time.time()-_t0:.1f}s "
-              f"({n_docs} docs)", file=_sys.stderr); _t0 = _time.time()
 
-    # The bucket/cell pipeline depends only on the checkpoint, not on
-    # the verify broadcast — materialize it from a driver thread so its
-    # jobs overlap the dictionary/pack jobs below (guide §2.6: actions
-    # are only sequential because the driver calls them sequentially).
     buckets = combined.select(
         "doc_id", F.posexplode("band_hashes").alias("band", "band_hash")
     ).groupBy("band", "band_hash").agg(F.collect_list("doc_id").alias("_ids"))
@@ -702,164 +664,15 @@ def _minhash_pairs_fused(docs: DataFrame, num_perm: int, bands: int,
         )
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    from concurrent.futures import ThreadPoolExecutor
-    _pool = ThreadPoolExecutor(max_workers=1)
-    _cells_fut = _pool.submit(lambda: cells_plan.localCheckpoint(eager=True))
-
-    # Scale-adaptive verify-state build (guide §2: adapt to input size,
-    # not to one tuned scale).  Below ~32 MiB of estimated shingle
-    # bytes the whole corpus CSR collects in one cheap Arrow pull and
-    # the serial rank/bitset build is sub-100 ms — the two distributed
-    # dictionary/pack jobs would cost MORE than they save (measured
-    # +0.4 s at the 5k-doc contract corpus).  Above it, the dictionary
-    # and rank/pack work runs executor-side and the driver's serial
-    # section shrinks to an argsort gather (the round-5 serial rank
-    # build was 16-22 s at 200k docs).
-    driver_build = est_bytes is not None and est_bytes <= _DRIVER_BUILD_BYTES
-    dict_tbl = None
-    if not driver_build:
-        # distributed dictionary: explode + distinct runs with map-side
-        # partial aggregation, so the shuffle carries ~per-partition-
-        # unique hashes and the driver receives exactly the n_ranks
-        # sorted uniques — never the 2x-bigger raw CSR of round 5
-        dict_tbl = (
-            combined.select(F.explode("hashes").alias("h")).distinct().toArrow()
-        )
-        if _dbg:
-            print(f"# mh_fused dict_distinct: {_time.time()-_t0:.1f}s "
-                  f"(n_ranks={dict_tbl.num_rows})",
-                  file=_sys.stderr); _t0 = _time.time()
-        # dictionary alone would blow the broadcast budget (a corpus of
-        # near-unique shingles): fall back to the driver-side build,
-        # which is no worse there
-        driver_build = dict_tbl.num_rows * 8 > budget
-
-    if driver_build:
-        # round-5 driver-side path, with its documented sizing assert
-        tbl = combined.select("doc_id", "hashes").toArrow()
-        ids = tbl["doc_id"].combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
-        hcol = tbl["hashes"].combine_chunks()
-        cnts = np.asarray(hcol.value_lengths(), dtype=np.int64)
-        hv_all = hcol.flatten().to_numpy(zero_copy_only=False).astype(np.uint64)
-        # Driver sizing: this path transiently holds the Arrow table,
-        # the int64 hash buffer, its sort copy, and the two int32 rank
-        # buffers before the broadcast ships — ~2.5x the budgeted bytes
-        # peak (the rank build is chunk-bounded, see
-        # _sorted_csr_from_arrow).  Assert loudly instead of letting a
-        # mis-set budget OOM the driver mid-broadcast.
-        csr_bytes = int(hv_all.nbytes)
-        assert csr_bytes <= 4 * DEFAULT_MAX_SHINGLE_BROADCAST_BYTES, (
-            f"fused minhash CSR is {csr_bytes >> 20} MiB on the driver — "
-            "max_shingle_broadcast_bytes is set past what driver memory can "
-            "absorb (peak ~2.5x CSR bytes); lower the budget to route to the "
-            "distributed verify"
-        )
-        ids_s, ranks_s, offs_s, cnts_s, n_ranks = _sorted_csr_from_arrow(ids, hv_all, cnts)
-        del tbl, hcol, hv_all, ids, cnts
-        route = _fused_verify_route(len(ids_s), n_ranks, budget)
-        if route == "bitset":
-            bitmat = _bitset_from_csr(ranks_s, offs_s, cnts_s, n_ranks)
-            del ranks_s, offs_s
-            bc = spark.sparkContext.broadcast((ids_s, bitmat, cnts_s))
-        else:
-            bc = spark.sparkContext.broadcast((ids_s, ranks_s, offs_s, cnts_s, n_ranks))
-        if _dbg:
-            print(f"# mh_fused driver_build({route}): {_time.time()-_t0:.1f}s",
-                  file=_sys.stderr); _t0 = _time.time()
-    else:
-        n_ranks = dict_tbl.num_rows
-        dict64 = np.sort(
-            dict_tbl["h"].combine_chunks()
-            .to_numpy(zero_copy_only=False).astype(np.int64).view(np.uint64)
-        )
-        del dict_tbl
-        bcd = spark.sparkContext.broadcast(dict64)
-        route = _fused_verify_route(n_docs, n_ranks, budget)
-        w_words = (n_ranks + 63) >> 6
-
-        if route == "bitset":
-            def pack_kernel(it):
-                d = bcd.value
-                nr = len(d)
-                for pdf in it:
-                    n = len(pdf)
-                    if n == 0:
-                        yield pd.DataFrame({
-                            "doc_id": pd.Series([], dtype="int64"),
-                            "words": pd.Series([], dtype="object"),
-                            "cnt": pd.Series([], dtype="int64"),
-                        })
-                        continue
-                    segs = [np.asarray(x, dtype=np.int64) for x in pdf["hashes"]]
-                    cnts = np.fromiter((len(s) for s in segs), dtype=np.int64, count=n)
-                    flat = np.concatenate(segs)
-                    ranks = np.searchsorted(d, flat.view(np.uint64)).astype(np.int32)
-                    offs = np.concatenate([[0], np.cumsum(cnts)[:-1]]).astype(np.int64)
-                    words = _bitset_from_csr(ranks, offs, cnts, nr).view(np.int64)
-                    yield pd.DataFrame({
-                        "doc_id": pdf["doc_id"].to_numpy(dtype=np.int64),
-                        "words": list(words),
-                        "cnt": cnts,
-                    })
-
-            packed = combined.select("doc_id", "hashes").mapInPandas(
-                pack_kernel, "doc_id long, words array<long>, cnt long"
-            ).toArrow()
-            ids = packed["doc_id"].combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
-            wcol = packed["words"].combine_chunks()
-            bitflat = wcol.flatten().to_numpy(zero_copy_only=False).astype(np.int64).view(np.uint64)
-            cnts = packed["cnt"].combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
-            order = np.argsort(ids, kind="stable")
-            bitmat = bitflat.reshape(len(ids), w_words)[order]
-            bc = spark.sparkContext.broadcast((ids[order], bitmat, cnts[order]))
-            if _dbg:
-                print(f"# mh_fused pack_collect(bitset): {_time.time()-_t0:.1f}s "
-                      f"({bitmat.nbytes >> 20} MiB, n_ranks={n_ranks})",
-                      file=_sys.stderr); _t0 = _time.time()
-        else:
-            def rank_kernel(it):
-                d = bcd.value
-                for pdf in it:
-                    n = len(pdf)
-                    if n == 0:
-                        yield pd.DataFrame({
-                            "doc_id": pd.Series([], dtype="int64"),
-                            "ranks": pd.Series([], dtype="object"),
-                        })
-                        continue
-                    yield pd.DataFrame({
-                        "doc_id": pdf["doc_id"].to_numpy(dtype=np.int64),
-                        "ranks": [
-                            np.searchsorted(
-                                d, np.asarray(x, dtype=np.int64).view(np.uint64)
-                            ).astype(np.int32)
-                            for x in pdf["hashes"]
-                        ],
-                    })
-
-            packed = combined.select("doc_id", "hashes").mapInPandas(
-                rank_kernel, "doc_id long, ranks array<int>"
-            ).toArrow()
-            ids = packed["doc_id"].combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
-            rcol = packed["ranks"].combine_chunks()
-            cnts = np.asarray(rcol.value_lengths(), dtype=np.int64)
-            rflat = rcol.flatten().to_numpy(zero_copy_only=False).astype(np.int32)
-            ids_s, ranks_s, offs_s, cnts_s = _reorder_csr(ids, rflat, cnts)
-            bc = spark.sparkContext.broadcast((ids_s, ranks_s, offs_s, cnts_s, n_ranks))
-            if _dbg:
-                print(f"# mh_fused pack_collect(csr): {_time.time()-_t0:.1f}s "
-                      f"({rflat.nbytes >> 20} MiB ranks)",
-                      file=_sys.stderr); _t0 = _time.time()
-        bcd.destroy()
-    if _dbg:
-        print(f"# mh_fused broadcast: {_time.time()-_t0:.1f}s",
-              file=_sys.stderr); _t0 = _time.time()
-
-    cells = _cells_fut.result()
-    _pool.shutdown(wait=False)
-    if _dbg:
-        print(f"# mh_fused cells_join: {_time.time()-_t0:.1f}s",
-              file=_sys.stderr); _t0 = _time.time()
+    # Overlap the cells job with the verify-state build (guide §2.6:
+    # actions are only sequential because the driver calls them
+    # sequentially).  Leaving the block waits for the cells job and
+    # joins the thread, also when the build raises.
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        cells_fut = pool.submit(inheritable_thread_target(spark)(
+            lambda: cells_plan.localCheckpoint(eager=True)))
+        bc, route = _verify_state(combined, est_bytes, budget)
+        cells = cells_fut.result()
 
     thr = float(jaccard_threshold)
 
@@ -874,7 +687,7 @@ def _minhash_pairs_fused(docs: DataFrame, num_perm: int, bands: int,
         # float32 with a 1.0 margin (strict superset: G is an exact
         # integer in float32 for counts <= 2^15 and |A|+|B| <= 2^16, so
         # every rounding term is << 1), then survivors recompute the
-        # EXACT round-5 jaccard expression in int64/float64.
+        # CSR kernel's EXACT jaccard expression in int64/float64.
         r32 = np.float32(thr / (1.0 + thr))
         tri_cache: dict[int, np.ndarray] = {}
         budget_elems = 1 << 24  # 64 MB of float32 tile rows per chunk
@@ -986,8 +799,8 @@ def _minhash_pairs_fused(docs: DataFrame, num_perm: int, bands: int,
             # in-batch dedupe: a true pair collides in many bands.
             # Dense-position composite key (pos_a * n_docs + pos_b fits
             # int64 — n_docs is broadcast-budget-bounded) sorts ~3x
-            # faster than the round-5 unique-over-2-column-stack, which
-            # fell back to a structured void-dtype sort.
+            # faster than np.unique over a 2-column stack, which falls
+            # back to a structured void-dtype sort.
             ia = np.searchsorted(ids_b, a)
             ib = np.searchsorted(ids_b, b)
             key = np.unique(ia.astype(np.int64) * n_b + ib)
@@ -1021,15 +834,13 @@ def _minhash_pairs_fused(docs: DataFrame, num_perm: int, bands: int,
     # The checkpointed pair set no longer references the broadcast or
     # the `combined` checkpoint, whose blocks the ContextCleaner
     # reclaims once the plan objects here go out of scope.
-    out = cells.mapInPandas(
-        emit_verify_bitset if route == "bitset" else emit_verify,
-        "a long, b long, jaccard double"
-    ).distinct().localCheckpoint(eager=True)
-    bc.destroy()
-    if _dbg:
-        print(f"# mh_fused bucket+verify: {_time.time()-_t0:.1f}s",
-              file=_sys.stderr)
-    return out
+    try:
+        return cells.mapInPandas(
+            emit_verify_bitset if route == "bitset" else emit_verify,
+            "a long, b long, jaccard double"
+        ).distinct().localCheckpoint(eager=True)
+    finally:
+        bc.destroy()
 
 
 def minhash_lsh_pairs(docs: DataFrame, num_perm: int = 128, bands: int = 64,

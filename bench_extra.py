@@ -71,7 +71,6 @@ def sf1_like_docs(spark, n: int, cache_dir: str = "/tmp/spark_graft_r6_cache"):
 
 
 def profile_minhash(n_docs: int = 50_000) -> None:
-    os.environ.setdefault("SPARK_GRAFT_MH_DEBUG", "1")
     from augdiff_pipeline_spark.operators.dedup import minhash_lsh_pairs
     from augdiff_pipeline_spark.session import get_spark
 

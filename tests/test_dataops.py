@@ -92,9 +92,10 @@ def test_minhash_lsh_recall_is_complete(spark, docs):
 
 
 def test_minhash_verify_route_parity(spark, docs, monkeypatch):
-    """All three verify routes — fused bitset (small shingle universe),
-    fused rank-CSR, and the distributed join-back — produce the same
-    pair set with bit-identical jaccard values."""
+    """Every verify route — fused bitset and fused rank-CSR, each with
+    its state built on the driver and on the executors, and the
+    over-budget join-back — produces the same pair set with
+    bit-identical jaccard values."""
     import augdiff_pipeline_spark.operators.dedup as dd
 
     def run(**kw):
@@ -105,6 +106,7 @@ def test_minhash_verify_route_parity(spark, docs, monkeypatch):
 
     routes = []
     real = dd._fused_verify_route
+    max_ranks = dd._MAX_BITSET_RANKS
 
     def spy(*a, **kw):
         r = real(*a, **kw)
@@ -117,9 +119,36 @@ def test_minhash_verify_route_parity(spark, docs, monkeypatch):
     monkeypatch.setattr(dd, "_MAX_BITSET_RANKS", 0)
     csr = run()
     assert routes == ["bitset", "csr"], "_MAX_BITSET_RANKS=0 must fall back to the CSR kernel"
-    distributed = run(max_shingle_broadcast_bytes=0)
-    assert bitset == csr == distributed
+    # a negative driver-build bound forces the distributed build
+    monkeypatch.setattr(dd, "_DRIVER_BUILD_BYTES", -1)
+    dist_csr = run()
+    assert routes[-1] == "csr"
+    monkeypatch.setattr(dd, "_MAX_BITSET_RANKS", max_ranks)
+    dist_bitset = run()
+    assert routes[-1] == "bitset"
+    join_back = run(max_shingle_broadcast_bytes=0)
+    assert routes == ["bitset", "csr", "csr", "bitset"], "join-back builds no verify state"
+    assert bitset == csr == dist_csr == dist_bitset == join_back
     assert len(bitset) > 0
+
+
+def test_minhash_build_failure_releases_job_and_thread(spark, docs, monkeypatch):
+    """A raise inside the verify-state build propagates and leaves
+    neither the overlapping bucket-cell job nor its driver thread
+    running."""
+    import threading
+
+    import augdiff_pipeline_spark.operators.dedup as dd
+
+    def boom(*a, **kw):
+        raise RuntimeError("injected build failure")
+
+    monkeypatch.setattr(dd, "_fused_verify_route", boom)
+    threads = threading.active_count()
+    with pytest.raises(RuntimeError, match="injected build failure"):
+        minhash_lsh_pairs(docs, jaccard_threshold=0.5)
+    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+    assert threading.active_count() == threads
 
 
 def test_batch_shingles_match_per_doc():
@@ -491,7 +520,7 @@ def test_csr_rank_build_matches_np_unique():
     formulation it replaced."""
     from augdiff_pipeline_spark.operators.dedup import (
         _csr_ranks,
-        _sorted_csr_from_arrow,
+        _reorder_csr,
     )
 
     rng = np.random.default_rng(31)
@@ -511,7 +540,8 @@ def test_csr_rank_build_matches_np_unique():
     tot = int(cnts.sum())
     hv2 = rng.integers(0, 10_000, size=tot, dtype=np.uint64)
     ids = rng.permutation(n_docs).astype(np.int64)
-    ids_s, ranks, offs_o, cnts_o, n_ranks = _sorted_csr_from_arrow(ids, hv2, cnts)
+    ranks_orig, n_ranks = _csr_ranks(hv2)
+    ids_s, ranks, offs_o, cnts_o = _reorder_csr(ids, ranks_orig, cnts)
     assert (ids_s == np.sort(ids)).all()
     # reference: per-doc dict of rank segments built from np.unique
     uniq2, inv2 = np.unique(hv2, return_inverse=True)
