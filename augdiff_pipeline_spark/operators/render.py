@@ -1,18 +1,19 @@
-"""Geometry rendering plan: entity histories → per-mode WKB → features.
+"""Geometry rendering: entity histories → before/after geometry →
+GeoJSON feature lines.
 
-Distributed re-expression of the reference's driver-side getGeometry /
-emission state machine (/root/reference/ad/src/main/scala/RowsToJson.scala:272-383):
+Implements the reference's getGeometry / emission state machine
+(reference ad/src/main/scala/RowsToJson.scala:272-383) over the
+{id: (in_row, before_row)} dicts of ``history.all_histories``:
 
 - two render modes per entity id: "after" (in-window row, member lookups
   fall back in→before — RowsToJson:277-283) and "before" (before-window
   row, before-only lookups);
-- ways: posexplode(nds) ⋈ broadcast node-coordinate lookup → sorted
-  collect → Arrow kernel builds Line, or Polygon when the way isArea and
-  closed (RowsToJson:294);
+- ways: a Line, or a Polygon when the way isArea and closed
+  (RowsToJson:294);
 - relations: bounded rounds over the membership DAG — round k assembles
   every relation whose relation-members were assembled in rounds < k;
-  kernels: buildMultiPolygon for type=multipolygon tags, MultiLine when
-  every member geometry is a line, else GeometryCollection
+  buildMultiPolygon for type=multipolygon tags, MultiLine when every
+  member geometry is a line, else GeometryCollection
   (RowsToJson:329-345); unresolved members are dropped from roles/types
   *and* geoms in lockstep (the reference zips full-length role arrays
   with resolved-only wkb arrays, silently misaligning when a member is
@@ -22,10 +23,10 @@ emission state machine (/root/reference/ad/src/main/scala/RowsToJson.scala:272-3
   after-feature + invisible before-feature; delete → invisible
   before-feature only.
 
-Geometry work happens in mapInPandas Arrow kernels over batch-scoped
-groups, with the node-coordinate lookup broadcast — or, for a small
-batch, on the driver (``feature_lines_py``).  Both call the same
-per-entity functions (``way_wkb``, ``relation_wkb``, ``feature_line``).
+``feature_lines_py`` serves both batch routes of plans/augdiff.py.  The
+DataFrame kernels ``node_points``/``way_wkbs``/``relation_wkbs`` render
+current entity rows for the polygon layer (plans/polygon_layer.py); they
+share the per-entity ``way_wkb``/``relation_wkb`` with the batch render.
 """
 
 from __future__ import annotations
@@ -41,13 +42,10 @@ from ..functions.osm_tags import is_area_py, is_multipolygon_py
 from ..geometry import assembly, core, wkb
 from .history import MAX_REL_DEPTH
 
-_MODE_COLS = {"after": ("ax", "ay"), "before": ("bx", "by")}
-
 
 # ------------------------------------------------------- per-entity kernels
-# Plain functions over one entity: the mapInPandas kernels below and the
-# driver route (feature_lines_py) both call them, so geometry and
-# emission exist once.
+# Plain functions over one entity: the batch render (feature_lines_py)
+# and the polygon layer's mapInPandas kernels both call them.
 def way_wkb(tags, xs, ys) -> bytes | None:
     """One way's WKB from its node coordinates in nd order: a Polygon
     when the way is an area and closed, else a LineString; None when it
@@ -117,37 +115,35 @@ def feature_line(gwkb, row, visible_override) -> str:
     )
 
 
-def node_points(node_hist: DataFrame) -> DataFrame:
-    """(id, ax, ay, bx, by): per-mode coordinates for every node in scope."""
-    after = F.coalesce(F.col("in_row"), F.col("before_row"))
-    return node_hist.select(
-        "id",
-        after["lon"].cast("double").alias("ax"),
-        after["lat"].cast("double").alias("ay"),
-        F.col("before_row")["lon"].cast("double").alias("bx"),
-        F.col("before_row")["lat"].cast("double").alias("by"),
+def _props(row, visible_override) -> dict:
+    ts = row["timestamp"]
+    iso = pd.Timestamp(ts).strftime("%Y-%m-%dT%H:%M:%SZ")
+    return {
+        "id": int(row["id"]),
+        "type": row["type"],
+        "tags": dict(row["tags"]) if row["tags"] is not None else {},
+        "changeset": int(row["changeset"]) if row["changeset"] is not None else None,
+        "timestamp": iso,
+        "uid": int(row["uid"]) if row["uid"] is not None else None,
+        "user": row["user"],
+        "version": int(row["version"]),
+        "visible": bool(row["visible"]) if visible_override is None else bool(visible_override),
+    }
+
+
+def node_points(nodes: DataFrame) -> DataFrame:
+    """(id, x, y) of node rows."""
+    return nodes.select(
+        "id", F.col("lon").cast("double").alias("x"), F.col("lat").cast("double").alias("y")
     )
 
 
-def _way_rows(way_hist: DataFrame, mode: str) -> DataFrame:
-    row = (
-        F.coalesce(F.col("in_row"), F.col("before_row"))
-        if mode == "after"
-        else F.col("before_row")
-    )
-    return way_hist.select("id", row.alias("r")).filter(F.col("r").isNotNull())
-
-
-def way_wkbs(way_hist: DataFrame, node_pts: DataFrame, mode: str) -> DataFrame:
-    """(id, wkb) for every renderable way in ``mode``."""
-    xcol, ycol = _MODE_COLS[mode]
-    rows = _way_rows(way_hist, mode)
-    exploded = rows.select(
-        "id",
-        F.col("r.tags").alias("tags"),
-        F.posexplode("r.nds").alias("pos", "nd"),
+def way_wkbs(ways: DataFrame, node_pts: DataFrame) -> DataFrame:
+    """(id, wkb) of way rows, node coordinates from ``node_pts``."""
+    exploded = ways.select(
+        "id", "tags", F.posexplode("nds").alias("pos", "nd")
     ).join(
-        F.broadcast(node_pts.select(F.col("id").alias("nid"), F.col(xcol).alias("x"), F.col(ycol).alias("y"))),
+        F.broadcast(node_pts.withColumnRenamed("id", "nid")),
         F.col("nd.ref") == F.col("nid"),
         "left",
     )
@@ -166,78 +162,11 @@ def way_wkbs(way_hist: DataFrame, node_pts: DataFrame, mode: str) -> DataFrame:
     return agg.mapInPandas(kernel, "id long, wkb binary")
 
 
-def way_wkbs_both(way_hist: DataFrame, node_pts: DataFrame) -> DataFrame:
-    """(id, mode, wkb) for BOTH render modes in one explode+join+agg
-    pass — the per-batch pipeline derives its "after"/"before" way
-    tables by filtering this one checkpointed result instead of paying
-    the explode, broadcast join, sort-collect and Arrow kernel twice
-    (mode geometry differs only in which history row supplies nds and
-    which coordinate pair the node lookup yields).  mode: 'a' | 'b'.
-    Semantics per mode are identical to ``way_wkbs`` (same kernel)."""
-    after_r = F.coalesce(F.col("in_row"), F.col("before_row"))
-    before_r = F.col("before_row")
-    modes = way_hist.select(
-        "id",
-        F.explode(
-            F.filter(
-                F.array(
-                    F.struct(F.lit("a").alias("mode"), after_r.alias("r")),
-                    F.struct(F.lit("b").alias("mode"), before_r.alias("r")),
-                ),
-                lambda s: s["r"].isNotNull(),
-            )
-        ).alias("mr"),
-    ).select("id", F.col("mr.mode").alias("mode"), F.col("mr.r").alias("r"))
-    exploded = modes.select(
-        "id", "mode",
-        F.col("r.tags").alias("tags"),
-        F.posexplode("r.nds").alias("pos", "nd"),
-    ).join(
-        F.broadcast(node_pts.select(
-            F.col("id").alias("nid"), F.col("ax"), F.col("ay"), F.col("bx"), F.col("by")
-        )),
-        F.col("nd.ref") == F.col("nid"),
-        "left",
-    ).select(
-        "id", "mode", "tags", "pos",
-        F.when(F.col("mode") == "a", F.col("ax")).otherwise(F.col("bx")).alias("x"),
-        F.when(F.col("mode") == "a", F.col("ay")).otherwise(F.col("by")).alias("y"),
-    )
-    agg = exploded.groupBy("id", "mode").agg(
-        F.sort_array(F.collect_list(F.struct("pos", "x", "y"))).alias("pts"),
-        F.first("tags").alias("tags"),
-    )
-
-    def kernel(it):
-        for pdf in it:
-            yield pd.DataFrame({
-                "id": pdf["id"],
-                "mode": pdf["mode"],
-                "wkb": [_way_pts_wkb(tags, pts) for pts, tags in zip(pdf["pts"], pdf["tags"])],
-            })
-
-    return agg.mapInPandas(kernel, "id long, mode string, wkb binary")
-
-
-def relation_wkbs(
-    rel_hist: DataFrame,
-    node_pts: DataFrame,
-    way_wkb: DataFrame,
-    mode: str,
-) -> DataFrame:
-    """(id, wkb) for every renderable relation in ``mode`` — at most
-    MAX_REL_DEPTH rounds over the relation-membership DAG."""
-    xcol, ycol = _MODE_COLS[mode]
-    row = (
-        F.coalesce(F.col("in_row"), F.col("before_row"))
-        if mode == "after"
-        else F.col("before_row")
-    )
-    rows = rel_hist.select("id", row.alias("r")).filter(F.col("r").isNotNull())
-    members = rows.select(
-        "id",
-        F.col("r.tags").alias("tags"),
-        F.posexplode("r.members").alias("pos", "m"),
+def relation_wkbs(rels: DataFrame, node_pts: DataFrame, way_wkb: DataFrame) -> DataFrame:
+    """(id, wkb) of relation rows — at most MAX_REL_DEPTH rounds over
+    the relation-membership DAG."""
+    members = rels.select(
+        "id", "tags", F.posexplode("members").alias("pos", "m")
     ).select(
         "id", "tags", "pos",
         F.col("m.type").alias("mtype"),
@@ -245,12 +174,8 @@ def relation_wkbs(
         F.col("m.role").alias("role"),
     )
     # node/way member geometries are immediately available
-    node_wkb_df = node_pts.select(
-        F.col("id").alias("mid"),
-        F.col(xcol).alias("x"),
-        F.col(ycol).alias("y"),
-    )
-    renderable_rel = rows.select(F.col("id").alias("mid")).withColumn("r_ok", F.lit(True))
+    node_wkb_df = node_pts.withColumnRenamed("id", "mid")
+    renderable_rel = rels.select(F.col("id").alias("mid")).withColumn("r_ok", F.lit(True))
 
     base = (
         members.join(
@@ -326,82 +251,9 @@ def _assemble_relations(members: DataFrame) -> DataFrame:
     return agg.mapInPandas(kernel, "id long, wkb binary")
 
 
-# ------------------------------------------------------------------ features
-def emit_features(
-    hist: DataFrame, after_wkb: DataFrame, before_wkb: DataFrame, etype: str
-) -> DataFrame:
-    """GeoJSON feature lines per the create/modify/delete state machine
-    (RowsToJson.scala:353-383).
-
-    The branching is NATIVE DataFrame logic (create → after feature;
-    modify → after + invisible-before; delete → invisible-before); only
-    the WKB→GeoJSON render crosses into the Arrow kernel, one output row
-    per input row (no per-row pandas iteration, no branch work in
-    Python).  ``sub`` orders after(0)/before(1) lines of one entity
-    deterministically for the sink.
-    """
-    h = (
-        hist.join(after_wkb.withColumnRenamed("wkb", "a_wkb"), "id", "left")
-        .join(before_wkb.withColumnRenamed("wkb", "b_wkb"), "id", "left")
-        .filter(F.col("in_row").isNotNull())
-    )
-    visible_now = F.col("in_row")["visible"]
-    has_before = F.col("before_row")["id"].isNotNull()
-    # after-line: created or modified, currently visible, renderable
-    after = h.filter(visible_now & F.col("a_wkb").isNotNull()).select(
-        F.col("a_wkb").alias("gwkb"),
-        F.col("in_row").alias("row"),
-        F.lit(None).cast("boolean").alias("vis_override"),
-        F.lit(0).alias("sub"),
-    )
-    # before-line: modify or delete — always emitted invisible
-    before = h.filter(has_before & F.col("b_wkb").isNotNull()).select(
-        F.col("b_wkb").alias("gwkb"),
-        F.col("before_row").alias("row"),
-        F.lit(False).alias("vis_override"),
-        F.lit(1).alias("sub"),
-    )
-    sel = after.unionByName(before)
-
-    def kernel(it):
-        for pdf in it:
-            out_id, out_line = [], []
-            for gwkb, row, vo in zip(pdf["gwkb"], pdf["row"], pdf["vis_override"]):
-                out_id.append(int(row["id"]))
-                out_line.append(feature_line(gwkb, row, None if pd.isna(vo) else bool(vo)))
-            yield pd.DataFrame(
-                {
-                    "etype": pd.Series([etype] * len(out_id), dtype="object"),
-                    "id": pd.Series(out_id, dtype="int64"),
-                    "sub": pdf["sub"].astype("int32"),
-                    "feature": pd.Series(out_line, dtype="object"),
-                }
-            )
-
-    return sel.mapInPandas(kernel, "etype string, id long, sub int, feature string")
-
-
-def _props(row, visible_override) -> dict:
-    ts = row["timestamp"]
-    iso = pd.Timestamp(ts).strftime("%Y-%m-%dT%H:%M:%SZ")
-    return {
-        "id": int(row["id"]),
-        "type": row["type"],
-        "tags": dict(row["tags"]) if row["tags"] is not None else {},
-        "changeset": int(row["changeset"]) if row["changeset"] is not None else None,
-        "timestamp": iso,
-        "uid": int(row["uid"]) if row["uid"] is not None else None,
-        "user": row["user"],
-        "version": int(row["version"]),
-        "visible": bool(row["visible"]) if visible_override is None else bool(visible_override),
-    }
-
-
-# ------------------------------------------------------------- driver route
-# The small-batch twin of node_points → way_wkbs_both → relation_wkbs →
-# emit_features over the {id: (in_row, before_row)} dicts that
-# history.histories_py returns: same steps and rules, dicts in place of
-# DataFrames, the per-entity kernels above shared.
+# -------------------------------------------------------------- batch render
+# Per-mode geometry and feature lines over the {id: (in_row, before_row)}
+# dicts that history.all_histories returns.
 def _mode_row(hist_entry, mode: str):
     in_row, before_row = hist_entry
     if mode == "after":
@@ -417,10 +269,11 @@ def _xy(row) -> tuple:
 
 
 def _relation_wkbs_py(rel_hist: dict, mode: str, node_xy: dict, way_w: dict) -> dict:
-    """relation_wkbs on dicts: the same MAX_REL_DEPTH rounds, where a
-    relation waits while a renderable member relation is unassembled,
-    and the leftovers (cycles, depth overflow) are assembled with the
-    member geometries known at the start of the last round."""
+    """{id: wkb} of the relations renderable in ``mode``, in at most
+    MAX_REL_DEPTH rounds: a relation waits while a renderable member
+    relation is unassembled, and the leftovers (cycles, depth overflow)
+    are assembled with the member geometries known at the start of the
+    last round."""
     rows = {rid: r for rid, h in rel_hist.items() if (r := _mode_row(h, mode)) is not None}
 
     def members(r, rel_w):
@@ -462,9 +315,10 @@ def _relation_wkbs_py(rel_hist: dict, mode: str, node_xy: dict, way_w: dict) -> 
     return done
 
 
-def feature_lines_py(node_hist: dict, way_hist: dict, rel_hist: dict) -> list[str]:
-    """The batch's feature lines in sink order (node/way/relation, then
-    id, then sub) from driver-held histories."""
+def feature_lines_py(node_hist: dict, way_hist: dict, rel_hist: dict) -> list[tuple]:
+    """(etype, id, sub, line) for the scope's features in sink order
+    (node/way/relation, then id, then sub: 0 for the after-line, 1 for
+    the before-line)."""
     mode_wkbs = {}
     for mode in ("after", "before"):
         node_xy = {nid: _xy(_mode_row(h, mode)) for nid, h in node_hist.items()}
@@ -484,7 +338,7 @@ def feature_lines_py(node_hist: dict, way_hist: dict, rel_hist: dict) -> list[st
         mode_wkbs[mode] = (node_w, way_w, rel_w)
 
     lines = []
-    for i, hist in enumerate((node_hist, way_hist, rel_hist)):
+    for i, (etype, hist) in enumerate((("node", node_hist), ("way", way_hist), ("relation", rel_hist))):
         after_w, before_w = mode_wkbs["after"][i], mode_wkbs["before"][i]
         for eid in sorted(hist):
             in_row, before_row = hist[eid]
@@ -492,7 +346,7 @@ def feature_lines_py(node_hist: dict, way_hist: dict, rel_hist: dict) -> list[st
                 continue
             # create/modify → visible after-line; modify/delete → invisible before-line
             if in_row["visible"] and after_w.get(eid) is not None:
-                lines.append(feature_line(after_w[eid], in_row, None))
+                lines.append((etype, eid, 0, feature_line(after_w[eid], in_row, None)))
             if before_row is not None and before_w.get(eid) is not None:
-                lines.append(feature_line(before_w[eid], before_row, False))
+                lines.append((etype, eid, 1, feature_line(before_w[eid], before_row, False)))
     return lines

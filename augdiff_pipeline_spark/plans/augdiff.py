@@ -2,35 +2,35 @@
 
 Re-expresses the reference's driver loop (AugmentedDiff.scala:47-93 +
 osc2json).  The closure's size decision picks one of two routes for the
-rest of the batch:
+rest of the batch; both run the same history and render Python
+(history.all_histories → render.feature_lines_py), on the whole scope or
+on partitions of it:
 
   change batch ── incremental closure (new edges → index table)
                    │
        small closure (driver route)     │  oversize closure or scope
-                                        │    (DataFrame route)
+                                        │    (grouped route)
        ─────────────────────────────    │  ─────────────────────────────────
        point lookup of the fetch keys   │  needed pairs → semi-join lookup
-       ONE Arrow collect of batch ∪     │  union + provenance dedup (J6/T5)
-         fetched rows (in_batch tag)    │  histories: windows + quantifier
-       histories_py (dicts)             │    aggregates + fixpoint (A2/G2)
-       feature_lines_py: per-mode WKB   │  per-mode WKB (Arrow kernels,
-         + GeoJSON lines (G1/G3/G6/G8)  │    G1/G3/G6) → emit (G8)
-       feature file written from the    │  feature file written by Spark
-         driver                         │
+       ONE Arrow collect of batch ∪     │  scope rows' own containment
+         fetched rows (in_batch tag)    │    edges → closure → roots; each
+       all_histories → feature_lines_py │    row tagged with every root
+         on the driver                  │    above it, hashed on the root
+       feature file written from the    │  per partition (whole downsets):
+         driver                         │    all_histories → feature_lines_py
+                                        │  feature file written by Spark
                    │
        state append → index append → lineage commit marker
 
 The driver route is the reference's own shape (RowsToJson.scala:104-388
-builds histories and geometries for the batch scope in driver memory):
-a minutely batch's scope is a few dozen rows, so the DataFrame route's
-~100 jobs were fixed per-job overhead.  A scope over the closure's probe
-bound (closure.SMALL_COMPONENT_EDGES rows) falls back to the DataFrame
-route.  The bound holds for full rows too: on a 4-core host, one node
-move reaching a whole relation ran 4.5 s on the driver route vs 15.5 s
-on the DataFrame route at 20k scope rows and 16.2 s vs 25.7 s at 191k,
-with the driver's Python heap growing ~0.6 KB per scope row (121 MB).
-Both routes call the same per-entity kernels in operators/render.py and
-produce byte-identical feature files.
+builds histories and geometries for the batch scope in driver memory).
+A scope over the closure's probe bound (closure.SMALL_COMPONENT_EDGES
+rows) runs the same Python on executors instead.  That is exact because
+an entity's history and geometry read only its own rows and those of its
+transitive members, and a partition holds whole downsets of the roots
+hashed to it; an entity under several roots renders identically in each,
+and the duplicates are dropped.  Both routes produce byte-identical
+feature files.
 
 State/index/lineage/metrics are snapshot-committed tables; the batch's
 own rows append to state AFTER the diff is computed (the diff joins the
@@ -43,12 +43,15 @@ from __future__ import annotations
 import os
 import shutil
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import history, render
-from ..operators.closure import SMALL_COMPONENT_EDGES, incremental_closure, needed_pairs
+from ..functions.packing import pair_to_long
+from ..operators.closure import (
+    SMALL_COMPONENT_EDGES, edges_from_rows, incremental_closure, needed_pairs, transitive_closure,
+)
 from ..schemas import INDEX_SCHEMA, OSM_COLUMNS
 from ..sources.catalog import SnapshotTable
 from ..sources.state import StateTable
@@ -104,77 +107,62 @@ def compute_batch_features(
             # driver route: the closure was small, so the scope it keys
             # is small too — ONE Arrow collect under the closure's probe
             # bound brings batch ∪ fetched rows to the driver; an
-            # overflow falls back to the DataFrame route
+            # overflow falls back to the grouped route
             tbl = rows.limit(SMALL_COMPONENT_EDGES + 1).toArrow()
             if tbl.num_rows <= SMALL_COMPONENT_EDGES:
                 scope = tbl.to_pylist()
         if scope is not None:
-            nh, wh, rh = history.histories_py(scope)
-        else:
-            nh, wh, rh, present = history.all_histories(history.dedup_batch_union(rows))
+            hists = history.all_histories(scope)
 
     with timer.time("render"):
         if scope is not None:
-            return render.feature_lines_py(nh, wh, rh), new_edges, new_edge_rows
-        # node_points is a pure projection over the CHECKPOINTED nh; its
-        # own eager checkpoint only pays off when the way/relation render
-        # chains consume it repeatedly (explode joins + both WKB modes).
-        node_pts = render.node_points(nh)
-        if present & {"way", "relation"}:
-            node_pts = node_pts.localCheckpoint(eager=True)
-        empty_wkb = spark.createDataFrame([], "id long, wkb binary")
-        # per-type skip (driven by all_histories' one presence probe —
-        # no per-frame isEmpty jobs): most minutely batches touch no
-        # relation, node-only batches touch no way; each skipped mode
-        # skips an explode/join/agg/kernel chain + its checkpoint
-        if "way" in present:
-            # both way render modes in ONE explode/join/agg/kernel pass,
-            # then filter the single checkpointed result per mode —
-            # halves the heaviest per-batch chain (each mode previously
-            # paid its own explode + broadcast join + sort-collect +
-            # Arrow kernel + eager checkpoint, serialized back-to-back)
-            way_both = render.way_wkbs_both(wh, node_pts).localCheckpoint(eager=True)
-            way_a = way_both.filter(F.col("mode") == "a").select("id", "wkb")
-            way_b = way_both.filter(F.col("mode") == "b").select("id", "wkb")
-        else:
-            way_a, way_b = empty_wkb, empty_wkb
-        if "relation" in present:
-            rel_a = render.relation_wkbs(rh, node_pts, way_a, "after")
-            rel_b = render.relation_wkbs(rh, node_pts, way_b, "before")
-        else:
-            rel_a, rel_b = empty_wkb, empty_wkb
-
-        node_a = _point_wkbs(node_pts, "ax", "ay")
-        node_b = _point_wkbs(node_pts, "bx", "by")
-
-        feats = (
-            render.emit_features(nh, node_a, node_b, "node")
-            .unionByName(render.emit_features(wh, way_a, way_b, "way"))
-            .unionByName(render.emit_features(rh, rel_a, rel_b, "relation"))
-        )
+            lines = [line for *_, line in render.feature_lines_py(*hists)]
+            return lines, new_edges, new_edge_rows
+        feats = _grouped_features(rows)
     return feats, new_edges, new_edge_rows
 
 
-def _point_wkbs(node_pts: DataFrame, xcol: str, ycol: str) -> DataFrame:
-    pts = node_pts.select("id", F.col(xcol).alias("x"), F.col(ycol).alias("y")).filter(
-        F.col("x").isNotNull()
+def _grouped_features(rows: DataFrame) -> DataFrame:
+    """DataFrame[etype, id, sub, feature] of a scope too large for the
+    driver: the driver route's Python, once per partition of complete
+    root downsets.
+
+    Containment edges come from the scope rows themselves, every version
+    included: a relation's before-version member may be in scope through
+    another container alone.  A root is a scope key none of whose
+    containers lacks the reverse edge, so every member of a containment
+    cycle is a root."""
+    rows = rows.withColumn("_k", pair_to_long(F.col("id"), F.col("type"))).localCheckpoint(eager=True)
+    closed = transitive_closure(edges_from_rows(rows, include_node_self_edges=False))
+    reverse = closed.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    contained = closed.join(reverse, ["a", "b"], "left_anti").select(F.col("a").alias("_k"))
+    roots = rows.select("_k").distinct().join(contained, "_k", "left_anti")
+    root_of = closed.join(roots.withColumnRenamed("_k", "b"), "b").select(
+        F.col("a").alias("_k"), F.col("b").alias("_g")
+    ).unionByName(roots.select("_k", F.col("_k").alias("_g")))
+    # an explicit partition count: AQE would coalesce this small
+    # shuffle into one task
+    grouped = (
+        rows.join(root_of, "_k")
+        .repartition(rows.sparkSession.sparkContext.defaultParallelism, "_g")
+        .drop("_k", "_g")
     )
+    schema = pa.schema([("etype", pa.string()), ("id", pa.int64()),
+                        ("sub", pa.int32()), ("feature", pa.string())])
 
-    def kernel(it):
-        from ..geometry import core, wkb
+    def kernel(batches):
+        batches = list(batches)
+        if batches:
+            # a row under two roots of this partition arrives twice;
+            # all_histories dedups it
+            scope = pa.Table.from_batches(batches).to_pylist()
+            feats = render.feature_lines_py(*history.all_histories(scope))
+            yield pa.RecordBatch.from_pylist([dict(zip(schema.names, f)) for f in feats], schema=schema)
 
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "wkb": [
-                        wkb.dumps(core.Point(float(x), float(y)))
-                        for x, y in zip(pdf["x"], pdf["y"])
-                    ],
-                }
-            )
-
-    return pts.mapInPandas(kernel, "id long, wkb binary")
+    # an entity under roots of two partitions renders identically in both
+    return grouped.mapInArrow(kernel, "etype string, id long, sub int, feature string").dropDuplicates(
+        ["etype", "id", "sub"]
+    )
 
 
 def _write_lines(path: str, lines: list[str]) -> None:
@@ -253,8 +241,6 @@ def run_batch(
             # small-closure path: the new edges are a driver-held list —
             # write them driver-side (no Spark job), and the lineage row
             # count comes for free
-            import pyarrow as pa
-
             idx_snap = index.append_local(
                 new_edge_rows,
                 pa.schema([pa.field("a", pa.int64()), pa.field("b", pa.int64())]),

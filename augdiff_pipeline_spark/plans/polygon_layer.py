@@ -1,10 +1,10 @@
 """Polygon layer: current polygonal geometry of the OSM state.
 
 Latest visible version per entity (A2 top-1 window) → way polygons
-(closed + isArea) and multipolygon relations (assembly kernel), re-using
-the render plan's history-shaped inputs with before≡null; output rows
-carry WKB + the cover intervals (FIXTURES.md §5 shape, flattened to one
-row per interval for the broadcast index).
+(closed + isArea) and multipolygon relations (assembly kernel), through
+the render module's DataFrame kernels; output rows carry WKB + the cover
+intervals (FIXTURES.md §5 shape, flattened to one row per interval for
+the broadcast index).
 """
 
 from __future__ import annotations
@@ -17,7 +17,6 @@ from ..functions.packing import pair_to_long
 from ..geometry import core, wkb
 from ..operators import render
 from ..operators.cover import polygon_cover
-from ..schemas import OSM_COLUMNS
 
 
 def _latest_visible(state: DataFrame) -> DataFrame:
@@ -31,27 +30,18 @@ def _latest_visible(state: DataFrame) -> DataFrame:
     )
 
 
-def _as_hist(df: DataFrame) -> DataFrame:
-    """Shape latest rows like a history table: in_row = latest, before = null."""
-    row = F.struct(*[F.col(c) for c in OSM_COLUMNS]).alias("in_row")
-    return df.select(F.col("id"), row).withColumn(
-        "before_row", F.lit(None).cast(df.select(F.struct(*OSM_COLUMNS).alias("s")).schema["s"].dataType)
-    )
-
-
 def build_polygon_layer(
     spark, state: DataFrame, max_res: int = 14, min_res: int = 4
 ) -> DataFrame:
     """DataFrame[feature_id, kind, geom_wkb, cell_lo, cell_hi]."""
     latest = _latest_visible(state).localCheckpoint(eager=True)
 
-    node_hist = _as_hist(latest.filter(F.col("type") == "node"))
-    way_hist = _as_hist(latest.filter(F.col("type") == "way"))
-    rel_hist = _as_hist(latest.filter(F.col("type") == "relation"))
+    def of_type(t):
+        return latest.filter(F.col("type") == t)
 
-    node_pts = render.node_points(node_hist).localCheckpoint(eager=True)
-    way_w = render.way_wkbs(way_hist, node_pts, "after").localCheckpoint(eager=True)
-    rel_w = render.relation_wkbs(rel_hist, node_pts, way_w, "after")
+    node_pts = render.node_points(of_type("node")).localCheckpoint(eager=True)
+    way_w = render.way_wkbs(of_type("way"), node_pts).localCheckpoint(eager=True)
+    rel_w = render.relation_wkbs(of_type("relation"), node_pts, way_w)
 
     ways = way_w.select(
         pair_to_long(F.col("id"), F.lit("way")).alias("feature_id"),

@@ -54,21 +54,6 @@ OSM_SCHEMA = T.StructType(
 
 OSM_COLUMNS = [f.name for f in OSM_SCHEMA.fields]
 
-# Shape of a history frame (operators/history._histories): the winning
-# in-window / before-window row per entity id.  Used to early-exit the
-# history builders with a local empty relation when the rows hold no
-# entity of a type.
-_OSM_ROW_STRUCT = T.StructType(
-    [T.StructField(f.name, f.dataType, True) for f in OSM_SCHEMA.fields]
-)
-HISTORY_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType(), True),
-        T.StructField("in_row", _OSM_ROW_STRUCT, True),
-        T.StructField("before_row", _OSM_ROW_STRUCT, True),
-    ]
-)
-
 # Dependency-closure edge table (reference Common.scala:119-121):
 # a = packed referenced entity, b = packed referencing entity; the closure
 # contains one row per (entity, transitive dependency) pair.

@@ -45,8 +45,6 @@ def main() -> None:
     print("package from:", pkg.__file__, file=sys.stderr)
     from pyspark.sql import functions as F
 
-    from augdiff_pipeline_spark import fixtures
-    from augdiff_pipeline_spark.operators import history
     from augdiff_pipeline_spark.operators.dedup import minhash_lsh_pairs
     from augdiff_pipeline_spark.operators.multimodal import image_features
     from augdiff_pipeline_spark.operators.tiling import assign_tiles, cut_tiles
@@ -81,19 +79,6 @@ def main() -> None:
     write("tile_cut", grab(cut))
 
     write("img_features", grab(image_features(img_slice)))
-
-    # streaming histories sub-plan: the deduped batch-union -> node
-    # histories chain (the per-batch hot path)
-    base = fixtures.base_state_df(spark)
-    from augdiff_pipeline_spark.schemas import OSM_COLUMNS
-    rows = (
-        base.select(*OSM_COLUMNS).withColumn("in_batch", F.lit(True))
-        .unionByName(
-            base.select(*OSM_COLUMNS).withColumn("in_batch", F.lit(False))
-        )
-    )
-    rows = history.dedup_batch_union(rows)
-    write("histories_node", grab(history.node_histories(rows)))
 
     spark.stop()
 

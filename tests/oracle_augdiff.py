@@ -2,9 +2,9 @@
 augmented-diff algorithm (RowsToJson.scala + ComputeIndexLocal.scala),
 in plain Python dicts/lists, used to golden-check the distributed engine.
 
-Independent of the engine's DataFrame plans (operators/history.py,
-operators/render.py, operators/closure.py); shares only the geometry
-assembly kernel, which has its own unit tests.
+Independent of the engine's history, render and closure code
+(operators/history.py, operators/render.py, operators/closure.py);
+shares only the geometry assembly kernel, which has its own unit tests.
 """
 
 from __future__ import annotations
