@@ -83,6 +83,33 @@ def transitive_closure(edges: DataFrame, max_rounds: int = MAX_NESTING_ROUNDS) -
     return cur.filter(F.col("a") != F.col("b"))
 
 
+def downset_partitions(rows: DataFrame) -> DataFrame:
+    """``rows`` hashed into defaultParallelism partitions of complete
+    root downsets: every row lands in the partition of each root above
+    it, so a partition holds every transitive member of each entity in
+    it (a row under two roots may arrive twice).
+
+    Containment edges come from the rows themselves, every version
+    included: a relation's older member may be present through another
+    container alone.  A root is a key none of whose containers lacks the
+    reverse edge, so every member of a containment cycle is a root."""
+    rows = rows.withColumn("_k", pair_to_long(F.col("id"), F.col("type"))).localCheckpoint(eager=True)
+    closed = transitive_closure(edges_from_rows(rows, include_node_self_edges=False))
+    reverse = closed.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    contained = closed.join(reverse, ["a", "b"], "left_anti").select(F.col("a").alias("_k"))
+    roots = rows.select("_k").distinct().join(contained, "_k", "left_anti")
+    root_of = closed.join(roots.withColumnRenamed("_k", "b"), "b").select(
+        F.col("a").alias("_k"), F.col("b").alias("_g")
+    ).unionByName(roots.select("_k", F.col("_k").alias("_g")))
+    # an explicit partition count: AQE would coalesce this small
+    # shuffle into one task
+    return (
+        rows.join(root_of, "_k")
+        .repartition(rows.sparkSession.sparkContext.defaultParallelism, "_g")
+        .drop("_k", "_g")
+    )
+
+
 def two_hop_edges(index: DataFrame, touched_b: DataFrame) -> DataFrame:
     """All index edges of every container component touching the update.
 

@@ -954,37 +954,14 @@ _TOK_HASH = (
     "shiftleft(cast(conv(substr(md5(t), 1, 8), 16, 10) as bigint), 32) | "
     "cast(conv(substr(md5(t), 9, 8), 16, 10) as bigint)"
 )
-_BIT_VOTES = (
-    "aggregate(transform({tokens}, t -> {tok_hash}), array_repeat(0, 64), "
-    "(acc, hv) -> zip_with(acc, sequence(0, 63), "
-    "(a, b) -> a + IF((shiftrightunsigned(hv, b) & 1) = 1, 1, -1)))"
-)
-_FOLD_BITS = (
-    "aggregate(sequence(0, 63), cast(0 as bigint), (acc, b) -> "
-    "acc | IF(element_at({votes}, b + 1) > 0, shiftleft(cast(1 as bigint), b), cast(0 as bigint)))"
-)
-
-
-def simhash_expr(text_col: str) -> F.Column:
-    """64-bit SimHash of a text column as a single native expression.
-
-    Row-at-a-time (higher-order-function) form — useful where a
-    per-row expression is required (e.g. inside another select with
-    no shuffle allowed); for whole-table computation prefer
-    ``simhash_column``, which is ~20x faster via explode+codegen.
-    """
-    votes = _BIT_VOTES.format(
-        tokens=_TOKENS.format(col=text_col), tok_hash=_TOK_HASH
-    )
-    return F.expr(_FOLD_BITS.format(votes=votes))
 
 
 def simhash_column(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """(doc_id, simhash) — 64-bit SimHash over whitespace tokens.
 
     explode_outer keeps token-less docs (null token -> every vote falls
-    to the -1 branch exactly once -> all bits 0 -> simhash 0, matching
-    the empty-aggregate semantics of ``simhash_expr``).
+    to the -1 branch exactly once -> all bits 0 -> simhash 0, the
+    SimHash of an empty token set).
     """
     toks = docs.select(
         F.col(id_col).alias("doc_id"),

@@ -23,10 +23,11 @@ Implements the reference's getGeometry / emission state machine
   after-feature + invisible before-feature; delete → invisible
   before-feature only.
 
-``feature_lines_py`` serves both batch routes of plans/augdiff.py.  The
-DataFrame kernels ``node_points``/``way_wkbs``/``relation_wkbs`` render
-current entity rows for the polygon layer (plans/polygon_layer.py); they
-share the per-entity ``way_wkb``/``relation_wkb`` with the batch render.
+``mode_geoms`` is the one geometry builder: ``feature_lines_py`` calls
+it for both modes on both batch routes of plans/augdiff.py, and the
+polygon layer (plans/polygon_layer.py) calls it in "after" mode over
+the latest visible rows.  Callers pass scopes closed under membership,
+so every entity renders as it would over the whole state.
 """
 
 from __future__ import annotations
@@ -35,8 +36,6 @@ import json
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..functions.osm_tags import is_area_py, is_multipolygon_py
 from ..geometry import assembly, core, wkb
@@ -44,8 +43,7 @@ from .history import MAX_REL_DEPTH
 
 
 # ------------------------------------------------------- per-entity kernels
-# Plain functions over one entity: the batch render (feature_lines_py)
-# and the polygon layer's mapInPandas kernels both call them.
+# Plain functions over one entity.
 def way_wkb(tags, xs, ys) -> bytes | None:
     """One way's WKB from its node coordinates in nd order: a Polygon
     when the way is an area and closed, else a LineString; None when it
@@ -64,30 +62,14 @@ def way_wkb(tags, xs, ys) -> bytes | None:
     return wkb.dumps(geom)
 
 
-def _way_pts_wkb(tags, pts) -> bytes | None:
-    return way_wkb(tags, [p["x"] for p in pts], [p["y"] for p in pts])
-
-
-def relation_wkb(tags, ms) -> bytes:
-    """One relation's WKB from its members in member order.  Each item
-    of ``ms`` carries mtype, role and the member's geometry source: x/y
-    for a node, way_wkb for a way, rel_wkb for a relation (None when
-    unresolved — the member is then dropped from roles, types and geoms
-    in lockstep)."""
-    roles, types, geoms = [], [], []
-    for m in ms:
-        g: core.Geometry | None = None
-        if m["mtype"] == "node" and m["x"] is not None and not pd.isna(m["x"]):
-            g = core.Point(float(m["x"]), float(m["y"]))
-        elif m["mtype"] == "way" and m["way_wkb"] is not None:
-            g = wkb.loads(bytes(m["way_wkb"]))
-        elif m["mtype"] == "relation" and m["rel_wkb"] is not None:
-            g = wkb.loads(bytes(m["rel_wkb"]))
-        if g is None:
-            continue
-        roles.append(m["role"])
-        types.append(m["mtype"])
-        geoms.append(g)
+def relation_wkb(tags, members) -> bytes:
+    """One relation's WKB from (mtype, role, geometry) per member in
+    member order; a member whose geometry is None is unresolved and is
+    dropped from roles, types and geoms in lockstep."""
+    resolved = [(t, role, g) for t, role, g in members if g is not None]
+    types = [t for t, _, _ in resolved]
+    roles = [role for _, role, _ in resolved]
+    geoms = [g for _, _, g in resolved]
     tags_d = dict(tags) if tags is not None else {}
     geom: core.Geometry | None
     if is_multipolygon_py(tags_d):
@@ -131,129 +113,10 @@ def _props(row, visible_override) -> dict:
     }
 
 
-def node_points(nodes: DataFrame) -> DataFrame:
-    """(id, x, y) of node rows."""
-    return nodes.select(
-        "id", F.col("lon").cast("double").alias("x"), F.col("lat").cast("double").alias("y")
-    )
-
-
-def way_wkbs(ways: DataFrame, node_pts: DataFrame) -> DataFrame:
-    """(id, wkb) of way rows, node coordinates from ``node_pts``."""
-    exploded = ways.select(
-        "id", "tags", F.posexplode("nds").alias("pos", "nd")
-    ).join(
-        F.broadcast(node_pts.withColumnRenamed("id", "nid")),
-        F.col("nd.ref") == F.col("nid"),
-        "left",
-    )
-    agg = exploded.groupBy("id").agg(
-        F.sort_array(F.collect_list(F.struct("pos", "x", "y"))).alias("pts"),
-        F.first("tags").alias("tags"),
-    )
-
-    def kernel(it):
-        for pdf in it:
-            yield pd.DataFrame({
-                "id": pdf["id"],
-                "wkb": [_way_pts_wkb(tags, pts) for pts, tags in zip(pdf["pts"], pdf["tags"])],
-            })
-
-    return agg.mapInPandas(kernel, "id long, wkb binary")
-
-
-def relation_wkbs(rels: DataFrame, node_pts: DataFrame, way_wkb: DataFrame) -> DataFrame:
-    """(id, wkb) of relation rows — at most MAX_REL_DEPTH rounds over
-    the relation-membership DAG."""
-    members = rels.select(
-        "id", "tags", F.posexplode("members").alias("pos", "m")
-    ).select(
-        "id", "tags", "pos",
-        F.col("m.type").alias("mtype"),
-        F.col("m.ref").alias("mid"),
-        F.col("m.role").alias("role"),
-    )
-    # node/way member geometries are immediately available
-    node_wkb_df = node_pts.withColumnRenamed("id", "mid")
-    renderable_rel = rels.select(F.col("id").alias("mid")).withColumn("r_ok", F.lit(True))
-
-    base = (
-        members.join(
-            F.broadcast(node_wkb_df), (F.col("mtype") == "node") & (members["mid"] == node_wkb_df["mid"]), "left"
-        )
-        .drop(node_wkb_df["mid"])
-        .join(
-            F.broadcast(way_wkb.select(F.col("id").alias("wmid"), F.col("wkb").alias("way_wkb"))),
-            (F.col("mtype") == "way") & (F.col("mid") == F.col("wmid")),
-            "left",
-        )
-        .drop("wmid")
-        .join(
-            F.broadcast(renderable_rel),
-            (F.col("mtype") == "relation") & (members["mid"] == renderable_rel["mid"]),
-            "left",
-        )
-        .drop(renderable_rel["mid"])
-        .withColumn("rel_pending", F.coalesce(F.col("r_ok"), F.lit(False)))
-        .localCheckpoint(eager=True)
-    )
-
-    done: DataFrame | None = None
-    pending = base
-    for _ in range(MAX_REL_DEPTH):
-        if pending.isEmpty():
-            break
-        if done is not None:
-            pending = (
-                pending.drop("rel_wkb") if "rel_wkb" in pending.columns else pending
-            ).join(
-                F.broadcast(done.select(F.col("id").alias("dmid"), F.col("wkb").alias("rel_wkb"))),
-                (F.col("mtype") == "relation") & (F.col("mid") == F.col("dmid")),
-                "left",
-            ).drop("dmid")
-        else:
-            pending = pending.withColumn("rel_wkb", F.lit(None).cast("binary"))
-        undecided = F.col("rel_pending") & F.col("rel_wkb").isNull()
-        blocked_ids = pending.filter(undecided).select("id").distinct()
-        ready = pending.join(F.broadcast(blocked_ids), "id", "left_anti")
-        still = pending.join(F.broadcast(blocked_ids), "id", "left_semi").localCheckpoint(eager=True)
-
-        assembled = _assemble_relations(ready)
-        done = assembled if done is None else done.unionByName(assembled)
-        done = done.localCheckpoint(eager=True)
-        pending = still
-    if done is not None and not pending.isEmpty():
-        # cycles / depth overflow: assemble with unresolved members dropped
-        leftover = _assemble_relations(pending)
-        done = done.unionByName(leftover).localCheckpoint(eager=True)
-    elif done is None:
-        done = _assemble_relations(pending)
-    return done
-
-
-def _assemble_relations(members: DataFrame) -> DataFrame:
-    if "rel_wkb" not in members.columns:
-        members = members.withColumn("rel_wkb", F.lit(None).cast("binary"))
-    agg = members.groupBy("id").agg(
-        F.first("tags").alias("tags"),
-        F.sort_array(
-            F.collect_list(F.struct("pos", "mtype", "role", "x", "y", "way_wkb", "rel_wkb"))
-        ).alias("ms"),
-    )
-
-    def kernel(it):
-        for pdf in it:
-            yield pd.DataFrame({
-                "id": pdf["id"],
-                "wkb": [relation_wkb(tags, ms) for tags, ms in zip(pdf["tags"], pdf["ms"])],
-            })
-
-    return agg.mapInPandas(kernel, "id long, wkb binary")
-
-
-# -------------------------------------------------------------- batch render
-# Per-mode geometry and feature lines over the {id: (in_row, before_row)}
-# dicts that history.all_histories returns.
+# ---------------------------------------------------------- per-mode render
+# Per-mode geometry and feature lines over {id: (in_row, before_row)}
+# dicts: history.all_histories' for a batch, {id: (row, None)} of the
+# latest visible rows for the polygon layer.
 def _mode_row(hist_entry, mode: str):
     in_row, before_row = hist_entry
     if mode == "after":
@@ -268,7 +131,7 @@ def _xy(row) -> tuple:
     return tuple(None if row[c] is None else float(row[c]) for c in ("lon", "lat"))
 
 
-def _relation_wkbs_py(rel_hist: dict, mode: str, node_xy: dict, way_w: dict) -> dict:
+def _relation_geoms(rel_hist: dict, mode: str, node_xy: dict, way_w: dict) -> dict:
     """{id: wkb} of the relations renderable in ``mode``, in at most
     MAX_REL_DEPTH rounds: a relation waits while a renderable member
     relation is unassembled, and the leftovers (cycles, depth overflow)
@@ -276,17 +139,17 @@ def _relation_wkbs_py(rel_hist: dict, mode: str, node_xy: dict, way_w: dict) -> 
     last round."""
     rows = {rid: r for rid, h in rel_hist.items() if (r := _mode_row(h, mode)) is not None}
 
-    def members(r, rel_w):
-        ms = []
-        for m in r["members"]:
-            mtype, ref = (m["type"], m["ref"]) if m is not None else (None, None)
-            x, y = node_xy.get(ref, (None, None)) if mtype == "node" else (None, None)
-            ms.append({
-                "mtype": mtype, "role": None if m is None else m["role"], "x": x, "y": y,
-                "way_wkb": way_w.get(ref) if mtype == "way" else None,
-                "rel_wkb": rel_w.get(ref) if mtype == "relation" else None,
-            })
-        return ms
+    def geom(m, rel_w):
+        if m["type"] == "node":
+            x, y = node_xy.get(m["ref"], (None, None))
+            return None if x is None else core.Point(x, y)
+        w = (way_w if m["type"] == "way" else rel_w if m["type"] == "relation" else {}).get(m["ref"])
+        return None if w is None else wkb.loads(w)
+
+    def assemble(r, rel_w):
+        return relation_wkb(r["tags"], [
+            (m["type"], m["role"], geom(m, rel_w)) for m in r["members"] if m is not None
+        ])
 
     def blocked(r, rel_w):
         return any(
@@ -308,11 +171,26 @@ def _relation_wkbs_py(rel_hist: dict, mode: str, node_xy: dict, way_w: dict) -> 
             if blocked(r, seen):
                 waiting[rid] = r
             else:
-                done[rid] = relation_wkb(r["tags"], members(r, seen))
+                done[rid] = assemble(r, seen)
         pending = waiting
     for rid, r in pending.items():
-        done[rid] = relation_wkb(r["tags"], members(r, seen))
+        done[rid] = assemble(r, seen)
     return done
+
+
+def mode_geoms(node_hist: dict, way_hist: dict, rel_hist: dict, mode: str) -> tuple:
+    """(node_xy, way_w, rel_w) in ``mode``: {id: (lon, lat)} of every
+    node, {id: wkb or None} of the ways with nds, {id: wkb} of the
+    relations with members."""
+    node_xy = {nid: _xy(_mode_row(h, mode)) for nid, h in node_hist.items()}
+    way_w = {}
+    for wid, h in way_hist.items():
+        r = _mode_row(h, mode)
+        if r is None or not r["nds"]:
+            continue
+        pts = [node_xy.get(None if nd is None else nd["ref"], (None, None)) for nd in r["nds"]]
+        way_w[wid] = way_wkb(r["tags"], [p[0] for p in pts], [p[1] for p in pts])
+    return node_xy, way_w, _relation_geoms(rel_hist, mode, node_xy, way_w)
 
 
 def feature_lines_py(node_hist: dict, way_hist: dict, rel_hist: dict) -> list[tuple]:
@@ -321,20 +199,8 @@ def feature_lines_py(node_hist: dict, way_hist: dict, rel_hist: dict) -> list[tu
     the before-line)."""
     mode_wkbs = {}
     for mode in ("after", "before"):
-        node_xy = {nid: _xy(_mode_row(h, mode)) for nid, h in node_hist.items()}
-        node_w = {
-            nid: wkb.dumps(core.Point(float(x), float(y)))
-            for nid, (x, y) in node_xy.items()
-            if x is not None
-        }
-        way_w = {}
-        for wid, h in way_hist.items():
-            r = _mode_row(h, mode)
-            if r is None or not r["nds"]:
-                continue
-            pts = [node_xy.get(None if nd is None else nd["ref"], (None, None)) for nd in r["nds"]]
-            way_w[wid] = way_wkb(r["tags"], [p[0] for p in pts], [p[1] for p in pts])
-        rel_w = _relation_wkbs_py(rel_hist, mode, node_xy, way_w)
+        node_xy, way_w, rel_w = mode_geoms(node_hist, way_hist, rel_hist, mode)
+        node_w = {nid: wkb.dumps(core.Point(x, y)) for nid, (x, y) in node_xy.items() if x is not None}
         mode_wkbs[mode] = (node_w, way_w, rel_w)
 
     lines = []

@@ -48,9 +48,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import history, render
-from ..functions.packing import pair_to_long
 from ..operators.closure import (
-    SMALL_COMPONENT_EDGES, edges_from_rows, incremental_closure, needed_pairs, transitive_closure,
+    SMALL_COMPONENT_EDGES, downset_partitions, incremental_closure, needed_pairs,
 )
 from ..schemas import INDEX_SCHEMA, OSM_COLUMNS
 from ..sources.catalog import SnapshotTable
@@ -125,28 +124,7 @@ def compute_batch_features(
 def _grouped_features(rows: DataFrame) -> DataFrame:
     """DataFrame[etype, id, sub, feature] of a scope too large for the
     driver: the driver route's Python, once per partition of complete
-    root downsets.
-
-    Containment edges come from the scope rows themselves, every version
-    included: a relation's before-version member may be in scope through
-    another container alone.  A root is a scope key none of whose
-    containers lacks the reverse edge, so every member of a containment
-    cycle is a root."""
-    rows = rows.withColumn("_k", pair_to_long(F.col("id"), F.col("type"))).localCheckpoint(eager=True)
-    closed = transitive_closure(edges_from_rows(rows, include_node_self_edges=False))
-    reverse = closed.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    contained = closed.join(reverse, ["a", "b"], "left_anti").select(F.col("a").alias("_k"))
-    roots = rows.select("_k").distinct().join(contained, "_k", "left_anti")
-    root_of = closed.join(roots.withColumnRenamed("_k", "b"), "b").select(
-        F.col("a").alias("_k"), F.col("b").alias("_g")
-    ).unionByName(roots.select("_k", F.col("_k").alias("_g")))
-    # an explicit partition count: AQE would coalesce this small
-    # shuffle into one task
-    grouped = (
-        rows.join(root_of, "_k")
-        .repartition(rows.sparkSession.sparkContext.defaultParallelism, "_g")
-        .drop("_k", "_g")
-    )
+    root downsets (closure.downset_partitions)."""
     schema = pa.schema([("etype", pa.string()), ("id", pa.int64()),
                         ("sub", pa.int32()), ("feature", pa.string())])
 
@@ -160,9 +138,9 @@ def _grouped_features(rows: DataFrame) -> DataFrame:
             yield pa.RecordBatch.from_pylist([dict(zip(schema.names, f)) for f in feats], schema=schema)
 
     # an entity under roots of two partitions renders identically in both
-    return grouped.mapInArrow(kernel, "etype string, id long, sub int, feature string").dropDuplicates(
-        ["etype", "id", "sub"]
-    )
+    return downset_partitions(rows).mapInArrow(
+        kernel, "etype string, id long, sub int, feature string"
+    ).dropDuplicates(["etype", "id", "sub"])
 
 
 def _write_lines(path: str, lines: list[str]) -> None:

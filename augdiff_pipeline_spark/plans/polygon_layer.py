@@ -1,22 +1,26 @@
 """Polygon layer: current polygonal geometry of the OSM state.
 
-Latest visible version per entity (A2 top-1 window) → way polygons
-(closed + isArea) and multipolygon relations (assembly kernel), through
-the render module's DataFrame kernels; output rows carry WKB + the cover
-intervals (FIXTURES.md §5 shape, flattened to one row per interval for
-the broadcast index).
+Latest visible version per entity (A2 top-1 window), hashed into
+partitions of complete root downsets (closure.downset_partitions); per
+partition, the batch render's ``render.mode_geoms`` in "after" mode
+builds the way and relation geometries, and the cover kernel keeps the
+polygonal ones (closed + isArea ways, multipolygon relations).  Output
+rows carry WKB + the cover intervals (FIXTURES.md §5 shape, flattened
+to one row per interval for the broadcast index).
 """
 
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.packing import pair_to_long
 from ..geometry import core, wkb
 from ..operators import render
+from ..operators.closure import downset_partitions
 from ..operators.cover import polygon_cover
+from ..schemas import TYPE_CODES
 
 
 def _latest_visible(state: DataFrame) -> DataFrame:
@@ -34,26 +38,28 @@ def build_polygon_layer(
     spark, state: DataFrame, max_res: int = 14, min_res: int = 4
 ) -> DataFrame:
     """DataFrame[feature_id, kind, geom_wkb, cell_lo, cell_hi]."""
-    latest = _latest_visible(state).localCheckpoint(eager=True)
+    schema = pa.schema([("feature_id", pa.int64()), ("kind", pa.string()),
+                        ("geom_wkb", pa.binary())])
 
-    def of_type(t):
-        return latest.filter(F.col("type") == t)
+    def geoms(batches):
+        batches = list(batches)
+        if batches:
+            hists: dict = {"node": {}, "way": {}, "relation": {}}
+            # a row under two roots of this partition arrives twice
+            for r in pa.Table.from_batches(batches).to_pylist():
+                hists[r["type"]][r["id"]] = (r, None)
+            _, way_w, rel_w = render.mode_geoms(
+                hists["node"], hists["way"], hists["relation"], "after")
+            yield pa.RecordBatch.from_pylist([
+                {"feature_id": eid << 2 | TYPE_CODES[kind], "kind": kind, "geom_wkb": g}
+                for kind, ws in (("way", way_w), ("relation", rel_w))
+                for eid, g in ws.items() if g is not None
+            ], schema=schema)
 
-    node_pts = render.node_points(of_type("node")).localCheckpoint(eager=True)
-    way_w = render.way_wkbs(of_type("way"), node_pts).localCheckpoint(eager=True)
-    rel_w = render.relation_wkbs(of_type("relation"), node_pts, way_w)
-
-    ways = way_w.select(
-        pair_to_long(F.col("id"), F.lit("way")).alias("feature_id"),
-        F.lit("way").alias("kind"),
-        F.col("wkb").alias("geom_wkb"),
-    )
-    rels = rel_w.select(
-        pair_to_long(F.col("id"), F.lit("relation")).alias("feature_id"),
-        F.lit("relation").alias("kind"),
-        F.col("wkb").alias("geom_wkb"),
-    )
-    feats = ways.unionByName(rels).filter(F.col("geom_wkb").isNotNull())
+    # an entity under roots of two partitions renders identically in both
+    feats = downset_partitions(_latest_visible(state)).mapInArrow(
+        geoms, "feature_id long, kind string, geom_wkb binary"
+    ).dropDuplicates(["feature_id"])
 
     def kernel(it):
         for pdf in it:

@@ -40,15 +40,8 @@ class Snapshot:
 
 
 class SnapshotTable:
-    def __init__(self, path: str, data_format: str = "parquet"):
-        """``data_format``: 'parquet' (default) or 'orc' — the reference
-        is ORC end-to-end (OrcBackend.scala); Spark's native orc
-        source gives the same bloom/statistics machinery, so format is
-        a storage choice, not a capability difference."""
-        if data_format not in ("parquet", "orc"):
-            raise ValueError(f"unsupported data_format {data_format!r}")
+    def __init__(self, path: str):
         self.path = path
-        self.data_format = data_format
         self.meta_path = os.path.join(path, "_meta")
         self.manifest_path = os.path.join(self.meta_path, "snapshots.json")
         os.makedirs(self.meta_path, exist_ok=True)
@@ -83,7 +76,7 @@ class SnapshotTable:
         writer = df.write.mode("overwrite")
         if writer_conf:
             writer = writer_conf(writer)
-        writer.format(self.data_format).save(d)
+        writer.parquet(d)
         return d
 
     def append_local(self, rows: list[tuple], arrow_schema,
@@ -109,12 +102,7 @@ class SnapshotTable:
             {f.name: pa.array(list(c), type=f.type)
              for f, c in zip(arrow_schema, cols)}
         )
-        if self.data_format == "orc":
-            from pyarrow import orc
-
-            orc.write_table(tbl, os.path.join(d, "part-00000.orc"))
-        else:
-            pq.write_table(tbl, os.path.join(d, "part-00000.parquet"))
+        pq.write_table(tbl, os.path.join(d, "part-00000.parquet"))
         cur = self.current()
         snap = Snapshot(
             snapshot_id=(cur.snapshot_id + 1) if cur else 1,
@@ -272,7 +260,7 @@ class SnapshotTable:
             reader = spark.read
             if schema is not None:
                 reader = reader.schema(schema)
-            return reader.format(self.data_format).load(d)
+            return reader.parquet(d)
 
         out = load(snap.data_dirs[0])
         for d in snap.data_dirs[1:]:

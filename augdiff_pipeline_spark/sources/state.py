@@ -41,16 +41,6 @@ def clustered_writer(writer):
     )
 
 
-def clustered_writer_orc(writer):
-    # the ORC twin: the reference's exact write options
-    # (OrcBackend.scala:275-277 — bloom on id, 1000-row index stride)
-    return (
-        writer.partitionBy("p")
-        .option("orc.bloom.filter.columns", "id")
-        .option("orc.row.index.stride", "1000")
-    )
-
-
 def delta_writer(writer):
     # per-batch DELTA append: same bloom/dictionary skipping, but NO
     # partitionBy layout — a minutely batch is a handful of rows, and a
@@ -63,13 +53,6 @@ def delta_writer(writer):
     return (
         writer.option("parquet.bloom.filter.enabled#id", "true")
         .option("parquet.enable.dictionary", "true")
-    )
-
-
-def delta_writer_orc(writer):
-    return (
-        writer.option("orc.bloom.filter.columns", "id")
-        .option("orc.row.index.stride", "1000")
     )
 
 
@@ -91,8 +74,7 @@ class StateTable:
     KEEP_SNAPSHOTS + SAVE_INTERVAL manifest entries."""
 
     def __init__(self, path: str, save_interval: int = SAVE_INTERVAL,
-                 keep_snapshots: int = KEEP_SNAPSHOTS,
-                 data_format: str = "parquet"):
+                 keep_snapshots: int = KEEP_SNAPSHOTS):
         if keep_snapshots <= save_interval:
             raise ValueError(
                 f"keep_snapshots ({keep_snapshots}) must exceed "
@@ -101,18 +83,12 @@ class StateTable:
                 "could expire every committed rollback target, and resume "
                 "after a crash would double-append the batch"
             )
-        self.table = SnapshotTable(path, data_format=data_format)
-        self._writer_conf = (
-            clustered_writer_orc if data_format == "orc" else clustered_writer
-        )
-        self._delta_writer_conf = (
-            delta_writer_orc if data_format == "orc" else delta_writer
-        )
+        self.table = SnapshotTable(path)
         self.save_interval = save_interval
         self.keep_snapshots = keep_snapshots
 
     def init(self, df: DataFrame) -> int:
-        return self.table.overwrite(self._cluster(df), writer_conf=self._writer_conf)
+        return self.table.overwrite(self._cluster(df), writer_conf=clustered_writer)
 
     def append_batch(self, df: DataFrame, seq: int) -> int:
         # delta append: p column + in-partition sort, NO shuffle and no
@@ -123,7 +99,7 @@ class StateTable:
         ).sortWithinPartitions("p", "id", "type")
         sid = self.table.append(
             delta, operation="append", summary={"seq": seq},
-            writer_conf=self._delta_writer_conf,
+            writer_conf=delta_writer,
         )
         # the compact snapshot inherits the triggering seq tag: until the
         # lineage commit marker lands this seq is uncommitted, and an
@@ -131,7 +107,7 @@ class StateTable:
         # holding the uncommitted rows (crash here -> rerun -> doubles)
         cid = self.table.maybe_compact(
             df.sparkSession, self.save_interval, self.keep_snapshots,
-            transform=self._cluster, writer_conf=self._writer_conf,
+            transform=self._cluster, writer_conf=clustered_writer,
             schema=OSM_SCHEMA, summary={"seq": seq},
         )
         return cid if cid is not None else sid

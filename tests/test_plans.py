@@ -226,29 +226,6 @@ def test_cadence_validation_rejects_short_expiry(tmp_path):
         LineageLog(str(tmp_path / "l"), save_interval=4, keep_snapshots=2)
 
 
-def test_orc_state_table_roundtrip_and_pruning(spark, tmp_path):
-    """ORC storage parity (the reference is ORC end-to-end,
-    OrcBackend.scala): same snapshot/cluster/lookup contract, reference
-    write options (bloom on id, 1000-row index stride), same results."""
-    from augdiff_pipeline_spark.sources.state import StateTable
-
-    state = StateTable(str(tmp_path / "orcstate"), data_format="orc")
-    state.init(fixtures.base_state_df(spark))
-    state.append_batch(
-        fixtures.base_state_df(spark).limit(5).withColumn("id", F.col("id") + 900000),
-        seq=1,
-    )
-    want = StateTable(str(tmp_path / "pqstate"))
-    want.init(fixtures.base_state_df(spark))
-    assert state.read(spark).count() == want.read(spark).count() + 5
-    keys = spark.createDataFrame([(4005,), (8001,)], "k long")
-    got = {(r["id"], r["type"]) for r in state.fetch_pairs(spark, keys).collect()}
-    exp = {(r["id"], r["type"]) for r in want.fetch_pairs(spark, keys).collect()}
-    assert got == exp
-    plan = state.fetch_pairs(spark, keys)._jdf.queryExecution().toString()
-    assert "PushedFilters" in plan and "In(id" in plan.replace(" ", "").replace("[", "(")
-
-
 def test_lineage_restart_reads_manifest_not_table(spark, tmp_path, monkeypatch):
     """After the first compaction, a fresh LineageLog on the same path
     must reconstruct the committed-seq set from the manifest alone
