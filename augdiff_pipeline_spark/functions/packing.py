@@ -18,12 +18,19 @@ in partition pruning / bucketing expressions.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import CODE_TYPES, TYPE_CODES
 
 _PARTITION_BOUND = 1 << 11  # reference: a > (1L << (bits-1)), bits=12
+_LONG_MASK = (1 << 64) - 1
+
+# reference Common.scala:31 declares idLimit=4096 pushdown ids: a key
+# lookup up to this many keys enumerates them into IN-lists, beyond it a
+# broadcast semi-join does the work
+MAX_ENUMERATED_KEYS = 4096
 
 
 def type_code(type_col: Column) -> Column:
@@ -82,7 +89,29 @@ def partition_number_py(id_: int, type_: str) -> int:
 
 
 def pair_to_long_py(id_: int, type_: str) -> int:
-    return (id_ << 2) | TYPE_CODES[type_]
+    """Scalar twin of pair_to_long, wrapping to a signed 64-bit long as
+    the Column shift (and the reference's Scala long) does."""
+    packed = ((id_ << 2) | TYPE_CODES[type_]) & _LONG_MASK
+    return packed - (1 << 64) if packed >> 63 else packed
+
+
+def in_list(column: str, values) -> Column:
+    """``column IN (values)`` over integer values, built as ONE SQL-text
+    expression: one py4j call, where ``Column.isin`` makes one per
+    literal.  ``values`` must be non-empty."""
+    return F.expr(f"{column} IN ({','.join(str(int(v)) for v in values)})")
+
+
+def keyed(df: DataFrame, column: str, keys) -> DataFrame:
+    """Rows of ``df`` whose long ``column`` is in ``keys`` (non-empty):
+    an ``in_list`` filter up to MAX_ENUMERATED_KEYS keys, beyond which
+    parsing and planning the list costs more than a broadcast left-semi
+    join on a local relation of the keys."""
+    uniq = sorted(set(keys))
+    if len(uniq) <= MAX_ENUMERATED_KEYS:
+        return df.filter(in_list(column, uniq))
+    keys_df = df.sparkSession.createDataFrame(pa.table({column: pa.array(uniq, pa.int64())}))
+    return df.join(F.broadcast(keys_df), column, "left_semi")
 
 
 def long_to_id_py(packed: int) -> int:

@@ -10,8 +10,10 @@ Semantics (locked by fixture tests, no code copied):
   minus self-loops (ComputeIndex.scala:86-89 / ComputeIndexLocal.scala:81-88).
 - Incremental update (ComputeIndexLocal.scala:49-89 + the 2-hop Postgres
   fetch PostgresBackend.scala:60-83): restrict to the components touched
-  by a change batch via two chained semi-joins on the index, close over
-  the union, and emit new edges via a left-anti join.
+  by a change batch via two chained lookups on the index (IN-list
+  probes from the driver-held batch, or broadcast semi-joins for an
+  oversized one), close over the union, and emit the edges not already
+  stored.
 
 Spark-first realization: the reference's GraphX Pregel (batch) and
 driver do/while over hash maps (incremental) both become an iterative
@@ -28,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.packing import pair_to_long
+from ..functions.packing import keyed, pair_to_long, pair_to_long_py
 
 MAX_NESTING_ROUNDS = 6  # 2^6 = 64 levels of relation nesting — beyond real OSM
 
@@ -54,6 +56,21 @@ def edges_from_rows(rows: DataFrame, include_node_self_edges: bool = True) -> Da
             .select(b_col.alias("a"), b_col.alias("b"))
         )
         edges = edges.unionByName(node_self)
+    return edges
+
+
+def edges_from_rows_py(rows: list[dict], include_node_self_edges: bool = True) -> list[tuple[int, int]]:
+    """Driver-side twin of ``edges_from_rows`` over row dicts (an Arrow
+    table's ``to_pylist``): the same (a, b) edges, duplicates kept."""
+    edges = []
+    for r in rows:
+        b = pair_to_long_py(r["id"], r["type"])
+        if r["type"] == "way":
+            edges.extend((pair_to_long_py(nd["ref"], "node"), b) for nd in r["nds"] or ())
+        elif r["type"] == "relation":
+            edges.extend((pair_to_long_py(m["ref"], m["type"]), b) for m in r["members"] or ())
+        elif r["type"] == "node" and include_node_self_edges:
+            edges.append((b, b))
     return edges
 
 
@@ -115,9 +132,10 @@ def two_hop_edges(index: DataFrame, touched_b: DataFrame) -> DataFrame:
 
     Reproduces the reference's Postgres subquery
     ``SELECT a,b FROM index WHERE b IN (SELECT DISTINCT b FROM index
-    WHERE a IN (touched))`` as two chained semi-joins.  ``touched_b`` is
-    a single-column DF named ``a`` of packed changed-entity ids — small
-    (one minutely batch), so both probe sides broadcast.
+    WHERE a IN (touched))`` as two chained semi-joins for a batch too
+    large for the driver-side IN-list probes (``_small_closure``).
+    ``touched_b`` is a single-column DF named ``a`` of packed
+    changed-entity ids; both probe sides broadcast.
     """
     touched = F.broadcast(touched_b.select(F.col("a")).distinct())
     containers = (
@@ -129,12 +147,12 @@ def two_hop_edges(index: DataFrame, touched_b: DataFrame) -> DataFrame:
 # A minutely batch's touched components are tiny by construction (the
 # 2-hop restriction bounds them to the containers of changed entities) —
 # the reference closes them in driver memory (ComputeIndexLocal.scala's
-# do/while over hash maps).  Below this many edges we do the same: one
-# Arrow collect, a python closure (microseconds), one createDataFrame —
-# replacing ~8 Spark jobs (fixpoint rounds x checkpoint+count) with 2.
-# Components larger than this (or full rebuilds) take the distributed
-# doubling fixpoint.  200k edges ~ 3 MB — far beyond any real batch's
-# touched set, far below driver limits.
+# do/while over hash maps).  Below this many batch rows, edges and probe
+# rows we do the same: two IN-list probes of the index and a python
+# closure (microseconds) — replacing ~8 Spark jobs (fixpoint rounds x
+# checkpoint+count).  Components larger than this (or full rebuilds)
+# take the distributed doubling fixpoint.  200k edges ~ 3 MB — far
+# beyond any real batch's touched set, far below driver limits.
 SMALL_COMPONENT_EDGES = 200_000
 
 
@@ -162,10 +180,58 @@ def _close_edges_py(edges: set[tuple[int, int]]) -> set[tuple[int, int]]:
     return {(a, b) for a, deps in succ.items() for b in deps}
 
 
+def _probe(df: DataFrame, bound: int):
+    """Arrow collect of ``df`` capped at ``bound + 1`` rows; None when it
+    overflows the bound."""
+    tbl = df.limit(bound + 1).toArrow()
+    return tbl if tbl.num_rows <= bound else None
+
+
+def _small_closure(index: DataFrame, rows, bound: int):
+    """(new_set, all_set, update_keys) of the driver-held batch ``rows``
+    (an Arrow table), or None when the batch, its edges or either index
+    probe overflows ``bound``.
+
+    The 2-hop fetch (PostgresBackend.scala:60-83) runs as two key
+    probes (``packing.keyed``), each one Arrow collect: ``a IN touched``
+    gives the containers of the changed entities, ``b IN containers``
+    every index edge of their components (``existing``)."""
+    if rows.num_rows > bound:
+        return None
+    batch = rows.to_pylist()
+    row_edges = set(edges_from_rows_py(batch))
+    touched = {b for _, b in row_edges}
+    containers: set[int] = set()
+    if touched:
+        tbl = _probe(keyed(index, "a", touched).select("b"), bound)
+        if tbl is None:
+            return None
+        # the raw b column, deduped here: a distinct would cost a shuffle
+        containers = set(tbl["b"].to_pylist())
+    existing: set[tuple[int, int]] = set()
+    if containers:
+        tbl = _probe(keyed(index, "b", containers).select("a", "b"), bound)
+        if tbl is None:
+            return None
+        existing = set(zip(tbl["a"].to_pylist(), tbl["b"].to_pylist()))
+    edge_set = row_edges | existing
+    if len(edge_set) > bound:
+        return None
+    closed_set = {(a, b) for a, b in _close_edges_py(edge_set) if a != b}
+    # self-loops (only batch node self-edges — the stored index never
+    # holds them) stay in all_edges' endpoint set, mirroring the
+    # distributed branch
+    new_set = sorted(closed_set - existing)
+    all_set = sorted(closed_set | {(a, b) for a, b in row_edges if a == b})
+    update_keys = {pair_to_long_py(r["id"], r["type"]) for r in batch}
+    return new_set, all_set, update_keys
+
+
 def incremental_closure(
     index: DataFrame, change_rows: DataFrame,
     small_component_edges: int = SMALL_COMPONENT_EDGES,
     return_keys: bool = False,
+    rows=None,
 ) -> tuple:
     """(new_edges, all_edges[, fetch_keys]) for one change batch.
 
@@ -175,74 +241,43 @@ def incremental_closure(
     self-edges) are part of all_edges' *endpoint set* but never stored,
     mirroring the reference.
 
-    Size-routed: the touched edge set is collected and closed driver-
-    side when small (the overwhelmingly common minutely case — the
-    reference's ComputeIndexLocal.scala:49-89 is exactly this shape);
-    the distributed doubling fixpoint handles oversized components.
-    Both paths produce identical edge sets (fixture-tested).
+    Size-routed: a batch whose rows, edges and 2-hop probes each fit
+    ``small_component_edges`` is closed driver-side (the overwhelmingly
+    common minutely case — the reference's ComputeIndexLocal.scala:49-89
+    is exactly this shape); the distributed doubling fixpoint handles
+    oversized components.  Both paths produce identical edge sets
+    (fixture-tested).
+
+    ``rows`` is the whole batch as a driver-held Arrow table (run_batch
+    collects it once), or None for a batch not held on the driver, which
+    takes the distributed fixpoint.
 
     ``return_keys=True`` makes the return a 4-tuple
     (new_edges, all_edges, fetch_keys, new_edge_rows): ``fetch_keys`` is
     the packed fetch-key set (update keys ∪ all_edges endpoints —
     exactly ``needed_pairs``) as a sorted Python list, and
     ``new_edge_rows`` the new-edge pair list — both None when the
-    distributed path ran.  The keys ride the SAME Arrow collect as the
-    routing probe (batch rows are tagged src=2 in the candidate union),
-    so the caller's state fetch needs zero extra probe jobs, and the
-    driver-held new edges let the caller append the index delta without
-    a Spark write job — on a host where every tiny job costs ~1-2.5 s
-    these are measured per-batch latency cuts (round-5 soak profile);
-    at scale they remove driver round-trips per minutely batch.
+    distributed path ran.  The driver-held keys and new edges let the
+    caller fetch state and append the index delta with no probe or
+    write job.
     """
-    row_edges = edges_from_rows(change_rows, include_node_self_edges=True)
-    touched = row_edges.select(F.col("b").alias("a"))
-    existing = two_hop_edges(index, touched)
-
-    # ONE Arrow fetch of the tagged candidate set, capped at the routing
-    # bound (src=1 marks index-sourced edges: an edge present in BOTH
-    # the batch and the index must count as existing, not new; src=2
-    # rows carry the batch rows' own packed keys for the fetch set and
-    # are excluded from the edge sets)
-    spark = change_rows.sparkSession
-    update_keys = change_rows.select(pair_to_long(F.col("id"), F.col("type")).alias("a"))
-    cand = (
-        row_edges.withColumn("src", F.lit(0))
-        .unionByName(existing.withColumn("src", F.lit(1)))
-        .unionByName(
-            update_keys.select("a", F.col("a").alias("b")).withColumn("src", F.lit(2))
-        )
-        .limit(small_component_edges + 1)
-    )
-    tbl = cand.toArrow()
-    if tbl.num_rows <= small_component_edges:
-        rows_ab = list(zip(tbl["a"].to_pylist(), tbl["b"].to_pylist()))
-        srcs = tbl["src"].to_pylist()
-        pairs = [p for p, s in zip(rows_ab, srcs) if s != 2]
-        update_key_set = {a for (a, _), s in zip(rows_ab, srcs) if s == 2}
-        edge_set = set(pairs)
-        existing_set = {p for p, s in zip(rows_ab, srcs) if s == 1}
-        closed_set = {(a, b) for a, b in _close_edges_py(edge_set) if a != b}
-        # self-loops (only batch node self-edges — the stored index never
-        # holds them) stay in all_edges' endpoint set, mirroring the
-        # distributed branch
-        new_set = sorted(closed_set - existing_set)
-        all_set = sorted(closed_set | {(a, b) for a, b in edge_set if a == b})
-        new_edges = spark.createDataFrame(new_set or [], "a long, b long")
-        all_edges = spark.createDataFrame(all_set or [], "a long, b long")
+    small = None if rows is None else _small_closure(index, rows, small_component_edges)
+    if small is not None:
+        new_set, all_set, update_keys = small
+        spark = change_rows.sparkSession
+        new_edges = spark.createDataFrame(new_set, "a long, b long")
+        all_edges = spark.createDataFrame(all_set, "a long, b long")
         if return_keys:
-            keys = sorted(
-                update_key_set
-                | {a for a, _ in all_set}
-                | {b for _, b in all_set}
-            )
+            keys = sorted(update_keys | {a for a, _ in all_set} | {b for _, b in all_set})
             return new_edges, all_edges, keys, new_set
         return new_edges, all_edges
 
     # Oversize route: checkpoint the probe inputs before the fixpoint —
     # without this the two-hop semi-join plan re-executes once per
     # consumer (the fixpoint seed AND the new-edges anti-join), tripling
-    # the probe's work.  The extra jobs land only on this rare branch;
-    # the common small-batch path above stays at one candidate scan.
+    # the probe's work.
+    row_edges = edges_from_rows(change_rows, include_node_self_edges=True)
+    existing = two_hop_edges(index, row_edges.select(F.col("b").alias("a")))
     row_edges = row_edges.localCheckpoint(eager=True)
     existing = existing.localCheckpoint(eager=True)
     closed = transitive_closure(row_edges.unionByName(existing))

@@ -6,21 +6,27 @@ rest of the batch; both run the same history and render Python
 (history.all_histories → render.feature_lines_py), on the whole scope or
 on partitions of it:
 
-  change batch ── incremental closure (new edges → index table)
+  change batch ── ONE collect under the closure bound: the batch rows
+                  stay on the driver (over the bound: checkpoint)
                    │
-       small closure (driver route)     │  oversize closure or scope
-                                        │    (grouped route)
+  incremental closure: row edges in Python; the 2-hop index fetch as
+    two key probes (a IN touched → containers, b IN containers;
+    packing.keyed: IN-lists, broadcast semi-joins over its key bound)
+                   │
+       small closure (driver route)     │  oversize batch, closure or
+                                        │    scope (grouped route)
        ─────────────────────────────    │  ─────────────────────────────────
-       point lookup of the fetch keys   │  needed pairs → semi-join lookup
-       ONE Arrow collect of batch ∪     │  scope rows' own containment
-         fetched rows (in_batch tag)    │    edges → closure → roots; each
-       all_histories → feature_lines_py │    row tagged with every root
-         on the driver                  │    above it, hashed on the root
-       feature file written from the    │  per partition (whole downsets):
-         driver                         │    all_histories → feature_lines_py
-                                        │  feature file written by Spark
+       point lookup of the fetch keys:  │  needed pairs → semi-join lookup
+         only their p= dirs, IN-lists   │  scope rows' own containment
+       ONE Arrow collect of the fetched │    edges → closure → roots; each
+         rows (+ held batch, in_batch)  │    row tagged with every root
+       all_histories → feature_lines_py │    above it, hashed on the root
+         on the driver                  │  per partition (whole downsets):
+       feature file written from the    │    all_histories → feature_lines_py
+         driver                         │  feature file written by Spark
                    │
-       state append → index append → lineage commit marker
+       state append (held batch: pyarrow write; else Spark) → index
+         append → lineage commit marker
 
 The driver route is the reference's own shape (RowsToJson.scala:104-388
 builds histories and geometries for the batch scope in driver memory).
@@ -47,10 +53,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import history, render
-from ..operators.closure import (
-    SMALL_COMPONENT_EDGES, downset_partitions, incremental_closure, needed_pairs,
-)
+from ..operators import closure, history, render
+from ..operators.closure import downset_partitions, incremental_closure, needed_pairs
 from ..schemas import INDEX_SCHEMA, OSM_COLUMNS
 from ..sources.catalog import SnapshotTable
 from ..sources.state import StateTable
@@ -69,13 +73,15 @@ def compute_batch_features(
     state: StateTable,
     index: SnapshotTable,
     batch_df: DataFrame,
+    batch_rows: pa.Table | None,
     timer=None,
 ) -> tuple:
     """(features, new_edges_df, new_edge_rows) for one change batch (no
-    writes).  ``features`` is the ordered list of feature lines when the
-    driver route ran, else a DataFrame (etype, id, sub, feature);
-    ``new_edge_rows`` is the driver-held new-edge list of the small
-    closure, else None.
+    writes).  ``batch_rows`` is ``batch_df`` held on the driver, or None
+    for a batch over the closure bound.  ``features`` is the ordered
+    list of feature lines when the driver route ran, else a DataFrame
+    (etype, id, sub, feature); ``new_edge_rows`` is the driver-held
+    new-edge list of the small closure, else None.
 
     ``timer`` (a lineage.StageTimer) splits the diff into closure /
     histories / render sub-stages in the metrics table — the per-batch
@@ -85,7 +91,7 @@ def compute_batch_features(
     with timer.time("closure"):
         index_df = index.read(spark, schema=INDEX_SCHEMA)
         new_edges, all_edges, fetch_keys, new_edge_rows = incremental_closure(
-            index_df, batch_df, return_keys=True
+            index_df, batch_df, return_keys=True, rows=batch_rows
         )
         if new_edge_rows is None:
             # distributed path: materialize before the anti-join plan is
@@ -97,19 +103,7 @@ def compute_batch_features(
             fetched = state.fetch_keys(spark, fetch_keys)
         else:
             fetched = state.fetch_pairs(spark, needed_pairs(batch_df, all_edges))
-        rows = (
-            batch_df.select(*OSM_COLUMNS).withColumn("in_batch", F.lit(True))
-            .unionByName(fetched.select(*OSM_COLUMNS).withColumn("in_batch", F.lit(False)))
-        )
-        scope = None
-        if fetch_keys is not None:
-            # driver route: the closure was small, so the scope it keys
-            # is small too — ONE Arrow collect under the closure's probe
-            # bound brings batch ∪ fetched rows to the driver; an
-            # overflow falls back to the grouped route
-            tbl = rows.limit(SMALL_COMPONENT_EDGES + 1).toArrow()
-            if tbl.num_rows <= SMALL_COMPONENT_EDGES:
-                scope = tbl.to_pylist()
+        scope = None if fetch_keys is None else _driver_scope(batch_rows, fetched)
         if scope is not None:
             hists = history.all_histories(scope)
 
@@ -117,8 +111,31 @@ def compute_batch_features(
         if scope is not None:
             lines = [line for *_, line in render.feature_lines_py(*hists)]
             return lines, new_edges, new_edge_rows
+        rows = (
+            batch_df.select(*OSM_COLUMNS).withColumn("in_batch", F.lit(True))
+            .unionByName(fetched.select(*OSM_COLUMNS).withColumn("in_batch", F.lit(False)))
+        )
         feats = _grouped_features(rows)
     return feats, new_edges, new_edge_rows
+
+
+def _driver_scope(batch_rows: pa.Table, fetched: DataFrame) -> list[dict] | None:
+    """The driver route's scope rows (``in_batch`` tagged), or None when
+    the scope overflows the closure bound and takes the grouped route.
+    The closure was small, so the batch rows are on the driver and the
+    scope they key is small too: ONE Arrow collect of the fetched rows
+    under the rest of the bound."""
+    room = closure.SMALL_COMPONENT_EDGES - batch_rows.num_rows
+    if room < 0:
+        return None
+    tbl = fetched.limit(room + 1).toArrow()
+    if tbl.num_rows > room:
+        return None
+    return [
+        {**r, "in_batch": in_batch}
+        for t, in_batch in ((batch_rows, True), (tbl, False))
+        for r in t.select(OSM_COLUMNS).to_pylist()
+    ]
 
 
 def _grouped_features(rows: DataFrame) -> DataFrame:
@@ -176,11 +193,19 @@ def run_batch(
     LineageLog's own constructor knobs — tuning any table's cadence no
     longer silently leaves the others on the module constants."""
     timer = StageTimer(log, spark, seq)
-    batch_df = batch_df.localCheckpoint(eager=True)
+    # ONE collect holds a batch under the closure's bound on the driver
+    # for the whole batch: closure probes, scope, state append.  The
+    # DataFrame the grouped route needs is a local relation over it (no
+    # job); a batch over the bound is checkpointed instead.
+    batch_rows = batch_df.limit(closure.SMALL_COMPONENT_EDGES + 1).toArrow()
+    if batch_rows.num_rows <= closure.SMALL_COMPONENT_EDGES:
+        batch_df = spark.createDataFrame(batch_rows, schema=batch_df.schema)
+    else:
+        batch_rows, batch_df = None, batch_df.localCheckpoint(eager=True)
 
     with timer.time("diff"):
         feats, new_edges, new_edge_rows = compute_batch_features(
-            spark, state, index, batch_df, timer=timer
+            spark, state, index, batch_df, batch_rows, timer=timer
         )
         with timer.time("emit"):
             if isinstance(feats, list):
@@ -211,8 +236,18 @@ def run_batch(
     log.record_stage_counts(seq, "features", part_counts)
 
     with timer.time("state_append"):
-        state_snap = state.append_batch(batch_df, seq)
-    log.record_stage(spark, seq, "state_append", batch_df, output_snapshot=state_snap)
+        if batch_rows is None:
+            state_snap = state.append_batch(batch_df, seq)
+        else:
+            state_snap = state.append_batch(batch_rows, seq, spark)
+    if batch_rows is not None:
+        log.record_stage_counts(
+            seq, "state_append",
+            [{"partition_id": -1, "row_count": batch_rows.num_rows}],
+            output_snapshot=state_snap,
+        )
+    else:
+        log.record_stage(spark, seq, "state_append", batch_df, output_snapshot=state_snap)
 
     with timer.time("index_append"):
         if new_edge_rows is not None:

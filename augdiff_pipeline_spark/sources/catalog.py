@@ -79,29 +79,32 @@ class SnapshotTable:
         writer.parquet(d)
         return d
 
-    def append_local(self, rows: list[tuple], arrow_schema,
+    def append_local(self, rows, arrow_schema,
                      operation: str = "append",
                      summary: dict | None = None) -> int:
         """Append DRIVER-LOCAL rows as one parquet file via pyarrow — no
-        Spark job.  For the tiny per-batch bookkeeping appends (lineage
-        rows, metric rows, a small batch's new index edges): a Spark
-        write job for a handful of rows costs seconds of pure job
-        machinery (measured: ~2.5 s/write on the round-5 soak profile)
-        while a driver-side parquet write costs milliseconds.  The file
-        is bit-compatible with the Spark reader (types follow
+        Spark job.  For the per-batch appends of rows the driver already
+        holds (lineage rows, metric rows, a small batch's state delta and
+        new index edges): a Spark write job for a handful of rows costs
+        seconds of pure job machinery (measured: ~2.5 s/write on the
+        round-5 soak profile) while a driver-side parquet write costs
+        milliseconds.  ``rows`` is a list of tuples or a pyarrow Table;
+        the file is bit-compatible with the Spark reader (types follow
         ``arrow_schema``), and the manifest commit is the same atomic
-        ``os.replace``.  Only valid for rows the driver already holds —
-        distributed frames keep using ``append``."""
+        ``os.replace``.  Distributed frames keep using ``append``."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         d = os.path.join(self.path, f"data-{uuid.uuid4().hex}")
         os.makedirs(d, exist_ok=True)
-        cols = list(zip(*rows)) if rows else [[] for _ in arrow_schema]
-        tbl = pa.table(
-            {f.name: pa.array(list(c), type=f.type)
-             for f, c in zip(arrow_schema, cols)}
-        )
+        if isinstance(rows, pa.Table):
+            tbl = rows.select(arrow_schema.names).cast(arrow_schema)
+        else:
+            cols = list(zip(*rows)) if rows else [[] for _ in arrow_schema]
+            tbl = pa.table(
+                {f.name: pa.array(list(c), type=f.type)
+                 for f, c in zip(arrow_schema, cols)}
+            )
         pq.write_table(tbl, os.path.join(d, "part-00000.parquet"))
         cur = self.current()
         snap = Snapshot(
@@ -239,7 +242,12 @@ class SnapshotTable:
         return snap.snapshot_id
 
     # ---------------------------------------------------------------- read
-    def read(self, spark: SparkSession, snapshot_id: int | None = None, schema=None) -> DataFrame:
+    def read(self, spark: SparkSession, snapshot_id: int | None = None, schema=None,
+             partitions: list[int] | None = None) -> DataFrame:
+        """The snapshot's rows (default: current).  ``partitions`` limits
+        each ``partitionBy("p")`` data dir to its existing ``p=<N>``
+        subdirs for those values, so the read lists only them; a dir
+        without that layout is read whole."""
         snaps = self.snapshots()
         if snapshot_id is None:
             snap = snaps[-1] if snaps else None
@@ -260,11 +268,20 @@ class SnapshotTable:
             reader = spark.read
             if schema is not None:
                 reader = reader.schema(schema)
-            return reader.parquet(d)
+            if partitions is None or not any(n.startswith("p=") for n in os.listdir(d)):
+                return reader.parquet(d)
+            # the listed subdirs are named explicitly, with basePath
+            # keeping p a partition column: a listing of every p= dir
+            # is a parallel Spark job per read
+            subdirs = [s for s in (os.path.join(d, f"p={p}") for p in partitions) if os.path.isdir(s)]
+            return reader.option("basePath", d).parquet(*subdirs) if subdirs else None
 
-        out = load(snap.data_dirs[0])
-        for d in snap.data_dirs[1:]:
-            out = out.unionByName(load(d))
+        loads = [df for df in map(load, snap.data_dirs) if df is not None]
+        if not loads:
+            return spark.createDataFrame([], schema)
+        out = loads[0]
+        for df in loads[1:]:
+            out = out.unionByName(df)
         return out
 
     def exists(self) -> bool:

@@ -8,32 +8,33 @@ Replaces the reference's hand-rolled ORC backend
   same two DataFrame calls plus parquet bloom-filter/dictionary options;
   Spark's vectorized parquet reader + row-group statistics replace the
   ~190-line hand-written vectorized ORC point-lookup scan (S2) wholesale.
-- S3/P6/J1 partition-pruned IN-list point lookup (:233-266): expressed as
-  a broadcast left-semi join on the packed key (plus a partition-column
-  filter when the key set is small enough to enumerate partitions),
-  letting Catalyst push the partition filter and min/max skipping down.
+- S3/P6/J1 partition-pruned IN-list point lookup (:233-266, :240-247):
+  the read lists only the ``p=`` dirs the keys can live in; a key set
+  small enough to enumerate filters on IN-lists of its ids and
+  partitions (row-group min/max and bloom skipping push down) and of
+  its packed keys, a larger one matches the packed keys with a
+  broadcast left-semi join (``packing.keyed``).
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.packing import pair_to_long, partition_number
-from ..schemas import OSM_SCHEMA
+from ..functions import packing
+from ..functions.packing import in_list, pair_to_long, partition_number, partition_number_py
+from ..schemas import CODE_TYPES, OSM_COLUMNS, OSM_SCHEMA
 from .catalog import SnapshotTable
 
-# reference Common.scala:30-31 declares pfLimit=150 partition filters and
-# idLimit=4096 pushdown ids; we keep an IN-list enumeration bound in the
-# same spirit (beyond it, the broadcast semi-join alone does the work).
-MAX_ENUMERATED_KEYS = 4096
 MAX_ENUMERATED_PARTITIONS = 150  # reference pfLimit (Common.scala:30)
 
 
 def clustered_writer(writer):
     # partitionBy("p") = reference parity with OrcBackend.scala:283-288's
-    # partitioned write: file LISTING itself prunes on p, so a point
-    # lookup at 10^12 rows never opens footers outside its partitions
+    # partitioned write: a point lookup passes its partition list to
+    # SnapshotTable.read, which lists only those p= dirs, so a lookup at
+    # 10^12 rows never opens footers outside its partitions
     return (
         writer.partitionBy("p")
         .option("parquet.bloom.filter.enabled#id", "true")
@@ -42,14 +43,16 @@ def clustered_writer(writer):
 
 
 def delta_writer(writer):
-    # per-batch DELTA append: same bloom/dictionary skipping, but NO
-    # partitionBy layout — a minutely batch is a handful of rows, and a
-    # dynamic-partition write (shuffle + one dir per p value) costs a
-    # multiple of a straight file write for zero read benefit at that
-    # size (the p COLUMN is still present, so row-group stats and the
-    # p-IN-list filter still prune).  Compaction re-clusters everything
-    # into the partitionBy("p") layout every save_interval batches, so
-    # the steady-state table keeps directory pruning.
+    # per-batch DELTA append of a batch over the driver bound: same
+    # bloom/dictionary skipping, but NO partitionBy layout — a dynamic-
+    # partition write (shuffle + one dir per p value) costs a multiple
+    # of a straight file write (the p COLUMN is still present, so
+    # row-group stats and the p-IN-list filter still prune).  A batch
+    # held on the driver is written by pyarrow instead (append_batch):
+    # the same layout without the bloom filter; its row-group stats
+    # still prune.  Compaction re-clusters everything into the
+    # partitionBy("p") layout with bloom filters every save_interval
+    # batches, so the steady-state table keeps directory pruning.
     return (
         writer.option("parquet.bloom.filter.enabled#id", "true")
         .option("parquet.enable.dictionary", "true")
@@ -90,23 +93,41 @@ class StateTable:
     def init(self, df: DataFrame) -> int:
         return self.table.overwrite(self._cluster(df), writer_conf=clustered_writer)
 
-    def append_batch(self, df: DataFrame, seq: int) -> int:
-        # delta append: p column + in-partition sort, NO shuffle and no
-        # dynamic-partition dirs (see delta_writer); compaction below
-        # folds deltas back into the clustered partitionBy layout
-        delta = df.withColumn(
-            "p", partition_number(F.col("id"), F.col("type"))
-        ).sortWithinPartitions("p", "id", "type")
-        sid = self.table.append(
-            delta, operation="append", summary={"seq": seq},
-            writer_conf=delta_writer,
-        )
+    def append_batch(self, df: DataFrame | pa.Table, seq: int,
+                     spark: SparkSession | None = None) -> int:
+        """Append one batch as a delta: p column + sort on (p, id, type),
+        NO shuffle and no dynamic-partition dirs (see delta_writer).  A
+        DataFrame is written by Spark; a driver-held Arrow table (the
+        batch's OSM columns) is written by pyarrow with no Spark job, and
+        ``spark`` names the session that runs the compaction.
+        Compaction below folds deltas back into the clustered
+        partitionBy layout."""
+        if isinstance(df, pa.Table):
+            if spark is None:
+                raise TypeError("append_batch of an Arrow table needs the spark session")
+            p = [partition_number_py(i, t) for i, t in
+                 zip(df["id"].to_pylist(), df["type"].to_pylist())]
+            delta = df.select([c for c in OSM_COLUMNS if c != "p"]).add_column(
+                0, "p", pa.array(p, pa.int64()))
+            sid = self.table.append_local(
+                delta.sort_by([("p", "ascending"), ("id", "ascending"), ("type", "ascending")]),
+                delta.schema, summary={"seq": seq},
+            )
+        else:
+            spark = df.sparkSession
+            delta = df.withColumn(
+                "p", partition_number(F.col("id"), F.col("type"))
+            ).sortWithinPartitions("p", "id", "type")
+            sid = self.table.append(
+                delta, operation="append", summary={"seq": seq},
+                writer_conf=delta_writer,
+            )
         # the compact snapshot inherits the triggering seq tag: until the
         # lineage commit marker lands this seq is uncommitted, and an
         # untagged compact snapshot would become a bogus rollback target
         # holding the uncommitted rows (crash here -> rerun -> doubles)
         cid = self.table.maybe_compact(
-            df.sparkSession, self.save_interval, self.keep_snapshots,
+            spark, self.save_interval, self.keep_snapshots,
             transform=self._cluster, writer_conf=clustered_writer,
             schema=OSM_SCHEMA, summary={"seq": seq},
         )
@@ -117,8 +138,9 @@ class StateTable:
         df = df.withColumn("p", partition_number(F.col("id"), F.col("type")))
         return df.repartition(F.col("p")).sortWithinPartitions("id", "type")
 
-    def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
-        return self.table.read(spark, snapshot_id, schema=OSM_SCHEMA)
+    def read(self, spark: SparkSession, snapshot_id: int | None = None,
+             partitions: list[int] | None = None) -> DataFrame:
+        return self.table.read(spark, snapshot_id, schema=OSM_SCHEMA, partitions=partitions)
 
     def current_id(self) -> int | None:
         return self.table.current_id()
@@ -131,15 +153,15 @@ class StateTable:
     ) -> DataFrame:
         """All state rows whose packed (id,type) key ∈ ``keys`` (col ``k``).
 
-        Point-lookup join: broadcast left-semi on the packed key.  When
-        the key set is small we additionally enumerate concrete ``id``
-        values into an IN-list filter so Catalyst pushes min/max + bloom
-        skipping into the parquet scan before the join runs (the
-        DataFrame twin of the reference's ORC SearchArgument).
+        A key set small enough to enumerate is collected and looked up
+        by ``fetch_keys`` (IN-list filters that Catalyst pushes into the
+        parquet scan as min/max + bloom skipping, the DataFrame twin of
+        the reference's ORC SearchArgument); a larger one is a broadcast
+        left-semi join on the packed key.
         """
         keys = keys.select("k").distinct()
-        key_rows = keys.limit(MAX_ENUMERATED_KEYS + 1).collect()
-        if len(key_rows) <= MAX_ENUMERATED_KEYS:
+        key_rows = keys.limit(packing.MAX_ENUMERATED_KEYS + 1).collect()
+        if len(key_rows) <= packing.MAX_ENUMERATED_KEYS:
             return self.fetch_keys(spark, [r["k"] for r in key_rows], snapshot_id)
         state = self.read(spark, snapshot_id)
         key_col = pair_to_long(F.col("id"), F.col("type"))
@@ -155,37 +177,30 @@ class StateTable:
     ) -> DataFrame:
         """``fetch_pairs`` with a DRIVER-side packed-key list — zero
         probe jobs (the caller already holds the keys, e.g. from the
-        incremental closure's small path).  Same pushdown: IN-list on
-        id + pfLimit-style partition enumeration + broadcast semi-join.
+        incremental closure's small path).  The read lists only the
+        ``p=`` dirs the keys can live in (up to MAX_ENUMERATED_PARTITIONS
+        of them); up to MAX_ENUMERATED_KEYS keys it filters on IN-lists
+        of the keys' ids and partitions, which push down into the scan.
+        The exact packed-key match is ``packing.keyed``: an IN-list, or a
+        broadcast semi-join beyond MAX_ENUMERATED_KEYS.
         """
-        state = self.read(spark, snapshot_id)
-        key_col = pair_to_long(F.col("id"), F.col("type"))
         uniq = sorted({int(k) for k in key_list})
-        if not uniq:
-            return state.limit(0)
-        keys_df = spark.createDataFrame([(k,) for k in uniq], "k long")
-        if len(uniq) <= MAX_ENUMERATED_KEYS:
-            state = state.filter(F.col("id").isin(sorted({k >> 2 for k in uniq})))
-            # reference pfLimit=150 partition filters (Common.scala:30):
-            # enumerate the partitions the keys can live in so the p=...
-            # DIRECTORY listing prunes before any footer is opened
-            from ..functions.packing import partition_number_py
-            from ..schemas import CODE_TYPES
-
-            # keys with an invalid type code (low bits not 0|1|2) can
-            # never match a state row — they contribute no partition,
-            # which is correct
-            ps = sorted(
-                {
-                    partition_number_py(k >> 2, CODE_TYPES[k & 3])
-                    for k in uniq
-                    if (k & 3) in CODE_TYPES
-                }
-            )
-            if not ps:
-                return state.limit(0)
-            if len(ps) <= MAX_ENUMERATED_PARTITIONS:
-                state = state.filter(F.col("p").isin(ps))
-        return state.join(
-            F.broadcast(keys_df), on=key_col == F.col("k"), how="left_semi"
+        # keys with an invalid type code (low bits not 0|1|2) can never
+        # match a state row — they contribute no partition, which is
+        # correct
+        ps = sorted(
+            {partition_number_py(k >> 2, CODE_TYPES[k & 3]) for k in uniq if (k & 3) in CODE_TYPES}
         )
+        if not ps:
+            return self.read(spark, snapshot_id).limit(0)
+        # reference pfLimit=150 partition filters (Common.scala:30):
+        # enumerate the partitions the keys can live in so the read
+        # lists only their p=... dirs (and row-group stats prune deltas)
+        enumerate_ps = len(ps) <= MAX_ENUMERATED_PARTITIONS
+        state = self.read(spark, snapshot_id, partitions=ps if enumerate_ps else None)
+        if len(uniq) <= packing.MAX_ENUMERATED_KEYS:
+            state = state.filter(in_list("id", sorted({k >> 2 for k in uniq})))
+            if enumerate_ps:
+                state = state.filter(in_list("p", ps))
+        state = state.withColumn("_k", pair_to_long(F.col("id"), F.col("type")))
+        return packing.keyed(state, "_k", uniq).drop("_k")

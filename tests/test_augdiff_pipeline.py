@@ -39,7 +39,10 @@ def test_incremental_closure_paths_agree(spark):
     """The driver-side small-component closure (the minutely fast path,
     reference ComputeIndexLocal shape) and the distributed doubling
     fixpoint must produce identical (new_edges, all_edges) — forced by
-    routing the same batch through both via the size threshold."""
+    routing the same batch through both via the size threshold.  A third
+    leg runs the driver closure with its index probes as broadcast
+    semi-joins (every key set over ``MAX_ENUMERATED_KEYS``)."""
+    from augdiff_pipeline_spark.functions import packing
     from augdiff_pipeline_spark.operators.closure import incremental_closure
 
     base_df = fixtures.base_state_df(spark)
@@ -47,13 +50,23 @@ def test_incremental_closure_paths_agree(spark):
     for seq in (0, 2, 5, 6):  # node/way edits, tombstones, new relations
         batch = fixtures.change_batch_df(spark, seq)
         out = {}
-        for label, thr in (("driver", 200_000), ("distributed", 0)):
-            ne, ae = incremental_closure(index_df, batch, small_component_edges=thr)
-            out[label] = (
-                {(r["a"], r["b"]) for r in ne.collect()},
-                {(r["a"], r["b"]) for r in ae.collect()},
-            )
-        assert out["driver"] == out["distributed"], f"seq {seq}"
+        for label, thr, max_keys in (
+            ("driver", 200_000, packing.MAX_ENUMERATED_KEYS),
+            ("semi-join", 200_000, 0),
+            ("distributed", 0, packing.MAX_ENUMERATED_KEYS),
+        ):
+            with pytest.MonkeyPatch.context() as mp:
+                mp.setattr(packing, "MAX_ENUMERATED_KEYS", max_keys)
+                ne, ae, keys, new_rows = incremental_closure(
+                    index_df, batch, small_component_edges=thr, return_keys=True,
+                    rows=batch.toArrow(),
+                )
+                out[label] = (
+                    {(r["a"], r["b"]) for r in ne.collect()},
+                    {(r["a"], r["b"]) for r in ae.collect()},
+                )
+            assert (new_rows is None) == (label == "distributed"), label
+        assert out["driver"] == out["semi-join"] == out["distributed"], f"seq {seq}"
 
 
 @pytest.fixture(scope="module")
@@ -202,3 +215,58 @@ def test_resume_after_partial_commit(spark, pipeline_run, tmp_path):
     expected_total = len(fixtures.base_state_rows()) + sum(len(v) for v in batches.values())
     assert total == expected_total
     assert sdf.select("id", "type", "version").distinct().count() == total
+
+
+def test_resume_after_crash_between_state_and_index_append(spark, pipeline_run, tmp_path, monkeypatch):
+    """Crash after the driver-written state delta's manifest commit and
+    before the index append: resume rolls the delta back and reruns the
+    batch, leaving byte-identical feature files and the same state and
+    index as the uninterrupted run."""
+    import glob
+    from pathlib import Path
+
+    from augdiff_pipeline_spark.plans.runner import resume_and_run
+
+    root = str(tmp_path)
+    state = StateTable(os.path.join(root, "state"))
+    index = SnapshotTable(os.path.join(root, "index"))
+    log = LineageLog(os.path.join(root, "log"))
+    out_dir = os.path.join(root, "out")
+    base_df = fixtures.base_state_df(spark)
+    state.init(base_df)
+    index.overwrite(transitive_closure(edges_from_rows(base_df)))
+    run_batch(spark, state, index, log, fixtures.change_batch_df(spark, 0), 0, out_dir)
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash before the index append")
+
+    monkeypatch.setattr(index, "append_local", crash)
+    with pytest.raises(RuntimeError, match="crash before the index append"):
+        run_batch(spark, state, index, log, fixtures.change_batch_df(spark, 1), 1, out_dir)
+    monkeypatch.undo()
+    delta = state.table.current()
+    assert delta.operation == "append" and delta.summary["seq"] == 1
+    assert os.listdir(delta.data_dirs[-1]) == ["part-00000.parquet"]  # the pyarrow write
+
+    state = StateTable(os.path.join(root, "state"))
+    index = SnapshotTable(os.path.join(root, "index"))
+    log = LineageLog(os.path.join(root, "log"))
+    batches = fixtures.change_batch_rows()
+    resume_and_run(
+        spark, state, index, log, out_dir,
+        batches={s: (lambda s=s: fixtures.change_batch_df(spark, s)) for s in sorted(batches)},
+    )
+    assert log.committed_seqs(spark) == sorted(batches)
+
+    def files(d, seq):
+        parts = sorted(glob.glob(os.path.join(d, f"seq={seq:09d}", "part-*")))
+        return b"".join(Path(p).read_bytes() for p in parts)
+
+    for seq in sorted(batches):
+        assert files(out_dir, seq) == files(pipeline_run["out_dir"], seq), f"seq {seq}"
+    assert sorted(str(r) for r in state.read(spark).collect()) == sorted(
+        str(r) for r in pipeline_run["state"].read(spark).collect()
+    )
+    assert sorted(tuple(r) for r in index.read(spark, schema=INDEX_SCHEMA).collect()) == sorted(
+        tuple(r) for r in pipeline_run["index"].read(spark, schema=INDEX_SCHEMA).collect()
+    )

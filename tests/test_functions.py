@@ -15,23 +15,51 @@ def rng():
 
 
 def test_packing_parity(spark, rng):
+    """The Column packing and partition expressions equal their scalar
+    twins on every row, boundary ids included: a driver-written state
+    delta takes ``p`` from partition_number_py, and a mismatch would
+    make the ``p IN`` lookup filter drop the row."""
     ids = rng.integers(1, 10**13, 5000)
     types = np.array(["node", "way", "relation"])[rng.integers(0, 3, 5000)]
     df = spark.createDataFrame(pd.DataFrame({"id": ids, "type": types}))
-    out = df.select(
+    edge_ids = [2047, 2048, 2049, 20480, 20481, 2**53 - 1, 2**53, 2**53 + 1, 2**62]
+    edges = spark.createDataFrame(
+        [(i, t) for i in edge_ids for t in ("node", "way", "relation")], "id long, type string"
+    )
+    out = df.unionByName(edges).select(
         "id", "type",
         packing.pair_to_long(F.col("id"), F.col("type")).alias("packed"),
         packing.partition_number(F.col("id"), F.col("type")).alias("p"),
-    ).toPandas()
-    for _, r in out.sample(200, random_state=0).iterrows():
-        assert r["packed"] == packing.pair_to_long_py(r["id"], r["type"])
-        assert r["p"] == packing.partition_number_py(r["id"], r["type"])
+    ).collect()
+    assert len(out) == 5000 + 3 * len(edge_ids)
+    for r in out:
+        assert r["packed"] == packing.pair_to_long_py(r["id"], r["type"]), r
+        assert r["p"] == packing.partition_number_py(r["id"], r["type"]), r
     rt = df.select(
         packing.long_to_id(packing.pair_to_long(F.col("id"), F.col("type"))).alias("id2"),
         packing.long_to_type(packing.pair_to_long(F.col("id"), F.col("type"))).alias("t2"),
         "id", "type",
     ).filter((F.col("id2") != F.col("id")) | (F.col("t2") != F.col("type")))
     assert rt.count() == 0
+
+
+def test_edges_from_rows_py_matches_dataframe(spark):
+    """The driver-side edge twin the small closure probes with equals
+    the DataFrame edges on the fixture, cycle and incidental worlds."""
+    from augdiff_pipeline_spark.operators.closure import edges_from_rows, edges_from_rows_py
+    from augdiff_pipeline_spark.schemas import OSM_SCHEMA
+
+    import test_route_parity as parity
+
+    worlds = parity._worlds()
+    for name in ("fixtures", "cycle", "incidental"):
+        base, batches = worlds[name]
+        df = spark.createDataFrame(base + [r for b in batches.values() for r in b], OSM_SCHEMA)
+        rows = df.toArrow().to_pylist()
+        for self_edges in (True, False):
+            want = sorted((r["a"], r["b"]) for r in edges_from_rows(df, self_edges).collect())
+            assert want, name
+            assert sorted(edges_from_rows_py(rows, self_edges)) == want, (name, self_edges)
 
 
 def test_is_area(spark):

@@ -39,6 +39,84 @@ def test_state_point_lookup_pushes_in_list(spark, tmp_path):
     assert {r["id"] for r in rows} <= {4005 >> 2, 8003 >> 2}
 
 
+def test_state_point_lookup_lists_only_its_partitions(spark, tmp_path, monkeypatch):
+    """A point lookup reads only the p= dirs its keys can live in, and
+    building the read starts no Spark job (no parallel listing of every
+    partition dir of the clustered table).  A key set over
+    ``MAX_ENUMERATED_KEYS`` (a broadcast semi-join) reads the same rows."""
+    import os
+    from urllib.parse import urlparse
+
+    from augdiff_pipeline_spark.functions import packing
+    from augdiff_pipeline_spark.functions.packing import pair_to_long_py, partition_number_py
+
+    state = StateTable(str(tmp_path / "state"))
+    state.init(fixtures.base_state_df(spark))
+    rows = fixtures.base_state_rows()
+    picked = {(r[1], r[2]) for r in rows[::7]}
+    keys = [pair_to_long_py(i, t) for i, t in picked]
+    data_dir = state.table.current().data_dirs[0]
+    allowed = {os.path.join(data_dir, f"p={partition_number_py(i, t)}") for i, t in picked}
+    assert len([n for n in os.listdir(data_dir) if n.startswith("p=")]) > len(allowed)
+
+    sc = spark.sparkContext
+    group = "point-lookup-listing"
+    sc.setJobGroup(group, "fetch_keys")
+    try:
+        fetched = state.fetch_keys(spark, keys)
+        files = fetched.inputFiles()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert files and all(os.path.dirname(urlparse(f).path) in allowed for f in files), files
+    got = {(r["id"], r["type"]) for r in fetched.collect()}
+    assert got == picked
+
+    monkeypatch.setattr(packing, "MAX_ENUMERATED_KEYS", 0)
+    fetched = state.fetch_keys(spark, keys)
+    assert all(os.path.dirname(urlparse(f).path) in allowed for f in fetched.inputFiles())
+    assert {(r["id"], r["type"]) for r in fetched.collect()} == picked
+
+
+def test_driver_state_delta_matches_spark_delta(spark, tmp_path):
+    """A batch appended from a driver-held Arrow table (pyarrow write)
+    reads back equal to the same batch appended by Spark: before and
+    after a compaction, and through a point lookup on the delta."""
+    from augdiff_pipeline_spark.fixtures import _node_row, _rel_row, _tombstone, _ts, _way_row
+    from augdiff_pipeline_spark.functions.packing import pair_to_long_py
+    from augdiff_pipeline_spark.schemas import OSM_SCHEMA
+    from augdiff_pipeline_spark.sources.state import clustered_writer
+
+    batch_rows = [
+        _node_row(2048, 3, _ts(5, 30), lon=-122.4194155, lat=37.7749295,
+                  tags={"amenity": "cafe", "name": "Zoë"}),
+        _node_row(20481, 1, _ts(5, 31), lon=0.0000001, lat=-0.0000001),
+        _way_row(2049, 2, _ts(5, 32), nds=[2048, 20481], tags={"highway": "path"}),
+        _rel_row(2**53 + 1, 1, _ts(5, 33), members=[("way", 2049, "outer"), ("node", 2048, "")],
+                 tags={"type": "multipolygon"}),
+        _tombstone(20480, "way", 4, _ts(5, 34)),
+    ]
+    batch_df = spark.createDataFrame(batch_rows, OSM_SCHEMA)
+    keys = [pair_to_long_py(r[1], r[2]) for r in batch_rows]
+
+    def reads(state):
+        return (sorted(str(r) for r in state.read(spark).collect()),
+                sorted(str(r) for r in state.fetch_keys(spark, keys).collect()))
+
+    out = {}
+    for route, batch in (("spark", batch_df), ("driver", batch_df.toArrow())):
+        state = StateTable(str(tmp_path / route))
+        state.init(fixtures.base_state_df(spark))
+        state.append_batch(batch, seq=1, spark=spark)
+        before = reads(state)
+        state.table.compact(spark, transform=state._cluster, writer_conf=clustered_writer,
+                            schema=OSM_SCHEMA)
+        out[route] = (before, reads(state))
+    assert len(out["driver"][0][1]) == len(batch_rows)
+    assert out["driver"] == out["spark"]
+
+
 def test_cell_equi_join_broadcasts_covers(spark):
     layer = build_polygon_layer(spark, fixtures.base_state_df(spark), max_res=14)
     images = fixtures.image_df(spark, 500).select("image_id", "lon", "lat")

@@ -7,7 +7,7 @@ on executors, once per partition of whole root downsets, feature file
 written by Spark).  Closing every batch on the distributed path
 (``small_component_edges=0``) forces the grouped route; its leg is named
 "dataframe".  A third leg keeps the closure small but makes the scope
-collect overflow (``SMALL_COMPONENT_EDGES=0`` in the plan), which is
+collect overflow (``augdiff._driver_scope`` returns None), which is
 what a large scope under a small closure hits: the grouped route then
 runs after the driver-side closure and its driver-side index append.
 The same worlds run through all three and must leave byte-identical
@@ -151,7 +151,7 @@ def routes(spark, tmp_path_factory):
                 mp.setattr(augdiff, "incremental_closure", functools.partial(
                     closure.incremental_closure, small_component_edges=0))
             elif route == "mixed":
-                mp.setattr(augdiff, "SMALL_COMPONENT_EDGES", 0)
+                mp.setattr(augdiff, "_driver_scope", lambda batch_rows, fetched: None)
             for name, (base_rows, batches) in _worlds().items():
                 root = str(tmp_path_factory.mktemp(f"{route}-{name}"))
                 out[route, name] = _run_world(spark, root, base_rows, batches)
@@ -180,13 +180,13 @@ def test_routes_write_identical_outputs(routes, world):
 
 
 def test_driver_route_job_count(routes):
-    """Every fixture and soak batch on the driver route runs at most 20
-    Spark jobs end to end, compacting batches included (closure probe,
-    scope collect, state append and compaction, lineage); the grouped
-    route runs several times that, and at most 99 (a quarter over the
-    79 measured)."""
+    """Every fixture and soak batch on the driver route runs at most 10
+    Spark jobs end to end (a quarter over the 8 measured), compacting
+    batches included (batch collect, two index probes, scope collect,
+    state compaction); the grouped route runs several times that, and
+    at most 99 (a quarter over the 79 measured)."""
     drv, dfr = routes["driver", "fixtures"], routes["dataframe", "fixtures"]
-    assert max(drv["jobs"].values()) <= 20, drv["jobs"]
+    assert max(drv["jobs"].values()) <= 10, drv["jobs"]
     assert dfr["jobs"][0] > 2 * drv["jobs"][0], (drv["jobs"], dfr["jobs"])
     assert max(dfr["jobs"].values()) <= 99, dfr["jobs"]
 
