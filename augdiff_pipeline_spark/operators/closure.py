@@ -227,13 +227,9 @@ def _small_closure(index: DataFrame, rows, bound: int):
     return new_set, all_set, update_keys
 
 
-def incremental_closure(
-    index: DataFrame, change_rows: DataFrame,
-    small_component_edges: int = SMALL_COMPONENT_EDGES,
-    return_keys: bool = False,
-    rows=None,
-) -> tuple:
-    """(new_edges, all_edges[, fetch_keys]) for one change batch.
+def incremental_closure(index: DataFrame, change_rows: DataFrame, rows) -> tuple:
+    """(new_edges, all_edges, fetch_keys, new_edge_rows) for one change
+    batch.
 
     all_edges = closure of (batch edges ∪ 2-hop existing edges) — the
     edge set the fetch step needs; new_edges = all_edges \\ existing,
@@ -242,53 +238,42 @@ def incremental_closure(
     mirroring the reference.
 
     Size-routed: a batch whose rows, edges and 2-hop probes each fit
-    ``small_component_edges`` is closed driver-side (the overwhelmingly
-    common minutely case — the reference's ComputeIndexLocal.scala:49-89
-    is exactly this shape); the distributed doubling fixpoint handles
-    oversized components.  Both paths produce identical edge sets
-    (fixture-tested).
+    ``SMALL_COMPONENT_EDGES`` (read at call time) is closed driver-side
+    (the overwhelmingly common minutely case — the reference's
+    ComputeIndexLocal.scala:49-89 is exactly this shape); the
+    distributed doubling fixpoint handles oversized components.  Both
+    paths produce identical edge sets (fixture-tested).
 
     ``rows`` is the whole batch as a driver-held Arrow table (run_batch
-    collects it once), or None for a batch not held on the driver, which
-    takes the distributed fixpoint.
-
-    ``return_keys=True`` makes the return a 4-tuple
-    (new_edges, all_edges, fetch_keys, new_edge_rows): ``fetch_keys`` is
-    the packed fetch-key set (update keys ∪ all_edges endpoints —
-    exactly ``needed_pairs``) as a sorted Python list, and
-    ``new_edge_rows`` the new-edge pair list — both None when the
-    distributed path ran.  The driver-held keys and new edges let the
-    caller fetch state and append the index delta with no probe or
-    write job.
+    collects it once).  ``fetch_keys`` is the packed fetch-key set
+    (update keys ∪ all_edges endpoints — exactly ``needed_pairs``) as a
+    sorted Python list, and ``new_edge_rows`` the new-edge pair list —
+    both None when the distributed path ran.  The driver-held keys let
+    the caller fetch state with no probe job.
     """
-    small = None if rows is None else _small_closure(index, rows, small_component_edges)
+    small = _small_closure(index, rows, SMALL_COMPONENT_EDGES)
     if small is not None:
         new_set, all_set, update_keys = small
         spark = change_rows.sparkSession
         new_edges = spark.createDataFrame(new_set, "a long, b long")
         all_edges = spark.createDataFrame(all_set, "a long, b long")
-        if return_keys:
-            keys = sorted(update_keys | {a for a, _ in all_set} | {b for _, b in all_set})
-            return new_edges, all_edges, keys, new_set
-        return new_edges, all_edges
+        keys = sorted(update_keys | {a for a, _ in all_set} | {b for _, b in all_set})
+        return new_edges, all_edges, keys, new_set
 
     # Oversize route: checkpoint the probe inputs before the fixpoint —
     # without this the two-hop semi-join plan re-executes once per
     # consumer (the fixpoint seed AND the new-edges anti-join), tripling
-    # the probe's work.
-    row_edges = edges_from_rows(change_rows, include_node_self_edges=True)
-    existing = two_hop_edges(index, row_edges.select(F.col("b").alias("a")))
-    row_edges = row_edges.localCheckpoint(eager=True)
-    existing = existing.localCheckpoint(eager=True)
+    # the probe's work.  The row edges come first, so the probe reads
+    # their checkpoint instead of scanning the batch again.
+    row_edges = edges_from_rows(change_rows, include_node_self_edges=True).localCheckpoint(eager=True)
+    existing = two_hop_edges(index, row_edges.select(F.col("b").alias("a"))).localCheckpoint(eager=True)
     closed = transitive_closure(row_edges.unionByName(existing))
     new_edges = closed.join(existing.select("a", "b"), on=["a", "b"], how="left_anti")
     # endpoints of self-loop edges still matter for the fetch set:
     all_edges = closed.unionByName(
         row_edges.filter(F.col("a") == F.col("b")).select("a", "b")
     ).distinct()
-    if return_keys:
-        return new_edges, all_edges, None, None  # too big for driver-side
-    return new_edges, all_edges
+    return new_edges, all_edges, None, None
 
 
 def needed_pairs(change_rows: DataFrame, all_edges: DataFrame) -> DataFrame:

@@ -6,8 +6,7 @@ rest of the batch; both run the same history and render Python
 (history.all_histories → render.feature_lines_py), on the whole scope or
 on partitions of it:
 
-  change batch ── ONE collect under the closure bound: the batch rows
-                  stay on the driver (over the bound: checkpoint)
+  change batch ── ONE Arrow collect: the batch rows stay on the driver
                    │
   incremental closure: row edges in Python; the 2-hop index fetch as
     two key probes (a IN touched → containers, b IN containers;
@@ -16,17 +15,21 @@ on partitions of it:
        small closure (driver route)     │  oversize batch, closure or
                                         │    scope (grouped route)
        ─────────────────────────────    │  ─────────────────────────────────
-       point lookup of the fetch keys:  │  needed pairs → semi-join lookup
-         only their p= dirs, IN-lists   │  scope rows' own containment
-       ONE Arrow collect of the fetched │    edges → closure → roots; each
-         rows (+ held batch, in_batch)  │    row tagged with every root
-       all_histories → feature_lines_py │    above it, hashed on the root
-         on the driver                  │  per partition (whole downsets):
-       feature file written from the    │    all_histories → feature_lines_py
-         driver                         │  feature file written by Spark
+       point lookup of the fetch keys:  │  (distributed fixpoint: its new
+         only their p= dirs, IN-lists   │    edges collected once)
+       ONE Arrow collect of the fetched │  needed pairs → semi-join lookup
+         rows (+ held batch, in_batch)  │  scope rows' own containment
+       all_histories → feature_lines_py │    edges → closure → roots; each
+         on the driver                  │    row tagged with every root
+                                        │    above it, hashed on the root
+                                        │  per partition (whole downsets):
+                                        │    all_histories → feature_lines_py
+                                        │  ONE Arrow collect of the deduped
+                                        │    lines, sorted on the driver
                    │
-       state append (held batch: pyarrow write; else Spark) → index
-         append → lineage commit marker
+       every delta written from the driver: feature file (_write_lines)
+         → state delta (pyarrow) → index delta (pyarrow) → lineage
+         commit marker
 
 The driver route is the reference's own shape (RowsToJson.scala:104-388
 builds histories and geometries for the batch scope in driver memory).
@@ -61,43 +64,32 @@ from ..sources.state import StateTable
 from .lineage import LineageLog, StageTimer
 
 
-class _NullTimer:
-    def time(self, stage: str, record_to_log: bool = True):
-        import contextlib
-
-        return contextlib.nullcontext()
-
-
 def compute_batch_features(
     spark: SparkSession,
     state: StateTable,
     index: SnapshotTable,
     batch_df: DataFrame,
-    batch_rows: pa.Table | None,
-    timer=None,
-) -> tuple:
-    """(features, new_edges_df, new_edge_rows) for one change batch (no
-    writes).  ``batch_rows`` is ``batch_df`` held on the driver, or None
-    for a batch over the closure bound.  ``features`` is the ordered
-    list of feature lines when the driver route ran, else a DataFrame
-    (etype, id, sub, feature); ``new_edge_rows`` is the driver-held
-    new-edge list of the small closure, else None.
+    batch_rows: pa.Table,
+    timer: StageTimer,
+) -> tuple[list[str], list[tuple[int, int]]]:
+    """(feature lines in sink order, new index edges) for one change
+    batch (no writes).  ``batch_rows`` is ``batch_df`` held on the
+    driver.
 
-    ``timer`` (a lineage.StageTimer) splits the diff into closure /
-    histories / render sub-stages in the metrics table — the per-batch
-    latency breakdown a minutely deployment watches.
+    ``timer`` splits the diff into closure / histories / render
+    sub-stages in the metrics table — the per-batch latency breakdown a
+    minutely deployment watches.
     """
-    timer = timer or _NullTimer()
     with timer.time("closure"):
         index_df = index.read(spark, schema=INDEX_SCHEMA)
         new_edges, all_edges, fetch_keys, new_edge_rows = incremental_closure(
-            index_df, batch_df, return_keys=True, rows=batch_rows
+            index_df, batch_df, batch_rows
         )
         if new_edge_rows is None:
-            # distributed path: materialize before the anti-join plan is
-            # consumed twice (index append + lineage).  The small path's
-            # new_edges is a local relation — already materialized.
-            new_edges = new_edges.localCheckpoint(eager=True)
+            # distributed fixpoint: its new edges come to the driver in
+            # one collect, for the index append and its lineage count
+            tbl = new_edges.toArrow()
+            new_edge_rows = sorted(zip(tbl["a"].to_pylist(), tbl["b"].to_pylist()))
     with timer.time("histories"):
         if fetch_keys is not None:
             fetched = state.fetch_keys(spark, fetch_keys)
@@ -109,22 +101,19 @@ def compute_batch_features(
 
     with timer.time("render"):
         if scope is not None:
-            lines = [line for *_, line in render.feature_lines_py(*hists)]
-            return lines, new_edges, new_edge_rows
+            return [line for *_, line in render.feature_lines_py(*hists)], new_edge_rows
         rows = (
             batch_df.select(*OSM_COLUMNS).withColumn("in_batch", F.lit(True))
             .unionByName(fetched.select(*OSM_COLUMNS).withColumn("in_batch", F.lit(False)))
         )
-        feats = _grouped_features(rows)
-    return feats, new_edges, new_edge_rows
+        return _grouped_features(rows), new_edge_rows
 
 
 def _driver_scope(batch_rows: pa.Table, fetched: DataFrame) -> list[dict] | None:
     """The driver route's scope rows (``in_batch`` tagged), or None when
     the scope overflows the closure bound and takes the grouped route.
-    The closure was small, so the batch rows are on the driver and the
-    scope they key is small too: ONE Arrow collect of the fetched rows
-    under the rest of the bound."""
+    The closure was small, so the scope its keys fetch is small too:
+    ONE Arrow collect of the fetched rows under the rest of the bound."""
     room = closure.SMALL_COMPONENT_EDGES - batch_rows.num_rows
     if room < 0:
         return None
@@ -138,10 +127,11 @@ def _driver_scope(batch_rows: pa.Table, fetched: DataFrame) -> list[dict] | None
     ]
 
 
-def _grouped_features(rows: DataFrame) -> DataFrame:
-    """DataFrame[etype, id, sub, feature] of a scope too large for the
-    driver: the driver route's Python, once per partition of complete
-    root downsets (closure.downset_partitions)."""
+def _grouped_features(rows: DataFrame) -> list[str]:
+    """Feature lines in sink order of a scope too large for the driver:
+    the driver route's Python, once per partition of complete root
+    downsets (closure.downset_partitions).  Only the deduplicated lines
+    come to the driver, in one Arrow collect."""
     schema = pa.schema([("etype", pa.string()), ("id", pa.int64()),
                         ("sub", pa.int32()), ("feature", pa.string())])
 
@@ -155,14 +145,18 @@ def _grouped_features(rows: DataFrame) -> DataFrame:
             yield pa.RecordBatch.from_pylist([dict(zip(schema.names, f)) for f in feats], schema=schema)
 
     # an entity under roots of two partitions renders identically in both
-    return downset_partitions(rows).mapInArrow(
+    tbl = downset_partitions(rows).mapInArrow(
         kernel, "etype string, id long, sub int, feature string"
-    ).dropDuplicates(["etype", "id", "sub"])
+    ).dropDuplicates(["etype", "id", "sub"]).toArrow()
+    order = {"node": 0, "way": 1, "relation": 2}
+    feats = zip(tbl["etype"].to_pylist(), tbl["id"].to_pylist(),
+                tbl["sub"].to_pylist(), tbl["feature"].to_pylist())
+    return [f for *_, f in sorted(feats, key=lambda r: (order[r[0]], r[1], r[2]))]
 
 
 def _write_lines(path: str, lines: list[str]) -> None:
-    """The driver route's feature file, in the Spark text writer's
-    ``part-*`` layout.  Like the writer's overwrite mode, the directory
+    """The batch's feature file (both routes), in the Spark text
+    writer's ``part-*`` layout.  Like its overwrite mode, the directory
     of any earlier attempt is replaced first; the file is written under
     a hidden temp name inside it (ignored by ``part-*`` readers and
     partition discovery, deleted by the next attempt) and moved in with
@@ -193,74 +187,35 @@ def run_batch(
     LineageLog's own constructor knobs — tuning any table's cadence no
     longer silently leaves the others on the module constants."""
     timer = StageTimer(log, spark, seq)
-    # ONE collect holds a batch under the closure's bound on the driver
-    # for the whole batch: closure probes, scope, state append.  The
-    # DataFrame the grouped route needs is a local relation over it (no
-    # job); a batch over the bound is checkpointed instead.
-    batch_rows = batch_df.limit(closure.SMALL_COMPONENT_EDGES + 1).toArrow()
-    if batch_rows.num_rows <= closure.SMALL_COMPONENT_EDGES:
-        batch_df = spark.createDataFrame(batch_rows, schema=batch_df.schema)
-    else:
-        batch_rows, batch_df = None, batch_df.localCheckpoint(eager=True)
+    # ONE collect holds the batch on the driver for the whole batch:
+    # closure probes, scope, state append.  The DataFrame the closure's
+    # distributed fixpoint and the grouped route read is a local
+    # relation over it, checkpointed lazily: the driver route never
+    # scans it (no job), and the other routes scan it several times,
+    # where a bare local relation would ship every row with each job.
+    batch_rows = batch_df.toArrow()
+    batch_df = spark.createDataFrame(batch_rows, schema=batch_df.schema).localCheckpoint(eager=False)
 
     with timer.time("diff"):
-        feats, new_edges, new_edge_rows = compute_batch_features(
-            spark, state, index, batch_df, batch_rows, timer=timer
+        lines, new_edge_rows = compute_batch_features(
+            spark, state, index, batch_df, batch_rows, timer
         )
-        with timer.time("emit"):
-            if isinstance(feats, list):
-                part_counts = [{"partition_id": -1, "row_count": len(feats)}]
-            else:
-                feats = feats.localCheckpoint(eager=True)
-                # n_feats and the per-partition lineage rows come from ONE
-                # aggregation over the checkpoint (was two separate jobs)
-                part_counts = (
-                    feats.groupBy(F.spark_partition_id().alias("partition_id"))
-                    .agg(F.count(F.lit(1)).alias("row_count"))
-                    .collect()
-                )
-            n_feats = sum(r["row_count"] for r in part_counts)
 
     path = os.path.join(out_dir, f"seq={seq:09d}")
     with timer.time("write_features"):
-        if isinstance(feats, list):
-            _write_lines(path, feats)
-        else:
-            # one output partition anyway (line-delimited GeoJSON
-            # sequence file) — sort WITHIN it instead of a global
-            # orderBy, which would add a range-partitioner sampling pass
-            ordered = feats.withColumn(
-                "ord", F.when(F.col("etype") == "node", 0).when(F.col("etype") == "way", 1).otherwise(2)
-            ).coalesce(1).sortWithinPartitions("ord", "id", "sub").select("feature")
-            ordered.write.mode("overwrite").text(path)
-    log.record_stage_counts(seq, "features", part_counts)
+        _write_lines(path, lines)
+    log.record_stage(spark, seq, "features", len(lines))
 
     with timer.time("state_append"):
-        if batch_rows is None:
-            state_snap = state.append_batch(batch_df, seq)
-        else:
-            state_snap = state.append_batch(batch_rows, seq, spark)
-    if batch_rows is not None:
-        log.record_stage_counts(
-            seq, "state_append",
-            [{"partition_id": -1, "row_count": batch_rows.num_rows}],
-            output_snapshot=state_snap,
-        )
-    else:
-        log.record_stage(spark, seq, "state_append", batch_df, output_snapshot=state_snap)
+        state_snap = state.append_batch(batch_rows, seq, spark)
+    log.record_stage(spark, seq, "state_append", batch_rows.num_rows, output_snapshot=state_snap)
 
     with timer.time("index_append"):
-        if new_edge_rows is not None:
-            # small-closure path: the new edges are a driver-held list —
-            # write them driver-side (no Spark job), and the lineage row
-            # count comes for free
-            idx_snap = index.append_local(
-                new_edge_rows,
-                pa.schema([pa.field("a", pa.int64()), pa.field("b", pa.int64())]),
-                summary={"seq": seq},
-            )
-        else:
-            idx_snap = index.append(new_edges, summary={"seq": seq})
+        idx_snap = index.append_local(
+            new_edge_rows,
+            pa.schema([pa.field("a", pa.int64()), pa.field("b", pa.int64())]),
+            summary={"seq": seq},
+        )
         # compaction BEFORE the commit marker must carry this seq's tag,
         # or a crash here would freeze the uncommitted edges into an
         # untagged (= treated-as-committed) rollback target
@@ -270,19 +225,12 @@ def run_batch(
         )
         if cid is not None:
             idx_snap = cid
-    if new_edge_rows is not None:
-        log.record_stage_counts(
-            seq, "index_append",
-            [{"partition_id": -1, "row_count": len(new_edge_rows)}],
-            output_snapshot=idx_snap,
-        )
-    else:
-        log.record_stage(spark, seq, "index_append", new_edges, output_snapshot=idx_snap)
+    log.record_stage(spark, seq, "index_append", len(new_edge_rows), output_snapshot=idx_snap)
 
-    log.record_metric(spark, seq, "diff", "features", float(n_feats))
+    log.record_metric(spark, seq, "diff", "features", float(len(lines)))
     with timer.time("commit", record_to_log=False):
         log.commit_seq(spark, seq, {"state": state_snap, "index": idx_snap})
     return {
-        "seq": seq, "features": n_feats, "state_snapshot": state_snap,
+        "seq": seq, "features": len(lines), "state_snapshot": state_snap,
         "index_snapshot": idx_snap, "path": path, "stage_sec": timer.timings,
     }

@@ -1,7 +1,9 @@
 """Per-partition lineage + metrics tables (north-rule requirement).
 
 Every batch commit records, per stage, the input/output snapshot ids and
-per-partition row counts; ``metrics`` records scalar stage measurements.
+the stage's row count as one partition -1 row (a batch is held on the
+driver, so every count is a driver-side length); ``metrics`` records
+scalar stage measurements.
 Resume logic reads the lineage table to find the last fully-committed
 sequence number and rolls half-committed table snapshots back — this is
 the atomicity the reference lacks (its JSON write, Postgres index write
@@ -13,7 +15,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import LINEAGE_SCHEMA, METRICS_SCHEMA
@@ -110,25 +112,13 @@ class LineageLog:
         spark: SparkSession,
         seq: int,
         stage: str,
-        df: DataFrame | None = None,
+        row_count: int | None = None,
         input_snapshot: int | None = None,
         output_snapshot: int | None = None,
     ) -> None:
-        """Buffer per-partition row counts of ``df`` for (seq, stage)."""
-        if df is not None:
-            counts = (
-                df.groupBy(F.spark_partition_id().alias("partition_id"))
-                .agg(F.count(F.lit(1)).alias("row_count"))
-                .collect()
-            )
-            for r in counts:
-                self._pending_lineage.append(
-                    (seq, stage, r["partition_id"], input_snapshot, output_snapshot, r["row_count"])
-                )
-            if not counts:
-                self._pending_lineage.append((seq, stage, -1, input_snapshot, output_snapshot, 0))
-        else:
-            self._pending_lineage.append((seq, stage, -1, input_snapshot, output_snapshot, None))
+        """Buffer (seq, stage)'s one partition -1 row: ``row_count``
+        rows, counted by the caller on the driver."""
+        self._pending_lineage.append((seq, stage, -1, input_snapshot, output_snapshot, row_count))
 
     def record_stage_counts(
         self,

@@ -84,14 +84,14 @@ class SnapshotTable:
                      summary: dict | None = None) -> int:
         """Append DRIVER-LOCAL rows as one parquet file via pyarrow — no
         Spark job.  For the per-batch appends of rows the driver already
-        holds (lineage rows, metric rows, a small batch's state delta and
+        holds (lineage rows, metric rows, every batch's state delta and
         new index edges): a Spark write job for a handful of rows costs
         seconds of pure job machinery (measured: ~2.5 s/write on the
         round-5 soak profile) while a driver-side parquet write costs
         milliseconds.  ``rows`` is a list of tuples or a pyarrow Table;
         the file is bit-compatible with the Spark reader (types follow
         ``arrow_schema``), and the manifest commit is the same atomic
-        ``os.replace``.  Distributed frames keep using ``append``."""
+        ``os.replace``."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -282,7 +282,10 @@ class SnapshotTable:
         out = loads[0]
         for df in loads[1:]:
             out = out.unionByName(df)
-        return out
+        # a partitionBy dir yields its partition column last, a flat
+        # dir (a driver-written delta) in file order: the schema's order
+        # keeps a read's columns independent of which dirs it loads
+        return out if schema is None else out.select(*schema.names)
 
     def exists(self) -> bool:
         return os.path.exists(self.manifest_path)

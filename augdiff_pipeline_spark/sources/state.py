@@ -14,6 +14,9 @@ Replaces the reference's hand-rolled ORC backend
   partitions (row-group min/max and bloom skipping push down) and of
   its packed keys, a larger one matches the packed keys with a
   broadcast left-semi join (``packing.keyed``).
+- per-batch deltas are appended from the driver-held batch by pyarrow
+  (``append_batch``); every ``save_interval`` batches the compaction
+  re-clusters them into the partitionBy layout above.
 """
 
 from __future__ import annotations
@@ -38,23 +41,6 @@ def clustered_writer(writer):
     return (
         writer.partitionBy("p")
         .option("parquet.bloom.filter.enabled#id", "true")
-        .option("parquet.enable.dictionary", "true")
-    )
-
-
-def delta_writer(writer):
-    # per-batch DELTA append of a batch over the driver bound: same
-    # bloom/dictionary skipping, but NO partitionBy layout — a dynamic-
-    # partition write (shuffle + one dir per p value) costs a multiple
-    # of a straight file write (the p COLUMN is still present, so
-    # row-group stats and the p-IN-list filter still prune).  A batch
-    # held on the driver is written by pyarrow instead (append_batch):
-    # the same layout without the bloom filter; its row-group stats
-    # still prune.  Compaction re-clusters everything into the
-    # partitionBy("p") layout with bloom filters every save_interval
-    # batches, so the steady-state table keeps directory pruning.
-    return (
-        writer.option("parquet.bloom.filter.enabled#id", "true")
         .option("parquet.enable.dictionary", "true")
     )
 
@@ -93,35 +79,21 @@ class StateTable:
     def init(self, df: DataFrame) -> int:
         return self.table.overwrite(self._cluster(df), writer_conf=clustered_writer)
 
-    def append_batch(self, df: DataFrame | pa.Table, seq: int,
-                     spark: SparkSession | None = None) -> int:
-        """Append one batch as a delta: p column + sort on (p, id, type),
-        NO shuffle and no dynamic-partition dirs (see delta_writer).  A
-        DataFrame is written by Spark; a driver-held Arrow table (the
-        batch's OSM columns) is written by pyarrow with no Spark job, and
-        ``spark`` names the session that runs the compaction.
-        Compaction below folds deltas back into the clustered
-        partitionBy layout."""
-        if isinstance(df, pa.Table):
-            if spark is None:
-                raise TypeError("append_batch of an Arrow table needs the spark session")
-            p = [partition_number_py(i, t) for i, t in
-                 zip(df["id"].to_pylist(), df["type"].to_pylist())]
-            delta = df.select([c for c in OSM_COLUMNS if c != "p"]).add_column(
-                0, "p", pa.array(p, pa.int64()))
-            sid = self.table.append_local(
-                delta.sort_by([("p", "ascending"), ("id", "ascending"), ("type", "ascending")]),
-                delta.schema, summary={"seq": seq},
-            )
-        else:
-            spark = df.sparkSession
-            delta = df.withColumn(
-                "p", partition_number(F.col("id"), F.col("type"))
-            ).sortWithinPartitions("p", "id", "type")
-            sid = self.table.append(
-                delta, operation="append", summary={"seq": seq},
-                writer_conf=delta_writer,
-            )
+    def append_batch(self, rows: pa.Table, seq: int, spark: SparkSession) -> int:
+        """Append one driver-held batch (an Arrow table of its OSM
+        columns) as a delta, written by pyarrow with no Spark job: p
+        column + sort on (p, id, type), no partitionBy dirs and no bloom
+        filter (row-group stats on p and id still prune).  ``spark``
+        runs the compaction below, which folds deltas back into the
+        clustered partitionBy layout with its bloom filters."""
+        p = [partition_number_py(i, t) for i, t in
+             zip(rows["id"].to_pylist(), rows["type"].to_pylist())]
+        delta = rows.select([c for c in OSM_COLUMNS if c != "p"]).add_column(
+            0, "p", pa.array(p, pa.int64()))
+        sid = self.table.append_local(
+            delta.sort_by([("p", "ascending"), ("id", "ascending"), ("type", "ascending")]),
+            delta.schema, summary={"seq": seq},
+        )
         # the compact snapshot inherits the triggering seq tag: until the
         # lineage commit marker lands this seq is uncommitted, and an
         # untagged compact snapshot would become a bogus rollback target

@@ -2,14 +2,18 @@
 golden-compared against the independent Python oracle, plus closure
 parity and crash-resume."""
 
+import glob
 import json
 import os
+import shutil
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from augdiff_pipeline_spark import fixtures
 from augdiff_pipeline_spark.operators.closure import edges_from_rows, transitive_closure
+from augdiff_pipeline_spark.plans import augdiff
 from augdiff_pipeline_spark.plans.augdiff import run_batch
 from augdiff_pipeline_spark.plans.lineage import LineageLog
 from augdiff_pipeline_spark.schemas import INDEX_SCHEMA
@@ -43,7 +47,7 @@ def test_incremental_closure_paths_agree(spark):
     leg runs the driver closure with its index probes as broadcast
     semi-joins (every key set over ``MAX_ENUMERATED_KEYS``)."""
     from augdiff_pipeline_spark.functions import packing
-    from augdiff_pipeline_spark.operators.closure import incremental_closure
+    from augdiff_pipeline_spark.operators import closure
 
     base_df = fixtures.base_state_df(spark)
     index_df = transitive_closure(edges_from_rows(base_df))
@@ -57,9 +61,9 @@ def test_incremental_closure_paths_agree(spark):
         ):
             with pytest.MonkeyPatch.context() as mp:
                 mp.setattr(packing, "MAX_ENUMERATED_KEYS", max_keys)
-                ne, ae, keys, new_rows = incremental_closure(
-                    index_df, batch, small_component_edges=thr, return_keys=True,
-                    rows=batch.toArrow(),
+                mp.setattr(closure, "SMALL_COMPONENT_EDGES", thr)
+                ne, ae, keys, new_rows = closure.incremental_closure(
+                    index_df, batch, batch.toArrow()
                 )
                 out[label] = (
                     {(r["a"], r["b"]) for r in ne.collect()},
@@ -194,7 +198,7 @@ def test_resume_after_partial_commit(spark, pipeline_run, tmp_path):
     run_batch(spark, state, index, log, fixtures.change_batch_df(spark, 0), 0, out_dir)
 
     # simulate crash mid-batch-1: state appended but no lineage commit
-    state.append_batch(fixtures.change_batch_df(spark, 1), 1)
+    state.append_batch(fixtures.change_batch_df(spark, 1).toArrow(), 1, spark)
     from augdiff_pipeline_spark.plans.runner import resume_and_run
 
     results = resume_and_run(
@@ -270,3 +274,117 @@ def test_resume_after_crash_between_state_and_index_append(spark, pipeline_run, 
     assert sorted(tuple(r) for r in index.read(spark, schema=INDEX_SCHEMA).collect()) == sorted(
         tuple(r) for r in pipeline_run["index"].read(spark, schema=INDEX_SCHEMA).collect()
     )
+
+
+CRASH_SEQS = (0, 1, 2)
+
+
+def _copy_world(src, dst):
+    """A copy of an initialized world whose manifests name the copy's
+    own data dirs."""
+    shutil.copytree(src, dst)
+    for m in glob.glob(os.path.join(dst, "*", "_meta", "snapshots.json")):
+        Path(m).write_text(Path(m).read_text().replace(src, dst))
+
+
+def _open_world(root):
+    """State, index and lineage of a world, on a cadence at which batch 1
+    compacts state and index, batch 1 flushes metrics and batch 2
+    compacts lineage."""
+    return (StateTable(os.path.join(root, "state"), save_interval=2, keep_snapshots=3),
+            SnapshotTable(os.path.join(root, "index")),
+            LineageLog(os.path.join(root, "log"), save_interval=2, keep_snapshots=3))
+
+
+def _world_outputs(spark, root):
+    state, index, _ = _open_world(root)
+    files = {}
+    for seq in CRASH_SEQS:
+        parts = sorted(glob.glob(os.path.join(root, "out", f"seq={seq:09d}", "part-*")))
+        files[seq] = b"".join(Path(p).read_bytes() for p in parts)
+    return {
+        "files": files,
+        "state": sorted(str(r) for r in state.read(spark).collect()),
+        "index": sorted(tuple(r) for r in index.read(spark, schema=INDEX_SCHEMA).collect()),
+    }
+
+
+@pytest.fixture(scope="module")
+def crash_world(spark, tmp_path_factory):
+    """One initialized world, and the outputs of its uninterrupted run
+    over batches 0-2."""
+    root = str(tmp_path_factory.mktemp("crash") / "world")
+    state, index, _ = _open_world(root)
+    base_df = fixtures.base_state_df(spark)
+    state.init(base_df)
+    index.overwrite(transitive_closure(edges_from_rows(base_df)))
+    ref = root + "-uninterrupted"
+    _copy_world(root, ref)
+    state, index, log = _open_world(ref)
+    for seq in CRASH_SEQS:
+        run_batch(spark, state, index, log, fixtures.change_batch_df(spark, seq), seq, ref + "/out")
+    return root, _world_outputs(spark, ref)
+
+
+class _Crash(Exception):
+    pass
+
+
+# every write of run_batch, in order: (crash seq, the object that
+# writes, its method); the crash comes right after the write lands.
+# The index delta leg runs on the grouped route, whose new edges come
+# from the distributed fixpoint.
+CRASH_POINTS = {
+    "features": (1, lambda s, i, l: augdiff, "_write_lines"),
+    "state_delta": (1, lambda s, i, l: s.table, "append_local"),
+    "state_compaction": (1, lambda s, i, l: s.table, "compact"),
+    "index_delta_grouped": (1, lambda s, i, l: i, "append_local"),
+    "index_compaction": (1, lambda s, i, l: i, "compact"),
+    "metrics_flush": (1, lambda s, i, l: l.metrics, "append_local"),
+    "lineage_commit": (1, lambda s, i, l: l.lineage, "append_local"),
+    "lineage_compaction": (2, lambda s, i, l: l.lineage, "compact"),
+}
+
+
+@pytest.mark.parametrize("point", sorted(CRASH_POINTS))
+def test_crash_at_every_write_resumes_identically(spark, crash_world, tmp_path, monkeypatch, point):
+    """A crash right after any write of run_batch lands (feature file,
+    state delta and compaction, index delta and pre-commit compaction,
+    metrics flush, lineage commit and post-commit compaction), then a
+    resume with fresh tables and a fresh LineageLog, leaves feature
+    files, state and index equal to the uninterrupted run.  The
+    ``_grouped`` leg runs every batch on the distributed closure and the
+    grouped route."""
+    from augdiff_pipeline_spark.operators import closure
+    from augdiff_pipeline_spark.plans.runner import resume_and_run
+
+    world, expected = crash_world
+    root = str(tmp_path / "world")
+    _copy_world(world, root)
+    if point.endswith("_grouped"):
+        monkeypatch.setattr(closure, "SMALL_COMPONENT_EDGES", 0)
+    crash_seq, owner, method = CRASH_POINTS[point]
+    state, index, log = _open_world(root)
+    for seq in CRASH_SEQS[:crash_seq]:
+        run_batch(spark, state, index, log, fixtures.change_batch_df(spark, seq), seq, root + "/out")
+
+    target = owner(state, index, log)
+    write = getattr(target, method)
+
+    def landed_then_crash(*args, **kwargs):
+        write(*args, **kwargs)
+        raise _Crash(point)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(target, method, landed_then_crash)
+        with pytest.raises(_Crash):
+            run_batch(spark, state, index, log, fixtures.change_batch_df(spark, crash_seq),
+                      crash_seq, root + "/out")
+
+    state, index, log = _open_world(root)
+    resume_and_run(
+        spark, state, index, log, root + "/out",
+        batches={s: (lambda s=s: fixtures.change_batch_df(spark, s)) for s in CRASH_SEQS},
+    )
+    assert log.committed_seqs(spark) == list(CRASH_SEQS)
+    assert _world_outputs(spark, root) == expected

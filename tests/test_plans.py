@@ -81,8 +81,9 @@ def test_state_point_lookup_lists_only_its_partitions(spark, tmp_path, monkeypat
 
 def test_driver_state_delta_matches_spark_delta(spark, tmp_path):
     """A batch appended from a driver-held Arrow table (pyarrow write)
-    reads back equal to the same batch appended by Spark: before and
-    after a compaction, and through a point lookup on the delta."""
+    reads back equal to the same rows written by the Spark clustered
+    writer (``init`` of base ∪ batch): before and after a compaction,
+    and through a point lookup on the delta."""
     from augdiff_pipeline_spark.fixtures import _node_row, _rel_row, _tombstone, _ts, _way_row
     from augdiff_pipeline_spark.functions.packing import pair_to_long_py
     from augdiff_pipeline_spark.schemas import OSM_SCHEMA
@@ -105,10 +106,13 @@ def test_driver_state_delta_matches_spark_delta(spark, tmp_path):
                 sorted(str(r) for r in state.fetch_keys(spark, keys).collect()))
 
     out = {}
-    for route, batch in (("spark", batch_df), ("driver", batch_df.toArrow())):
+    for route in ("spark", "driver"):
         state = StateTable(str(tmp_path / route))
-        state.init(fixtures.base_state_df(spark))
-        state.append_batch(batch, seq=1, spark=spark)
+        if route == "spark":
+            state.init(fixtures.base_state_df(spark).unionByName(batch_df))
+        else:
+            state.init(fixtures.base_state_df(spark))
+            state.append_batch(batch_df.toArrow(), seq=1, spark=spark)
         before = reads(state)
         state.table.compact(spark, transform=state._cluster, writer_conf=clustered_writer,
                             schema=OSM_SCHEMA)
@@ -212,7 +216,7 @@ def test_state_compaction_bounds_dirs_and_preserves_reads(spark, tmp_path):
         batch = fixtures.base_state_df(spark).limit(5).withColumn(
             "id", F.col("id") + F.lit(100000 * seq)
         )
-        state.append_batch(batch, seq=seq)
+        state.append_batch(batch.toArrow(), seq=seq, spark=spark)
         total += 5
         assert state.read(spark).count() == total, f"rows drifted at seq {seq}"
     cur = state.table.current()
@@ -258,7 +262,7 @@ def test_rollback_skips_uncommitted_compaction(spark, tmp_path):
     # seqs 1-2 commit; seq 3's append triggers compaction (4 dirs > 3)
     # and then the "crash" happens before seq 3's commit marker
     for seq in (1, 2, 3):
-        state.append_batch(batch(seq), seq=seq)
+        state.append_batch(batch(seq).toArrow(), seq=seq, spark=spark)
     assert state.table.current().operation == "compact"
     assert state.table.current().summary.get("seq") == 3  # tag present
 
@@ -266,7 +270,7 @@ def test_rollback_skips_uncommitted_compaction(spark, tmp_path):
     # rolled back past BOTH the compact and the seq-3 append
     assert state.read(spark).count() == base_rows + 2 * 4
     # rerun of seq 3 lands exactly once
-    state.append_batch(batch(3), seq=3)
+    state.append_batch(batch(3).toArrow(), seq=3, spark=spark)
     sdf = state.read(spark)
     assert sdf.count() == base_rows + 3 * 4
     assert sdf.select("id", "type", "version").distinct().count() == sdf.count()

@@ -1,21 +1,23 @@
 """Route parity for the per-batch pipeline.
 
 A batch whose closure is small runs on the driver route (histories,
-geometry and feature lines in driver Python, feature file written from
-the driver); every other batch runs the grouped route (the same Python
-on executors, once per partition of whole root downsets, feature file
-written by Spark).  Closing every batch on the distributed path
-(``small_component_edges=0``) forces the grouped route; its leg is named
-"dataframe".  A third leg keeps the closure small but makes the scope
-collect overflow (``augdiff._driver_scope`` returns None), which is
-what a large scope under a small closure hits: the grouped route then
-runs after the driver-side closure and its driver-side index append.
-The same worlds run through all three and must leave byte-identical
-feature files and equal state, index and lineage rows.
+geometry and feature lines in driver Python); every other batch runs the
+grouped route (the same Python on executors, once per partition of whole
+root downsets, its deduplicated lines collected to the driver).  Both
+routes write every per-batch delta (feature file, state, index) from the
+driver.  Closing every batch on the distributed path
+(``closure.SMALL_COMPONENT_EDGES`` patched to 0) forces the grouped
+route; its leg is named "dataframe".  A third leg keeps the closure
+small but makes the scope collect overflow (``augdiff._driver_scope``
+returns None), which is what a large scope under a small closure hits:
+the grouped route then runs after the driver-side closure.  The same
+worlds run through all three and must leave byte-identical feature files
+and equal state, index and lineage rows; spies on
+``augdiff._grouped_features`` and on ``incremental_closure``'s 4th
+result (None only on the distributed fixpoint) prove each leg's route.
 The driver route's job count is pinned as a regression guard.
 """
 
-import functools
 import glob
 import json
 import os
@@ -103,17 +105,34 @@ def _run_world(spark, root, base_rows, batches):
     state.init(base_df)
     index.overwrite(transitive_closure(edges_from_rows(base_df)))
 
+    calls = {"grouped": 0, "small": []}
+    grouped_features, incremental_closure = augdiff._grouped_features, augdiff.incremental_closure
+
+    def grouped_spy(rows):
+        calls["grouped"] += 1
+        return grouped_features(rows)
+
+    def closure_spy(*args):
+        out = incremental_closure(*args)
+        calls["small"].append(out[3] is not None)
+        return out
+
     sc = spark.sparkContext
-    files, names, jobs = {}, {}, {}
+    files, names, jobs, grouped, small = {}, {}, {}, {}, {}
     for seq in sorted(batches):
         batch_df = spark.createDataFrame(batches[seq], OSM_SCHEMA)
         group = f"route-parity-{os.path.basename(root)}-{seq}"
+        calls["grouped"], calls["small"] = 0, []
         sc.setJobGroup(group, "run_batch")
         try:
-            augdiff.run_batch(spark, state, index, log, batch_df, seq, out_dir)
+            with pytest.MonkeyPatch.context() as mp:
+                mp.setattr(augdiff, "_grouped_features", grouped_spy)
+                mp.setattr(augdiff, "incremental_closure", closure_spy)
+                augdiff.run_batch(spark, state, index, log, batch_df, seq, out_dir)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         jobs[seq] = _jobs_in_group(spark, group)
+        grouped[seq], small[seq] = calls["grouped"], calls["small"]
         parts = sorted(glob.glob(os.path.join(out_dir, f"seq={seq:09d}", "part-*")))
         files[seq] = b"".join(Path(p).read_bytes() for p in parts)
         names[seq] = [os.path.basename(p) for p in parts]
@@ -123,8 +142,8 @@ def _run_world(spark, root, base_rows, batches):
     for r in log.lineage.read(spark, schema=LINEAGE_SCHEMA).collect():
         if r["stage"] == "index_append":
             index_parts.add(r["partition_id"])
-        # per-partition splits are route-specific (the driver route
-        # writes one -1 row per stage); totals per stage are not
+        # every stage writes one partition -1 row; the totals per stage
+        # are what the routes must agree on
         key = (r["seq"], r["stage"], r["input_snapshot"], r["output_snapshot"])
         total = lineage.get(key)
         if r["row_count"] is not None:
@@ -134,6 +153,8 @@ def _run_world(spark, root, base_rows, batches):
         "files": files,
         "names": names,
         "jobs": jobs,
+        "grouped": grouped,
+        "small": small,
         "state": sorted(str(r) for r in state.read(spark).collect()),
         "index": sorted((r["a"], r["b"]) for r in index.read(spark, schema=INDEX_SCHEMA).collect()),
         "lineage": lineage,
@@ -148,8 +169,7 @@ def routes(spark, tmp_path_factory):
     for route in ("driver", "dataframe", "mixed"):
         with pytest.MonkeyPatch.context() as mp:
             if route == "dataframe":
-                mp.setattr(augdiff, "incremental_closure", functools.partial(
-                    closure.incremental_closure, small_component_edges=0))
+                mp.setattr(closure, "SMALL_COMPONENT_EDGES", 0)
             elif route == "mixed":
                 mp.setattr(augdiff, "_driver_scope", lambda batch_rows, fetched: None)
             for name, (base_rows, batches) in _worlds().items():
@@ -162,15 +182,23 @@ def routes(spark, tmp_path_factory):
 def test_routes_write_identical_outputs(routes, world):
     drv = routes["driver", world]
     assert any(drv["files"].values()), "no features written"
-    # each leg really took its route: the driver writer's one file vs
-    # the Spark text writer's part-00000-<uuid>-c000.txt, and the small
-    # closure's driver-side index append (one partition -1 lineage row)
-    # on the driver and mixed legs
+    # each leg really took its route: the grouped render ran on every
+    # batch of the dataframe and mixed legs and on none of the driver
+    # leg's, and only the dataframe leg closed on the distributed
+    # fixpoint (incremental_closure's 4th result None)
+    assert set(drv["grouped"].values()) == {0}, drv["grouped"]
+    assert all(s == [True] for s in drv["small"].values()), drv["small"]
+    mixed, dfr = routes["mixed", world], routes["dataframe", world]
+    assert set(mixed["grouped"].values()) == set(dfr["grouped"].values()) == {1}
+    assert all(s == [True] for s in mixed["small"].values()), mixed["small"]
+    assert all(s == [False] for s in dfr["small"].values()), dfr["small"]
+    # one writer: every leg writes the driver's one file and one
+    # partition -1 index lineage row
+    assert drv["index_parts"] == mixed["index_parts"] == dfr["index_parts"] == {-1}
     assert all(n == ["part-00000.txt"] for n in drv["names"].values()), drv["names"]
-    assert drv["index_parts"] == routes["mixed", world]["index_parts"] == {-1}
     for route in ("dataframe", "mixed"):
         other = routes[route, world]
-        assert all(n and n != ["part-00000.txt"] for n in other["names"].values()), other["names"]
+        assert all(n == ["part-00000.txt"] for n in other["names"].values()), other["names"]
         for seq in drv["files"]:
             assert drv["files"][seq] == other["files"][seq], f"{world} {route} seq {seq}"
         assert drv["committed"] == other["committed"] == sorted(drv["files"])
@@ -184,11 +212,12 @@ def test_driver_route_job_count(routes):
     Spark jobs end to end (a quarter over the 8 measured), compacting
     batches included (batch collect, two index probes, scope collect,
     state compaction); the grouped route runs several times that, and
-    at most 99 (a quarter over the 79 measured)."""
+    at most 71 (a quarter over the 57 measured, with its features,
+    state and index deltas written from the driver)."""
     drv, dfr = routes["driver", "fixtures"], routes["dataframe", "fixtures"]
     assert max(drv["jobs"].values()) <= 10, drv["jobs"]
     assert dfr["jobs"][0] > 2 * drv["jobs"][0], (drv["jobs"], dfr["jobs"])
-    assert max(dfr["jobs"].values()) <= 99, dfr["jobs"]
+    assert max(dfr["jobs"].values()) <= 71, dfr["jobs"]
 
 
 def test_incidental_world_covers_its_case(routes):

@@ -86,7 +86,7 @@ def test_streaming_rolls_back_partial_commit(spark, tmp_path):
     for seq in (0, 1):
         write_change_file(spark, fixtures.change_batch_df(spark, seq), seq, changes_dir)
     # simulate the crash: seq 1's state append landed, no commit marker
-    state.append_batch(fixtures.change_batch_df(spark, 1), 1)
+    state.append_batch(fixtures.change_batch_df(spark, 1).toArrow(), 1, spark)
 
     q = stream_augdiff(spark, changes_dir, ckpt, state, index, log, out_dir)
     q.awaitTermination(300)
