@@ -138,10 +138,6 @@ def morton_col(lon: Column, lat: Column, res: int = MAX_RES) -> Column:
     return interleave_col(ix, iy)
 
 
-def morton_at_max_res_col(lon: Column, lat: Column) -> Column:
-    return morton_col(lon, lat, MAX_RES)
-
-
 def grid_cell_col(lon: Column, lat: Column, res: int) -> Column:
     """Flat grid id ix * 2^res + iy — ANSI-SQL-expressible (oracle parity).
 
@@ -150,11 +146,3 @@ def grid_cell_col(lon: Column, lat: Column, res: int) -> Column:
     """
     ix, iy = ixy_col(lon, lat, res)
     return ix * F.lit(1 << res) + iy
-
-
-def grid_cell_sql(lon_expr: str, lat_expr: str, res: int) -> str:
-    """The DuckDB/ANSI twin of grid_cell_col, as a SQL fragment."""
-    n = 1 << res
-    ix = f"least(greatest(cast(floor(({lon_expr}+180.0)/360.0*{n}) as bigint),0),{n - 1})"
-    iy = f"least(greatest(cast(floor(({lat_expr}+90.0)/180.0*{n}) as bigint),0),{n - 1})"
-    return f"({ix}*{n}+{iy})"

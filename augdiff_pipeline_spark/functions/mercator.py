@@ -1,14 +1,13 @@
-"""Web Mercator (EPSG:3857) + slippy-map ZXY tile math.
+"""Slippy-map ZXY tile math on the Web Mercator (EPSG:3857) grid.
 
-Closed-form public formulas (OSM slippy-map tilenames / EPSG:3857):
-    x3857 = R * lon_rad
-    y3857 = R * ln(tan(pi/4 + lat_rad/2))
+Closed-form public formulas (OSM slippy-map tilenames):
     xtile = floor((lon + 180) / 360 * 2^z)
     ytile = floor((1 - asinh(tan(lat_rad)) / pi) / 2 * 2^z)
 
-Replaces the reference's GeoTrellis reproject UDF
-(/root/reference/ingest/src/main/scala/osmesa/functions/package.scala:12-13,48-50)
-with native Column expressions — no UDF, no external proj library.
+The reference reprojects with a GeoTrellis UDF
+(/root/reference/ingest/src/main/scala/osmesa/functions/package.scala:12-13,48-50);
+the engine needs only the ZXY tile index, here as native Column
+expressions — no UDF, no external proj library.
 Tile assignment is deterministic: clip to the Mercator lat bound then
 floor; ties at tile edges resolve to the higher tile index consistently
 in Spark, numpy, and the DuckDB oracle because all three evaluate the
@@ -23,19 +22,10 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-R = 6378137.0
 MAX_MERC_LAT = 85.05112877980659  # atan(sinh(pi)) — square world bound
 
 
 # ---------------------------------------------------------------- numpy side
-def to_mercator(lon: np.ndarray, lat: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    lon = np.asarray(lon, dtype=np.float64)
-    lat = np.clip(np.asarray(lat, dtype=np.float64), -MAX_MERC_LAT, MAX_MERC_LAT)
-    x = R * np.radians(lon)
-    y = R * np.log(np.tan(np.pi / 4.0 + np.radians(lat) / 2.0))
-    return x, y
-
-
 def tile_xy(lon: np.ndarray, lat: np.ndarray, z: int) -> tuple[np.ndarray, np.ndarray]:
     n = 1 << z
     lon = np.asarray(lon, dtype=np.float64)
@@ -50,13 +40,6 @@ def tile_xy(lon: np.ndarray, lat: np.ndarray, z: int) -> tuple[np.ndarray, np.nd
 
 
 # --------------------------------------------------------------- Column side
-def mercator_cols(lon: Column, lat: Column) -> tuple[Column, Column]:
-    lat_c = F.least(F.greatest(lat, F.lit(-MAX_MERC_LAT)), F.lit(MAX_MERC_LAT))
-    x = F.lit(R) * F.radians(lon)
-    y = F.lit(R) * F.log(F.tan(F.lit(math.pi / 4.0) + F.radians(lat_c) / F.lit(2.0)))
-    return x, y
-
-
 def tile_cols(lon: Column, lat: Column, z: int) -> tuple[Column, Column]:
     n = 1 << z
     lat_c = F.least(F.greatest(lat, F.lit(-MAX_MERC_LAT)), F.lit(MAX_MERC_LAT))

@@ -112,11 +112,3 @@ def keyed(df: DataFrame, column: str, keys) -> DataFrame:
         return df.filter(in_list(column, uniq))
     keys_df = df.sparkSession.createDataFrame(pa.table({column: pa.array(uniq, pa.int64())}))
     return df.join(F.broadcast(keys_df), column, "left_semi")
-
-
-def long_to_id_py(packed: int) -> int:
-    return packed >> 2
-
-
-def long_to_type_py(packed: int) -> str:
-    return CODE_TYPES[packed & 3]

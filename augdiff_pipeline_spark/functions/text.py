@@ -49,10 +49,6 @@ def subword_count_sql(col: str) -> str:
     return f"len(regexp_extract_all({col}, '{SUBWORD_PATTERN}'))"
 
 
-def char_count(text: Column) -> Column:
-    return F.length(text)
-
-
 def punct_count(text: Column) -> Column:
     return F.length(text) - F.length(F.regexp_replace(text, PUNCT_CLASS, ""))
 

@@ -55,10 +55,6 @@ class AssemblyError(Exception):
     pass
 
 
-def _ends(seg: np.ndarray) -> tuple[float, float, float, float]:
-    return seg[0, 0], seg[0, 1], seg[-1, 0], seg[-1, 1]
-
-
 def form_rings(segments: list[np.ndarray]) -> list[np.ndarray]:
     """Chain open segments into closed rings (exact-equality endpoints)."""
     segs = [np.asarray(s, dtype=np.float64) for s in segments]

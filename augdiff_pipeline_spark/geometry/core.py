@@ -34,9 +34,6 @@ class Point:
     def kind(self) -> str:
         return "Point"
 
-    def __geo_interface__coords(self):
-        return [self.x, self.y]
-
 
 @dataclass(frozen=True)
 class LineString:
@@ -48,10 +45,6 @@ class LineString:
     @property
     def kind(self) -> str:
         return "LineString"
-
-    @property
-    def vertex_count(self) -> int:
-        return len(self.coords)
 
     @property
     def is_closed(self) -> bool:

@@ -15,14 +15,16 @@ Semantics (locked by fixture tests, no code copied):
   oversized one), close over the union, and emit the edges not already
   stored.
 
-Spark-first realization: the reference's GraphX Pregel (batch) and
-driver do/while over hash maps (incremental) both become an iterative
-DataFrame self-join fixpoint with *doubling* composition
-(R_{2k} = R_k ∪ R_k∘R_k), so a nesting depth of d converges in
-ceil(log2(d)) shuffle rounds instead of d Pregel supersteps.
+Spark-first realization: the reference's GraphX Pregel (batch,
+``maxIter = Int.MaxValue``) becomes an iterative DataFrame self-join
+with *doubling* composition (R_{2k} = R_k ∪ R_k∘R_k), run to a true
+fixpoint like the Pregel: a nesting depth of d closes in ceil(log2(d))
+shuffle rounds plus the one that finds no new edge, at any depth.
 localCheckpoint() per round truncates lineage.  At 10^12-row scale every
 step is a shuffle-partitioned join on the packed long key — no driver
-state at all.
+state at all.  The reference's driver do/while (incremental) is
+``_small_closure``; the doubling fixpoint takes components too large
+for it.
 """
 
 from __future__ import annotations
@@ -31,8 +33,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.packing import keyed, pair_to_long, pair_to_long_py
-
-MAX_NESTING_ROUNDS = 6  # 2^6 = 64 levels of relation nesting — beyond real OSM
 
 
 def edges_from_rows(rows: DataFrame, include_node_self_edges: bool = True) -> DataFrame:
@@ -74,30 +74,28 @@ def edges_from_rows_py(rows: list[dict], include_node_self_edges: bool = True) -
     return edges
 
 
-def transitive_closure(edges: DataFrame, max_rounds: int = MAX_NESTING_ROUNDS) -> DataFrame:
+def transitive_closure(edges: DataFrame) -> DataFrame:
     """Closure of (a,b) containment edges, self-loops removed.
 
     Doubling fixpoint: each round composes the current closure with
-    itself ((a,b) ∧ (b,c) → (a,c)) and unions; terminates early when the
-    edge count stops growing.  Each round = one shuffle join on ``b``/``a``
-    + one distinct; AQE handles skewed containers (a mega-relation's key
-    fans out on the build side).
+    itself ((a,b) ∧ (b,c) → (a,c)) and unions, until the edge count
+    stops growing.  Each round = one shuffle join on ``b``/``a`` + one
+    distinct; AQE handles skewed containers (a mega-relation's key fans
+    out on the build side).
     """
     cur = edges.select("a", "b").distinct().localCheckpoint(eager=True)
     n = cur.count()
-    for _ in range(max_rounds):
+    while True:
         composed = (
             cur.alias("l")
             .join(cur.alias("r"), F.col("l.b") == F.col("r.a"))
             .select(F.col("l.a").alias("a"), F.col("r.b").alias("b"))
         )
-        nxt = cur.unionByName(composed).distinct().localCheckpoint(eager=True)
-        n2 = nxt.count()
+        cur = cur.unionByName(composed).distinct().localCheckpoint(eager=True)
+        n2 = cur.count()
         if n2 == n:
-            cur = nxt
-            break
-        cur, n = nxt, n2
-    return cur.filter(F.col("a") != F.col("b"))
+            return cur.filter(F.col("a") != F.col("b"))
+        n = n2
 
 
 def downset_partitions(rows: DataFrame) -> DataFrame:
@@ -245,20 +243,20 @@ def incremental_closure(index: DataFrame, change_rows: DataFrame, rows) -> tuple
     paths produce identical edge sets (fixture-tested).
 
     ``rows`` is the whole batch as a driver-held Arrow table (run_batch
-    collects it once).  ``fetch_keys`` is the packed fetch-key set
-    (update keys ∪ all_edges endpoints — exactly ``needed_pairs``) as a
-    sorted Python list, and ``new_edge_rows`` the new-edge pair list —
-    both None when the distributed path ran.  The driver-held keys let
-    the caller fetch state with no probe job.
+    collects it once).  Each route fills one pair of slots:
+    - driver route: ``new_edges``/``all_edges`` are None,
+      ``fetch_keys`` is the packed fetch-key set (update keys ∪
+      all_edges endpoints — exactly ``needed_pairs``) as a sorted
+      Python list and ``new_edge_rows`` the sorted new-edge pair list;
+      the driver-held keys let the caller fetch state with no probe job;
+    - distributed route: ``new_edges``/``all_edges`` are DataFrames,
+      ``fetch_keys`` and ``new_edge_rows`` None.
     """
     small = _small_closure(index, rows, SMALL_COMPONENT_EDGES)
     if small is not None:
         new_set, all_set, update_keys = small
-        spark = change_rows.sparkSession
-        new_edges = spark.createDataFrame(new_set, "a long, b long")
-        all_edges = spark.createDataFrame(all_set, "a long, b long")
         keys = sorted(update_keys | {a for a, _ in all_set} | {b for _, b in all_set})
-        return new_edges, all_edges, keys, new_set
+        return None, None, keys, new_set
 
     # Oversize route: checkpoint the probe inputs before the fixpoint —
     # without this the two-hop semi-join plan re-executes once per

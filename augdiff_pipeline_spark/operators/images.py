@@ -160,10 +160,6 @@ def phash64(arr: np.ndarray) -> int:
     return int(phash64_batch(arr[None, ...])[0])
 
 
-def hamming64(a: int, b: int) -> int:
-    return int(bin((a ^ b) & ((1 << 64) - 1)).count("1"))
-
-
 def cut_tile(arr: np.ndarray, tile_px: int, ix: int, iy: int) -> np.ndarray:
     """Deterministic tile crop (pads with zeros at the edge)."""
     h, w, _ = arr.shape

@@ -55,16 +55,12 @@ def assign_tiles(images: DataFrame, z: int, salt_n: int = 8) -> DataFrame:
 
 def cut_tiles(
     assigned: DataFrame, tile_px: int = 16, salt_n: int = 8,
-    shuffle_partitions: int | None = None, batched: bool = True
+    shuffle_partitions: int | None = None
 ) -> DataFrame:
     """(image_id, z, x, y, tix, tiy, tile_bytes, psnr_db) — one row per
-    pixel tile per image, produced after the salted repartition.
-
-    ``batched=False`` selects the per-image/per-tile scalar kernel (the
-    pre-round-4 shape) — kept ONLY so the bench can A/B the two kernels
-    in the same session on the same host state (both produce identical
-    rows; asserted in tests).  Production always uses the batched
-    per-(shape, fmt) stacked kernel."""
+    pixel tile per image, produced after the salted repartition by one
+    per-(shape, fmt) stacked kernel.  Its rows equal a per-image loop of
+    ``images.cut_tile`` / ``encode`` / ``psnr`` (asserted in tests)."""
     parts = [F.col("tile_key"), F.col("salt")]
     par = assigned.sparkSession.sparkContext.defaultParallelism
     # A blob slice inherited from a multi-GB source scan can arrive in
@@ -92,48 +88,6 @@ def cut_tiles(
     df = assigned.repartition(*parts) if shuffle_partitions is None else assigned.repartition(
         shuffle_partitions, *parts
     )
-
-    def scalar_kernel(it):
-        for pdf in it:
-            rows = {
-                "image_id": [], "z": [], "x": [], "y": [],
-                "tix": [], "tiy": [], "tile_bytes": [], "psnr_db": [],
-            }
-            for iid, blob, fmt, z, x, y in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"], pdf["z"], pdf["x"], pdf["y"]
-            ):
-                arr = imgcodec.decode(bytes(blob))
-                h, w, _ = arr.shape
-                nty = (h + tile_px - 1) // tile_px
-                ntx = (w + tile_px - 1) // tile_px
-                for tiy in range(nty):
-                    for tix in range(ntx):
-                        tile = imgcodec.cut_tile(arr, tile_px, tix, tiy)
-                        enc = imgcodec.encode(tile, fmt)
-                        if fmt == "png":
-                            p = 99.0
-                        else:
-                            p = min(imgcodec.psnr(tile, imgcodec.decode(enc)), 99.0)
-                        rows["image_id"].append(iid)
-                        rows["z"].append(int(z))
-                        rows["x"].append(int(x))
-                        rows["y"].append(int(y))
-                        rows["tix"].append(tix)
-                        rows["tiy"].append(tiy)
-                        rows["tile_bytes"].append(enc)
-                        rows["psnr_db"].append(p)
-            yield pd.DataFrame(
-                {
-                    "image_id": pd.Series(rows["image_id"], dtype="object"),
-                    "z": pd.Series(rows["z"], dtype="int32"),
-                    "x": pd.Series(rows["x"], dtype="int64"),
-                    "y": pd.Series(rows["y"], dtype="int64"),
-                    "tix": pd.Series(rows["tix"], dtype="int32"),
-                    "tiy": pd.Series(rows["tiy"], dtype="int32"),
-                    "tile_bytes": pd.Series(rows["tile_bytes"], dtype="object"),
-                    "psnr_db": pd.Series(rows["psnr_db"], dtype="float64"),
-                }
-            )
 
     def kernel(it):
         for pdf in it:

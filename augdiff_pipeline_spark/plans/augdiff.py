@@ -55,6 +55,7 @@ import shutil
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..operators import closure, history, render
 from ..operators.closure import downset_partitions, incremental_closure, needed_pairs
@@ -212,9 +213,7 @@ def run_batch(
 
     with timer.time("index_append"):
         idx_snap = index.append_local(
-            new_edge_rows,
-            pa.schema([pa.field("a", pa.int64()), pa.field("b", pa.int64())]),
-            summary={"seq": seq},
+            new_edge_rows, to_arrow_schema(INDEX_SCHEMA), summary={"seq": seq},
         )
         # compaction BEFORE the commit marker must carry this seq's tag,
         # or a crash here would freeze the uncommitted edges into an

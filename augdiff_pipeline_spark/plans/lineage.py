@@ -17,6 +17,7 @@ import time
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..schemas import LINEAGE_SCHEMA, METRICS_SCHEMA
 from ..sources.catalog import SnapshotTable
@@ -42,34 +43,6 @@ def _decode_ranges(ranges) -> set[int]:
     for a, b in ranges:
         seqs.update(range(int(a), int(b) + 1))
     return seqs
-
-
-def _arrow_lineage_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            pa.field("seq", pa.int64()),
-            pa.field("stage", pa.string()),
-            pa.field("partition_id", pa.int32()),
-            pa.field("input_snapshot", pa.int64()),
-            pa.field("output_snapshot", pa.int64()),
-            pa.field("row_count", pa.int64()),
-        ]
-    )
-
-
-def _arrow_metrics_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            pa.field("seq", pa.int64()),
-            pa.field("stage", pa.string()),
-            pa.field("metric", pa.string()),
-            pa.field("value", pa.float64()),
-        ]
-    )
 
 
 class LineageLog:
@@ -155,7 +128,7 @@ class LineageLog:
         # the driver — a Spark write job here costs seconds of pure job
         # machinery per minutely batch (round-5 soak profile)
         snap = self.lineage.append_local(
-            self._pending_lineage, _arrow_lineage_schema(),
+            self._pending_lineage, to_arrow_schema(LINEAGE_SCHEMA),
             summary={"seq": seq, "stage": COMMIT_STAGE},
         )
         self._pending_lineage = []
@@ -194,7 +167,7 @@ class LineageLog:
         (e.g. at the end of a driver run)."""
         if self._pending_metrics:
             self.metrics.append_local(
-                self._pending_metrics, _arrow_metrics_schema(), summary={"seq": seq}
+                self._pending_metrics, to_arrow_schema(METRICS_SCHEMA), summary={"seq": seq}
             )
             self._pending_metrics = []
         self._commits_since_metrics_flush = 0

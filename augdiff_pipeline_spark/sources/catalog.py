@@ -62,13 +62,29 @@ class SnapshotTable:
         cur = self.current()
         return cur.snapshot_id if cur else None
 
-    def _commit(self, snap: Snapshot) -> None:
-        snaps = self.snapshots()
-        snaps.append(snap)
+    def _write_manifest(self, snaps: list[Snapshot]) -> None:
         tmp = self.manifest_path + f".tmp.{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
             json.dump([s.__dict__ for s in snaps], f, indent=1)
         os.replace(tmp, self.manifest_path)  # atomic commit point
+
+    def _commit(self, operation: str, data_dirs: list[str], summary: dict | None,
+                append: bool = False) -> int:
+        """Commit the snapshot after the current one, over ``data_dirs``
+        (after the current snapshot's dirs when ``append``); returns its
+        id."""
+        snaps = self.snapshots()
+        cur = snaps[-1] if snaps else None
+        snap = Snapshot(
+            snapshot_id=(cur.snapshot_id + 1) if cur else 1,
+            parent_id=cur.snapshot_id if cur else None,
+            operation=operation,
+            data_dirs=(cur.data_dirs if append and cur else []) + data_dirs,
+            committed_at_ms=int(time.time() * 1000),
+            summary=summary or {},
+        )
+        self._write_manifest(snaps + [snap])
+        return snap.snapshot_id
 
     # --------------------------------------------------------------- write
     def _write_data(self, df: DataFrame, writer_conf) -> str:
@@ -106,45 +122,14 @@ class SnapshotTable:
                  for f, c in zip(arrow_schema, cols)}
             )
         pq.write_table(tbl, os.path.join(d, "part-00000.parquet"))
-        cur = self.current()
-        snap = Snapshot(
-            snapshot_id=(cur.snapshot_id + 1) if cur else 1,
-            parent_id=cur.snapshot_id if cur else None,
-            operation=operation,
-            data_dirs=(cur.data_dirs if cur else []) + [d],
-            committed_at_ms=int(time.time() * 1000),
-            summary=summary or {},
-        )
-        self._commit(snap)
-        return snap.snapshot_id
+        return self._commit(operation, [d], summary, append=True)
 
     def append(self, df: DataFrame, operation: str = "append", summary: dict | None = None, writer_conf=None) -> int:
         d = self._write_data(df, writer_conf)
-        cur = self.current()
-        snap = Snapshot(
-            snapshot_id=(cur.snapshot_id + 1) if cur else 1,
-            parent_id=cur.snapshot_id if cur else None,
-            operation=operation,
-            data_dirs=(cur.data_dirs if cur else []) + [d],
-            committed_at_ms=int(time.time() * 1000),
-            summary=summary or {},
-        )
-        self._commit(snap)
-        return snap.snapshot_id
+        return self._commit(operation, [d], summary, append=True)
 
     def overwrite(self, df: DataFrame, summary: dict | None = None, writer_conf=None) -> int:
-        d = self._write_data(df, writer_conf)
-        cur = self.current()
-        snap = Snapshot(
-            snapshot_id=(cur.snapshot_id + 1) if cur else 1,
-            parent_id=cur.snapshot_id if cur else None,
-            operation="overwrite",
-            data_dirs=[d],
-            committed_at_ms=int(time.time() * 1000),
-            summary=summary or {},
-        )
-        self._commit(snap)
-        return snap.snapshot_id
+        return self._commit("overwrite", [self._write_data(df, writer_conf)], summary)
 
     def compact(self, spark: SparkSession, transform=None, writer_conf=None,
                 schema=None, summary: dict | None = None) -> int | None:
@@ -174,17 +159,8 @@ class SnapshotTable:
         df = self.read(spark, schema=schema)
         if transform is not None:
             df = transform(df)
-        d = self._write_data(df, writer_conf)
-        snap = Snapshot(
-            snapshot_id=cur.snapshot_id + 1,
-            parent_id=cur.snapshot_id,
-            operation="compact",
-            data_dirs=[d],
-            committed_at_ms=int(time.time() * 1000),
-            summary={**(summary or {}), "compacted_dirs": len(cur.data_dirs)},
-        )
-        self._commit(snap)
-        return snap.snapshot_id
+        return self._commit("compact", [self._write_data(df, writer_conf)],
+                            {**(summary or {}), "compacted_dirs": len(cur.data_dirs)})
 
     def maybe_compact(self, spark: SparkSession, save_interval: int,
                       keep_last: int, transform=None, writer_conf=None,
@@ -219,27 +195,14 @@ class SnapshotTable:
         kept, dropped = snaps[-keep_last:], snaps[:-keep_last]
         referenced = {d for s in kept for d in s.data_dirs}
         doomed = sorted({d for s in dropped for d in s.data_dirs} - referenced)
-        tmp = self.manifest_path + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump([s.__dict__ for s in kept], f, indent=1)
-        os.replace(tmp, self.manifest_path)
+        self._write_manifest(kept)
         for d in doomed:
             shutil.rmtree(d, ignore_errors=True)
         return doomed
 
     def rollback_to(self, snapshot_id: int) -> int:
         target = next(s for s in self.snapshots() if s.snapshot_id == snapshot_id)
-        cur = self.current()
-        snap = Snapshot(
-            snapshot_id=cur.snapshot_id + 1,
-            parent_id=cur.snapshot_id,
-            operation="rollback",
-            data_dirs=list(target.data_dirs),
-            committed_at_ms=int(time.time() * 1000),
-            summary={"rolled_back_to": snapshot_id},
-        )
-        self._commit(snap)
-        return snap.snapshot_id
+        return self._commit("rollback", list(target.data_dirs), {"rolled_back_to": snapshot_id})
 
     # ---------------------------------------------------------------- read
     def read(self, spark: SparkSession, snapshot_id: int | None = None, schema=None,

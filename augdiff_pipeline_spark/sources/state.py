@@ -10,9 +10,9 @@ Replaces the reference's hand-rolled ORC backend
   ~190-line hand-written vectorized ORC point-lookup scan (S2) wholesale.
 - S3/P6/J1 partition-pruned IN-list point lookup (:233-266, :240-247):
   the read lists only the ``p=`` dirs the keys can live in; a key set
-  small enough to enumerate filters on IN-lists of its ids and
-  partitions (row-group min/max and bloom skipping push down) and of
-  its packed keys, a larger one matches the packed keys with a
+  small enough to enumerate filters on one exact per-type id IN-list
+  predicate and a partition IN-list (row-group min/max and bloom
+  skipping push down), a larger one matches the packed keys with a
   broadcast left-semi join (``packing.keyed``).
 - per-batch deltas are appended from the driver-held batch by pyarrow
   (``append_batch``); every ``save_interval`` batches the compaction
@@ -151,18 +151,21 @@ class StateTable:
         probe jobs (the caller already holds the keys, e.g. from the
         incremental closure's small path).  The read lists only the
         ``p=`` dirs the keys can live in (up to MAX_ENUMERATED_PARTITIONS
-        of them); up to MAX_ENUMERATED_KEYS keys it filters on IN-lists
-        of the keys' ids and partitions, which push down into the scan.
-        The exact packed-key match is ``packing.keyed``: an IN-list, or a
-        broadcast semi-join beyond MAX_ENUMERATED_KEYS.
+        of them).  Up to MAX_ENUMERATED_KEYS keys it filters on the
+        exact match ``(type = 'node' AND id IN (...)) OR ...`` and on
+        the keys' partitions, both pushed down into the scan; beyond it
+        the packed keys match through ``packing.keyed``'s broadcast
+        semi-join.
         """
         uniq = sorted({int(k) for k in key_list})
         # keys with an invalid type code (low bits not 0|1|2) can never
-        # match a state row — they contribute no partition, which is
-        # correct
-        ps = sorted(
-            {partition_number_py(k >> 2, CODE_TYPES[k & 3]) for k in uniq if (k & 3) in CODE_TYPES}
-        )
+        # match a state row — they contribute no id and no partition,
+        # which is correct
+        ids: dict[str, list[int]] = {}
+        for k in uniq:
+            if (k & 3) in CODE_TYPES:
+                ids.setdefault(CODE_TYPES[k & 3], []).append(k >> 2)
+        ps = sorted({partition_number_py(i, t) for t, v in ids.items() for i in v})
         if not ps:
             return self.read(spark, snapshot_id).limit(0)
         # reference pfLimit=150 partition filters (Common.scala:30):
@@ -170,9 +173,12 @@ class StateTable:
         # lists only their p=... dirs (and row-group stats prune deltas)
         enumerate_ps = len(ps) <= MAX_ENUMERATED_PARTITIONS
         state = self.read(spark, snapshot_id, partitions=ps if enumerate_ps else None)
-        if len(uniq) <= packing.MAX_ENUMERATED_KEYS:
-            state = state.filter(in_list("id", sorted({k >> 2 for k in uniq})))
-            if enumerate_ps:
-                state = state.filter(in_list("p", ps))
-        state = state.withColumn("_k", pair_to_long(F.col("id"), F.col("type")))
-        return packing.keyed(state, "_k", uniq).drop("_k")
+        if len(uniq) > packing.MAX_ENUMERATED_KEYS:
+            state = state.withColumn("_k", pair_to_long(F.col("id"), F.col("type")))
+            return packing.keyed(state, "_k", uniq).drop("_k")
+        if enumerate_ps:
+            state = state.filter(in_list("p", ps))
+        # one SQL-text expression, as in_list: one py4j call
+        return state.filter(F.expr(" OR ".join(
+            f"(type = '{t}' AND id IN ({','.join(map(str, v))}))" for t, v in ids.items()
+        )))

@@ -373,20 +373,10 @@ def main() -> None:
         # salt 32 / 32 cut partitions: the Zipf-hot tiles split finely
         # enough that no single task gates the stage (measured: faster at
         # every core count AND the best 1→4 scaling ratio)
-        def cut(batched: bool):
-            return cut_tiles(
-                assign_tiles(img_slice, z=14, salt_n=32), tile_px=16,
-                shuffle_partitions=32, batched=batched,
-            ).count()
-
-        if scaling_mode:
-            timed("tile_cut", lambda: cut(True))
-        else:
-            # interleaved A/B of the round-4 batched kernel vs the
-            # round-3 per-image scalar kernel (identical rows,
-            # equivalence-tested): attributes any recorded regression
-            # to host vs code inside the artifact itself (VERDICT r4 #3)
-            ab_timed("tile_cut", lambda: cut(True), "batched", lambda: cut(False), "scalar")
+        timed("tile_cut", lambda: cut_tiles(
+            assign_tiles(img_slice, z=14, salt_n=32), tile_px=16,
+            shuffle_partitions=32,
+        ).count())
         if "tile_cut" in timings:
             extras["tile_cut_images_per_sec"] = round(slice_n / timings["tile_cut"], 1)
 

@@ -12,11 +12,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from augdiff_pipeline_spark import fixtures
+from augdiff_pipeline_spark.fixtures import _node_row, _rel_row, _ts, _way_row
 from augdiff_pipeline_spark.operators.closure import edges_from_rows, transitive_closure
 from augdiff_pipeline_spark.plans import augdiff
 from augdiff_pipeline_spark.plans.augdiff import run_batch
 from augdiff_pipeline_spark.plans.lineage import LineageLog
-from augdiff_pipeline_spark.schemas import INDEX_SCHEMA
+from augdiff_pipeline_spark.schemas import INDEX_SCHEMA, OSM_SCHEMA
 from augdiff_pipeline_spark.sources.catalog import SnapshotTable
 from augdiff_pipeline_spark.sources.state import StateTable
 
@@ -28,15 +29,36 @@ def canon(features):
     return sorted(json.dumps(f, sort_keys=True) for f in features)
 
 
+# a relation chain deeper than the 64 edges six doubling rounds close:
+# relation 9_200_000 holds 9_200_001, ..., the last one holds way
+# 9_100_000, which holds node 9_000_000 (101 edges from node to top)
+CHAIN_DEPTH = 100
+CHAIN_TOP = 9_200_000
+
+
+def deep_chain_rows() -> list[tuple]:
+    t = _ts(0)
+    rows = [_node_row(9_000_000, 1, t, lon=10.05, lat=50.05),
+            _way_row(9_100_000, 1, t, nds=[9_000_000])]
+    for i in range(CHAIN_DEPTH):
+        last = i == CHAIN_DEPTH - 1
+        member = ("way", 9_100_000, "") if last else ("relation", CHAIN_TOP + i + 1, "")
+        rows.append(_rel_row(CHAIN_TOP + i, 1, t, members=[member]))
+    return rows
+
+
 def test_batch_index_closure_matches_oracle(spark):
-    base = fixtures.base_state_rows()
-    expected = {(a, b) for a, b in oracle.close_edges(oracle.edges_from_rows(base)) if a != b}
-    df = fixtures.base_state_df(spark)
-    got = {
-        (r["a"], r["b"])
-        for r in transitive_closure(edges_from_rows(df)).collect()
-    }
-    assert got == expected
+    """The doubling fixpoint closes the fixture world and the 100-deep
+    relation chain exactly as the oracle's loop: it runs until no edge
+    is added, at any depth."""
+    for rows in (fixtures.base_state_rows(), deep_chain_rows()):
+        expected = {(a, b) for a, b in oracle.close_edges(oracle.edges_from_rows(rows)) if a != b}
+        df = spark.createDataFrame(rows, OSM_SCHEMA)
+        got = {
+            (r["a"], r["b"])
+            for r in transitive_closure(edges_from_rows(df)).collect()
+        }
+        assert got == expected
 
 
 def test_incremental_closure_paths_agree(spark):
@@ -45,14 +67,18 @@ def test_incremental_closure_paths_agree(spark):
     fixpoint must produce identical (new_edges, all_edges) — forced by
     routing the same batch through both via the size threshold.  A third
     leg runs the driver closure with its index probes as broadcast
-    semi-joins (every key set over ``MAX_ENUMERATED_KEYS``)."""
+    semi-joins (every key set over ``MAX_ENUMERATED_KEYS``).  The last
+    batch is a relation chain deeper than 64 edges."""
     from augdiff_pipeline_spark.functions import packing
     from augdiff_pipeline_spark.operators import closure
 
     base_df = fixtures.base_state_df(spark)
     index_df = transitive_closure(edges_from_rows(base_df))
-    for seq in (0, 2, 5, 6):  # node/way edits, tombstones, new relations
-        batch = fixtures.change_batch_df(spark, seq)
+    # node/way edits, tombstones, new relations, then the deep chain
+    batches = [fixtures.change_batch_df(spark, seq) for seq in (0, 2, 5, 6)]
+    batches.append(spark.createDataFrame(deep_chain_rows(), OSM_SCHEMA))
+    for i, batch in enumerate(batches):
+        rows = batch.toArrow()
         out = {}
         for label, thr, max_keys in (
             ("driver", 200_000, packing.MAX_ENUMERATED_KEYS),
@@ -62,15 +88,51 @@ def test_incremental_closure_paths_agree(spark):
             with pytest.MonkeyPatch.context() as mp:
                 mp.setattr(packing, "MAX_ENUMERATED_KEYS", max_keys)
                 mp.setattr(closure, "SMALL_COMPONENT_EDGES", thr)
-                ne, ae, keys, new_rows = closure.incremental_closure(
-                    index_df, batch, batch.toArrow()
-                )
-                out[label] = (
-                    {(r["a"], r["b"]) for r in ne.collect()},
-                    {(r["a"], r["b"]) for r in ae.collect()},
-                )
-            assert (new_rows is None) == (label == "distributed"), label
-        assert out["driver"] == out["semi-join"] == out["distributed"], f"seq {seq}"
+                ne, ae, keys, new_rows = closure.incremental_closure(index_df, batch, rows)
+                if label == "distributed":
+                    assert keys is None and new_rows is None
+                    out[label] = (
+                        {(r["a"], r["b"]) for r in ne.collect()},
+                        {(r["a"], r["b"]) for r in ae.collect()},
+                    )
+                else:
+                    assert ne is None and ae is None and new_rows is not None, label
+                    new_set, all_set, _ = closure._small_closure(index_df, rows, thr)
+                    assert new_rows == new_set, label
+                    out[label] = (set(new_set), set(all_set))
+        assert out["driver"] == out["semi-join"] == out["distributed"], f"batch {i}"
+
+
+def test_downset_partitions_keeps_deep_chain(spark):
+    """Every row of the 100-deep chain has the top relation as its one
+    root, so each comes out once, all in that relation's partition."""
+    from augdiff_pipeline_spark.operators.closure import downset_partitions
+
+    df = spark.createDataFrame(deep_chain_rows(), OSM_SCHEMA)
+    got = downset_partitions(df).select(
+        "id", "type", F.spark_partition_id().alias("part")
+    ).collect()
+    assert sorted((r["id"], r["type"]) for r in got) == sorted(
+        (r[1], r[2]) for r in deep_chain_rows()
+    )
+    top = [r["part"] for r in got if (r["id"], r["type"]) == (CHAIN_TOP, "relation")]
+    assert {r["part"] for r in got} == set(top)
+
+
+def test_transitive_closure_job_count(spark):
+    """transitive_closure runs the 25 Spark jobs on the fixture world it
+    ran when six doubling rounds capped the loop: the fixpoint exits at
+    the same round without the cap."""
+    sc = spark.sparkContext
+    edges = edges_from_rows(fixtures.base_state_df(spark))
+    group = "transitive-closure-jobs"
+    sc.setJobGroup(group, "transitive_closure")
+    try:
+        transitive_closure(edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 25
 
 
 @pytest.fixture(scope="module")

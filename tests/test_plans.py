@@ -31,12 +31,12 @@ def test_filter_pushdown_reaches_scan(spark):
 def test_state_point_lookup_pushes_in_list(spark, tmp_path):
     state = StateTable(str(tmp_path / "state"))
     state.init(fixtures.base_state_df(spark))
-    keys = spark.createDataFrame([(4005,), (8003,)], "k long")  # packed ids
+    # packed keys of ways 2000 and 2001, both in the fixture world
+    keys = spark.createDataFrame([(8001,), (8005,)], "k long")
     fetched = state.fetch_pairs(spark, keys)
     plan = fetched._jdf.queryExecution().toString()
     assert "PushedFilters" in plan and "In(id" in plan.replace(" ", "").replace("[", "(")
-    rows = fetched.collect()
-    assert {r["id"] for r in rows} <= {4005 >> 2, 8003 >> 2}
+    assert {(r["id"], r["type"]) for r in fetched.collect()} == {(2000, "way"), (2001, "way")}
 
 
 def test_state_point_lookup_lists_only_its_partitions(spark, tmp_path, monkeypatch):
@@ -233,11 +233,11 @@ def test_state_compaction_bounds_dirs_and_preserves_reads(spark, tmp_path):
     }
     assert on_disk == live, (on_disk - live, live - on_disk)
     # point lookup still prunes: partition dirs + id pushdown
-    keys = spark.createDataFrame([(4005,), (8003,)], "k long")
+    keys = spark.createDataFrame([(8001,), (8005,)], "k long")  # ways 2000, 2001
     fetched = state.fetch_pairs(spark, keys)
     plan = fetched._jdf.queryExecution().toString()
     assert "PushedFilters" in plan and "In(id" in plan.replace(" ", "").replace("[", "(")
-    assert {r["id"] for r in fetched.collect()} <= {4005 >> 2, 8003 >> 2}
+    assert {(r["id"], r["type"]) for r in fetched.collect()} == {(2000, "way"), (2001, "way")}
 
 
 def test_rollback_skips_uncommitted_compaction(spark, tmp_path):

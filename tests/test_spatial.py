@@ -223,9 +223,9 @@ def test_tiling_assignment_and_fidelity(spark):
 
 
 def test_tile_cut_scalar_batched_equivalence(spark):
-    """The bench's A/B scalar kernel (pre-round-4 shape) and the batched
-    per-(shape, fmt) kernel must emit identical tiles — the A/B is only
-    meaningful if both compute the same thing."""
+    """The per-(shape, fmt) stacked kernel of ``cut_tiles`` must emit the
+    tiles of the plain per-image loop: decode, ``cut_tile`` every tile,
+    ``encode`` it and take ``psnr`` of its round trip."""
     df = spark.createDataFrame(fixtures.image_rows(60))
     assigned = assign_tiles(df, z=14, salt_n=4)
     cols = ["image_id", "tix", "tiy"]
@@ -235,8 +235,22 @@ def test_tile_cut_scalar_batched_equivalence(spark):
         p["tile_bytes"] = p["tile_bytes"].map(bytes)
         return p
 
-    a = canon(cut_tiles(assigned, tile_px=16, batched=True).toPandas())
-    b = canon(cut_tiles(assigned, tile_px=16, batched=False).toPandas())
+    tile_px = 16
+    ref = {c: [] for c in ("image_id", "z", "x", "y", "tix", "tiy", "tile_bytes", "psnr_db")}
+    src = assigned.select("image_id", "bytes", "fmt", "z", "x", "y").toPandas()
+    for iid, blob, fmt, z, x, y in src.itertuples(index=False):
+        arr = imgcodec.decode(bytes(blob))
+        h, w, _ = arr.shape
+        for tiy in range((h + tile_px - 1) // tile_px):
+            for tix in range((w + tile_px - 1) // tile_px):
+                tile = imgcodec.cut_tile(arr, tile_px, tix, tiy)
+                enc = imgcodec.encode(tile, fmt)
+                p = 99.0 if fmt == "png" else min(imgcodec.psnr(tile, imgcodec.decode(enc)), 99.0)
+                for c, v in zip(ref, (iid, z, x, y, tix, tiy, enc, p)):
+                    ref[c].append(v)
+
+    a = canon(cut_tiles(assigned, tile_px=tile_px).toPandas())
+    b = canon(pd.DataFrame(ref))
     assert len(a) == len(b) > 0
     for c in a.columns:
         if c == "psnr_db":
