@@ -9,22 +9,22 @@ Semantics (locked by fixture tests, no code copied):
 - The stored index is the transitive closure of the containment relation
   minus self-loops (ComputeIndex.scala:86-89 / ComputeIndexLocal.scala:81-88).
 - Incremental update (ComputeIndexLocal.scala:49-89 + the 2-hop Postgres
-  fetch PostgresBackend.scala:60-83): restrict to the components touched
-  by a change batch via two chained lookups on the index (IN-list
-  probes from the driver-held batch, or broadcast semi-joins for an
-  oversized one), close over the union, and emit the edges not already
-  stored.
+  fetch PostgresBackend.scala:60-83), always on the driver as in the
+  reference: restrict to the components touched by a change batch via
+  two chained key probes of the index from the driver-held batch
+  (IN-lists, or broadcast semi-joins over ``packing.keyed``'s key
+  bound), close over the union in Python, and emit the edges not
+  already stored.
 
-Spark-first realization: the reference's GraphX Pregel (batch,
-``maxIter = Int.MaxValue``) becomes an iterative DataFrame self-join
-with *doubling* composition (R_{2k} = R_k ∪ R_k∘R_k), run to a true
-fixpoint like the Pregel: a nesting depth of d closes in ceil(log2(d))
-shuffle rounds plus the one that finds no new edge, at any depth.
-localCheckpoint() per round truncates lineage.  At 10^12-row scale every
-step is a shuffle-partitioned join on the packed long key — no driver
-state at all.  The reference's driver do/while (incremental) is
-``_small_closure``; the doubling fixpoint takes components too large
-for it.
+Spark-first realization of the batch build: the reference's GraphX
+Pregel (``maxIter = Int.MaxValue``) becomes an iterative DataFrame
+self-join with *doubling* composition (R_{2k} = R_k ∪ R_k∘R_k), run to a
+true fixpoint like the Pregel: a nesting depth of d closes in
+ceil(log2(d)) shuffle rounds plus the one that finds no new edge, at any
+depth.  localCheckpoint() per round truncates lineage.  At 10^12-row
+scale every step is a shuffle-partitioned join on the packed long key —
+no driver state at all.  Its two callers are the index build and
+``downset_partitions``; the incremental update never runs it.
 """
 
 from __future__ import annotations
@@ -125,37 +125,8 @@ def downset_partitions(rows: DataFrame) -> DataFrame:
     )
 
 
-def two_hop_edges(index: DataFrame, touched_b: DataFrame) -> DataFrame:
-    """All index edges of every container component touching the update.
-
-    Reproduces the reference's Postgres subquery
-    ``SELECT a,b FROM index WHERE b IN (SELECT DISTINCT b FROM index
-    WHERE a IN (touched))`` as two chained semi-joins for a batch too
-    large for the driver-side IN-list probes (``_small_closure``).
-    ``touched_b`` is a single-column DF named ``a`` of packed
-    changed-entity ids; both probe sides broadcast.
-    """
-    touched = F.broadcast(touched_b.select(F.col("a")).distinct())
-    containers = (
-        index.join(touched, on="a", how="left_semi").select("b").distinct()
-    )
-    return index.join(F.broadcast(containers), on="b", how="left_semi").select("a", "b")
-
-
-# A minutely batch's touched components are tiny by construction (the
-# 2-hop restriction bounds them to the containers of changed entities) —
-# the reference closes them in driver memory (ComputeIndexLocal.scala's
-# do/while over hash maps).  Below this many batch rows, edges and probe
-# rows we do the same: two IN-list probes of the index and a python
-# closure (microseconds) — replacing ~8 Spark jobs (fixpoint rounds x
-# checkpoint+count).  Components larger than this (or full rebuilds)
-# take the distributed doubling fixpoint.  200k edges ~ 3 MB — far
-# beyond any real batch's touched set, far below driver limits.
-SMALL_COMPONENT_EDGES = 200_000
-
-
 def _close_edges_py(edges: set[tuple[int, int]]) -> set[tuple[int, int]]:
-    """Transitive closure of a small edge set, driver-side.
+    """Transitive closure of an edge set, driver-side.
 
     Iterative successor-set propagation (semi-naive: a node's closure is
     the union of its successors' closures), looping until fixpoint —
@@ -178,108 +149,45 @@ def _close_edges_py(edges: set[tuple[int, int]]) -> set[tuple[int, int]]:
     return {(a, b) for a, deps in succ.items() for b in deps}
 
 
-def _probe(df: DataFrame, bound: int):
-    """Arrow collect of ``df`` capped at ``bound + 1`` rows; None when it
-    overflows the bound."""
-    tbl = df.limit(bound + 1).toArrow()
-    return tbl if tbl.num_rows <= bound else None
+def incremental_closure(index: DataFrame, rows) -> tuple:
+    """(None, None, fetch_keys, new_edge_rows) for one change batch
+    ``rows``, the whole batch as a driver-held Arrow table (run_batch
+    collects it once).
 
+    The reference's driver-side update (ComputeIndexLocal.scala:49-89)
+    at any batch size: the batch's row edges in Python, the 2-hop index
+    fetch (PostgresBackend.scala:60-83) as two key probes
+    (``packing.keyed``: IN-lists, broadcast semi-joins over its key
+    bound), each one Arrow collect: ``a IN touched`` gives the
+    containers of the changed entities, ``b IN containers`` every index
+    edge of their components (``existing``).  ``_close_edges_py`` closes
+    their union.
 
-def _small_closure(index: DataFrame, rows, bound: int):
-    """(new_set, all_set, update_keys) of the driver-held batch ``rows``
-    (an Arrow table), or None when the batch, its edges or either index
-    probe overflows ``bound``.
-
-    The 2-hop fetch (PostgresBackend.scala:60-83) runs as two key
-    probes (``packing.keyed``), each one Arrow collect: ``a IN touched``
-    gives the containers of the changed entities, ``b IN containers``
-    every index edge of their components (``existing``)."""
-    if rows.num_rows > bound:
-        return None
-    batch = rows.to_pylist()
+    ``new_edge_rows`` is the sorted list of closed edges not already
+    stored, self-loops dropped, for the caller's index append;
+    ``fetch_keys`` the sorted packed keys whose state rows render the
+    batch (AugmentedDiff.scala:60-83: the batch's own keys and both
+    endpoints of every closed edge), which the caller fetches with no
+    probe job.  The first two slots are always None: the tuple keeps
+    its shape because perfbench's closure note reads ``out[3]``.
+    """
+    # the edges and keys read four columns; converting the others too
+    # (tags, coordinates, timestamps) took 5x as long on a 250k-row batch
+    batch = rows.select(["id", "type", "nds", "members"]).to_pylist()
     row_edges = set(edges_from_rows_py(batch))
     touched = {b for _, b in row_edges}
     containers: set[int] = set()
     if touched:
-        tbl = _probe(keyed(index, "a", touched).select("b"), bound)
-        if tbl is None:
-            return None
         # the raw b column, deduped here: a distinct would cost a shuffle
-        containers = set(tbl["b"].to_pylist())
+        containers = set(keyed(index, "a", touched).select("b").toArrow()["b"].to_pylist())
     existing: set[tuple[int, int]] = set()
     if containers:
-        tbl = _probe(keyed(index, "b", containers).select("a", "b"), bound)
-        if tbl is None:
-            return None
+        tbl = keyed(index, "b", containers).select("a", "b").toArrow()
         existing = set(zip(tbl["a"].to_pylist(), tbl["b"].to_pylist()))
-    edge_set = row_edges | existing
-    if len(edge_set) > bound:
-        return None
-    closed_set = {(a, b) for a, b in _close_edges_py(edge_set) if a != b}
-    # self-loops (only batch node self-edges — the stored index never
-    # holds them) stay in all_edges' endpoint set, mirroring the
-    # distributed branch
-    new_set = sorted(closed_set - existing)
-    all_set = sorted(closed_set | {(a, b) for a, b in row_edges if a == b})
-    update_keys = {pair_to_long_py(r["id"], r["type"]) for r in batch}
-    return new_set, all_set, update_keys
-
-
-def incremental_closure(index: DataFrame, change_rows: DataFrame, rows) -> tuple:
-    """(new_edges, all_edges, fetch_keys, new_edge_rows) for one change
-    batch.
-
-    all_edges = closure of (batch edges ∪ 2-hop existing edges) — the
-    edge set the fetch step needs; new_edges = all_edges \\ existing,
-    appended to the index table by the caller.  Self-loops (node
-    self-edges) are part of all_edges' *endpoint set* but never stored,
-    mirroring the reference.
-
-    Size-routed: a batch whose rows, edges and 2-hop probes each fit
-    ``SMALL_COMPONENT_EDGES`` (read at call time) is closed driver-side
-    (the overwhelmingly common minutely case — the reference's
-    ComputeIndexLocal.scala:49-89 is exactly this shape); the
-    distributed doubling fixpoint handles oversized components.  Both
-    paths produce identical edge sets (fixture-tested).
-
-    ``rows`` is the whole batch as a driver-held Arrow table (run_batch
-    collects it once).  Each route fills one pair of slots:
-    - driver route: ``new_edges``/``all_edges`` are None,
-      ``fetch_keys`` is the packed fetch-key set (update keys ∪
-      all_edges endpoints — exactly ``needed_pairs``) as a sorted
-      Python list and ``new_edge_rows`` the sorted new-edge pair list;
-      the driver-held keys let the caller fetch state with no probe job;
-    - distributed route: ``new_edges``/``all_edges`` are DataFrames,
-      ``fetch_keys`` and ``new_edge_rows`` None.
-    """
-    small = _small_closure(index, rows, SMALL_COMPONENT_EDGES)
-    if small is not None:
-        new_set, all_set, update_keys = small
-        keys = sorted(update_keys | {a for a, _ in all_set} | {b for _, b in all_set})
-        return None, None, keys, new_set
-
-    # Oversize route: checkpoint the probe inputs before the fixpoint —
-    # without this the two-hop semi-join plan re-executes once per
-    # consumer (the fixpoint seed AND the new-edges anti-join), tripling
-    # the probe's work.  The row edges come first, so the probe reads
-    # their checkpoint instead of scanning the batch again.
-    row_edges = edges_from_rows(change_rows, include_node_self_edges=True).localCheckpoint(eager=True)
-    existing = two_hop_edges(index, row_edges.select(F.col("b").alias("a"))).localCheckpoint(eager=True)
-    closed = transitive_closure(row_edges.unionByName(existing))
-    new_edges = closed.join(existing.select("a", "b"), on=["a", "b"], how="left_anti")
-    # endpoints of self-loop edges still matter for the fetch set:
-    all_edges = closed.unionByName(
-        row_edges.filter(F.col("a") == F.col("b")).select("a", "b")
-    ).distinct()
-    return new_edges, all_edges, None, None
-
-
-def needed_pairs(change_rows: DataFrame, all_edges: DataFrame) -> DataFrame:
-    """DataFrame[k: long] of packed (id,type) keys whose rows must be
-    fetched from state to render the batch (AugmentedDiff.scala:60-83
-    semantics: update triples ∪ both endpoints of every edge)."""
-    from_update = change_rows.select(pair_to_long(F.col("id"), F.col("type")).alias("k"))
-    from_edges = all_edges.select(F.col("a").alias("k")).unionByName(
-        all_edges.select(F.col("b").alias("k"))
-    )
-    return from_update.unionByName(from_edges).distinct()
+    edges = row_edges | existing
+    new_edges = sorted({(a, b) for a, b in _close_edges_py(edges) if a != b} - existing)
+    # closing adds no vertex: the closed edges' endpoints are the
+    # endpoints of the edges they close
+    keys = {pair_to_long_py(r["id"], r["type"]) for r in batch}
+    keys.update(k for edge in edges for k in edge)
+    return None, None, sorted(keys), new_edges

@@ -1,27 +1,27 @@
 """The per-minutely-batch augmented-diff pipeline (the engine's core DAG).
 
 Re-expresses the reference's driver loop (AugmentedDiff.scala:47-93 +
-osc2json).  The closure's size decision picks one of two routes for the
-rest of the batch; both run the same history and render Python
-(history.all_histories → render.feature_lines_py), on the whole scope or
-on partitions of it:
+osc2json).  Every batch closes on the driver; the scope's size then
+picks one of two render routes, which run the same history and render
+Python (history.all_histories → render.feature_lines_py) on the whole
+scope or on partitions of it:
 
   change batch ── ONE Arrow collect: the batch rows stay on the driver
                    │
   incremental closure: row edges in Python; the 2-hop index fetch as
     two key probes (a IN touched → containers, b IN containers;
-    packing.keyed: IN-lists, broadcast semi-joins over its key bound)
+    packing.keyed: IN-lists, broadcast semi-joins over its key bound);
+    closed in Python → new edges + fetch keys
                    │
-       small closure (driver route)     │  oversize batch, closure or
-                                        │    scope (grouped route)
+  point lookup of the fetch keys (only their p= dirs)
+                   │
+       scope ≤ DRIVER_SCOPE_ROWS        │  larger scope (grouped route)
+       (driver route)                   │
        ─────────────────────────────    │  ─────────────────────────────────
-       point lookup of the fetch keys:  │  (distributed fixpoint: its new
-         only their p= dirs, IN-lists   │    edges collected once)
-       ONE Arrow collect of the fetched │  needed pairs → semi-join lookup
-         rows (+ held batch, in_batch)  │  scope rows' own containment
-       all_histories → feature_lines_py │    edges → closure → roots; each
-         on the driver                  │    row tagged with every root
-                                        │    above it, hashed on the root
+       ONE Arrow collect of the fetched │  scope rows' own containment
+         rows (+ held batch, in_batch)  │    edges → closure → roots; each
+       all_histories → feature_lines_py │    row tagged with every root
+         on the driver                  │    above it, hashed on the root
                                         │  per partition (whole downsets):
                                         │    all_histories → feature_lines_py
                                         │  ONE Arrow collect of the deduped
@@ -33,13 +33,12 @@ on partitions of it:
 
 The driver route is the reference's own shape (RowsToJson.scala:104-388
 builds histories and geometries for the batch scope in driver memory).
-A scope over the closure's probe bound (closure.SMALL_COMPONENT_EDGES
-rows) runs the same Python on executors instead.  That is exact because
-an entity's history and geometry read only its own rows and those of its
-transitive members, and a partition holds whole downsets of the roots
-hashed to it; an entity under several roots renders identically in each,
-and the duplicates are dropped.  Both routes produce byte-identical
-feature files.
+A scope over DRIVER_SCOPE_ROWS runs the same Python on executors
+instead.  That is exact because an entity's history and geometry read
+only its own rows and those of its transitive members, and a partition
+holds whole downsets of the roots hashed to it; an entity under several
+roots renders identically in each, and the duplicates are dropped.  Both
+routes produce byte-identical feature files.
 
 State/index/lineage/metrics are snapshot-committed tables; the batch's
 own rows append to state AFTER the diff is computed (the diff joins the
@@ -57,12 +56,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..operators import closure, history, render
-from ..operators.closure import downset_partitions, incremental_closure, needed_pairs
+from ..operators import history, render
+from ..operators.closure import downset_partitions, incremental_closure
 from ..schemas import INDEX_SCHEMA, OSM_COLUMNS
 from ..sources.catalog import SnapshotTable
 from ..sources.state import StateTable
 from .lineage import LineageLog, StageTimer
+
+# A minutely batch's scope (the batch plus the state rows its closure
+# fetches) is small by construction, and the reference renders it in
+# driver memory.  Up to this many scope rows we do the same; a larger
+# scope takes the grouped route.  Read at call time.
+DRIVER_SCOPE_ROWS = 200_000
 
 
 def compute_batch_features(
@@ -83,20 +88,10 @@ def compute_batch_features(
     """
     with timer.time("closure"):
         index_df = index.read(spark, schema=INDEX_SCHEMA)
-        new_edges, all_edges, fetch_keys, new_edge_rows = incremental_closure(
-            index_df, batch_df, batch_rows
-        )
-        if new_edge_rows is None:
-            # distributed fixpoint: its new edges come to the driver in
-            # one collect, for the index append and its lineage count
-            tbl = new_edges.toArrow()
-            new_edge_rows = sorted(zip(tbl["a"].to_pylist(), tbl["b"].to_pylist()))
+        _, _, fetch_keys, new_edge_rows = incremental_closure(index_df, batch_rows)
     with timer.time("histories"):
-        if fetch_keys is not None:
-            fetched = state.fetch_keys(spark, fetch_keys)
-        else:
-            fetched = state.fetch_pairs(spark, needed_pairs(batch_df, all_edges))
-        scope = None if fetch_keys is None else _driver_scope(batch_rows, fetched)
+        fetched = state.fetch_keys(spark, fetch_keys)
+        scope = _driver_scope(batch_rows, fetched)
         if scope is not None:
             hists = history.all_histories(scope)
 
@@ -112,10 +107,9 @@ def compute_batch_features(
 
 def _driver_scope(batch_rows: pa.Table, fetched: DataFrame) -> list[dict] | None:
     """The driver route's scope rows (``in_batch`` tagged), or None when
-    the scope overflows the closure bound and takes the grouped route.
-    The closure was small, so the scope its keys fetch is small too:
+    the scope overflows DRIVER_SCOPE_ROWS and takes the grouped route:
     ONE Arrow collect of the fetched rows under the rest of the bound."""
-    room = closure.SMALL_COMPONENT_EDGES - batch_rows.num_rows
+    room = DRIVER_SCOPE_ROWS - batch_rows.num_rows
     if room < 0:
         return None
     tbl = fetched.limit(room + 1).toArrow()
@@ -189,13 +183,10 @@ def run_batch(
     longer silently leaves the others on the module constants."""
     timer = StageTimer(log, spark, seq)
     # ONE collect holds the batch on the driver for the whole batch:
-    # closure probes, scope, state append.  The DataFrame the closure's
-    # distributed fixpoint and the grouped route read is a local
-    # relation over it, checkpointed lazily: the driver route never
-    # scans it (no job), and the other routes scan it several times,
-    # where a bare local relation would ship every row with each job.
+    # closure, scope, state append.  The DataFrame the grouped route
+    # reads is a local relation over it; the driver route never scans it.
     batch_rows = batch_df.toArrow()
-    batch_df = spark.createDataFrame(batch_rows, schema=batch_df.schema).localCheckpoint(eager=False)
+    batch_df = spark.createDataFrame(batch_rows, schema=batch_df.schema)
 
     with timer.time("diff"):
         lines, new_edge_rows = compute_batch_features(

@@ -148,8 +148,8 @@ class StateTable:
         snapshot_id: int | None = None,
     ) -> DataFrame:
         """``fetch_pairs`` with a DRIVER-side packed-key list — zero
-        probe jobs (the caller already holds the keys, e.g. from the
-        incremental closure's small path).  The read lists only the
+        probe jobs (the caller already holds the keys, e.g. the
+        incremental closure's fetch keys).  The read lists only the
         ``p=`` dirs the keys can live in (up to MAX_ENUMERATED_PARTITIONS
         of them).  Up to MAX_ENUMERATED_KEYS keys it filters on the
         exact match ``(type = 'node' AND id IN (...)) OR ...`` and on

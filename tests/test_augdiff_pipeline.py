@@ -1,6 +1,6 @@
 """End-to-end: 8 fixture change batches through the distributed pipeline,
 golden-compared against the independent Python oracle, plus closure
-parity and crash-resume."""
+checks against the oracle and crash-resume."""
 
 import glob
 import json
@@ -61,46 +61,56 @@ def test_batch_index_closure_matches_oracle(spark):
         assert got == expected
 
 
-def test_incremental_closure_paths_agree(spark):
-    """The driver-side small-component closure (the minutely fast path,
-    reference ComputeIndexLocal shape) and the distributed doubling
-    fixpoint must produce identical (new_edges, all_edges) — forced by
-    routing the same batch through both via the size threshold.  A third
-    leg runs the driver closure with its index probes as broadcast
-    semi-joins (every key set over ``MAX_ENUMERATED_KEYS``).  The last
-    batch is a relation chain deeper than 64 edges."""
+# the closure's Spark jobs per batch of
+# test_incremental_closure_matches_oracle on each leg, as measured: one
+# per index probe (the second probe runs only when the batch's entities
+# have containers in the index, as in batches 0 and 5), and one more
+# per probe for a semi-join's broadcast
+CLOSURE_JOBS = {
+    "in-list": [2, 1, 2, 1, 1],
+    "semi-join": [4, 2, 4, 2, 2],
+}
+
+
+def test_incremental_closure_matches_oracle(spark):
+    """incremental_closure's new edges and fetch keys equal the
+    oracle's (``oracle.incremental_closure`` and ``needed_pairs``, which
+    share no code with operators/closure.py) on node/way edits,
+    tombstones, new relations and a relation chain deeper than 64 edges.
+    One leg probes the index with IN-lists, the other with broadcast
+    semi-joins (every key set over ``MAX_ENUMERATED_KEYS``); each runs
+    the pinned number of Spark jobs per batch."""
     from augdiff_pipeline_spark.functions import packing
+    from augdiff_pipeline_spark.functions.packing import pair_to_long_py
     from augdiff_pipeline_spark.operators import closure
 
-    base_df = fixtures.base_state_df(spark)
-    index_df = transitive_closure(edges_from_rows(base_df))
-    # node/way edits, tombstones, new relations, then the deep chain
-    batches = [fixtures.change_batch_df(spark, seq) for seq in (0, 2, 5, 6)]
-    batches.append(spark.createDataFrame(deep_chain_rows(), OSM_SCHEMA))
-    for i, batch in enumerate(batches):
-        rows = batch.toArrow()
-        out = {}
-        for label, thr, max_keys in (
-            ("driver", 200_000, packing.MAX_ENUMERATED_KEYS),
-            ("semi-join", 200_000, 0),
-            ("distributed", 0, packing.MAX_ENUMERATED_KEYS),
-        ):
-            with pytest.MonkeyPatch.context() as mp:
-                mp.setattr(packing, "MAX_ENUMERATED_KEYS", max_keys)
-                mp.setattr(closure, "SMALL_COMPONENT_EDGES", thr)
-                ne, ae, keys, new_rows = closure.incremental_closure(index_df, batch, rows)
-                if label == "distributed":
-                    assert keys is None and new_rows is None
-                    out[label] = (
-                        {(r["a"], r["b"]) for r in ne.collect()},
-                        {(r["a"], r["b"]) for r in ae.collect()},
-                    )
-                else:
-                    assert ne is None and ae is None and new_rows is not None, label
-                    new_set, all_set, _ = closure._small_closure(index_df, rows, thr)
-                    assert new_rows == new_set, label
-                    out[label] = (set(new_set), set(all_set))
-        assert out["driver"] == out["semi-join"] == out["distributed"], f"batch {i}"
+    base_rows = fixtures.base_state_rows()
+    index_df = transitive_closure(edges_from_rows(spark.createDataFrame(base_rows, OSM_SCHEMA)))
+    oracle_index = {(a, b) for a, b in oracle.close_edges(oracle.edges_from_rows(base_rows)) if a != b}
+    changes = fixtures.change_batch_rows()
+    batches = [changes[seq] for seq in (0, 2, 5, 6)] + [deep_chain_rows()]
+    sc = spark.sparkContext
+    for leg, max_keys in (("in-list", packing.MAX_ENUMERATED_KEYS), ("semi-join", 0)):
+        jobs = []
+        for i, batch in enumerate(batches):
+            rows = spark.createDataFrame(batch, OSM_SCHEMA).toArrow()
+            group = f"incremental-closure-{leg}-{i}"
+            sc.setJobGroup(group, "incremental_closure")
+            try:
+                with pytest.MonkeyPatch.context() as mp:
+                    mp.setattr(packing, "MAX_ENUMERATED_KEYS", max_keys)
+                    ne, ae, keys, new_rows = closure.incremental_closure(index_df, rows)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            new_edges, all_edges = oracle.incremental_closure(oracle_index, batch)
+            assert ne is None and ae is None, (leg, i)
+            assert new_rows == sorted(new_edges), (leg, i)
+            assert keys == sorted(
+                pair_to_long_py(eid, etype) for eid, etype in oracle.needed_pairs(batch, all_edges)
+            ), (leg, i)
+        assert jobs == CLOSURE_JOBS[leg], leg
 
 
 def test_downset_partitions_keeps_deep_chain(spark):
@@ -394,8 +404,8 @@ class _Crash(Exception):
 
 # every write of run_batch, in order: (crash seq, the object that
 # writes, its method); the crash comes right after the write lands.
-# The index delta leg runs on the grouped route, whose new edges come
-# from the distributed fixpoint.
+# The index delta leg renders on the grouped route; its new edges come
+# from the driver closure, as on every route.
 CRASH_POINTS = {
     "features": (1, lambda s, i, l: augdiff, "_write_lines"),
     "state_delta": (1, lambda s, i, l: s.table, "append_local"),
@@ -415,16 +425,15 @@ def test_crash_at_every_write_resumes_identically(spark, crash_world, tmp_path, 
     metrics flush, lineage commit and post-commit compaction), then a
     resume with fresh tables and a fresh LineageLog, leaves feature
     files, state and index equal to the uninterrupted run.  The
-    ``_grouped`` leg runs every batch on the distributed closure and the
-    grouped route."""
-    from augdiff_pipeline_spark.operators import closure
+    ``_grouped`` leg renders every batch on the grouped route, after the
+    driver closure."""
     from augdiff_pipeline_spark.plans.runner import resume_and_run
 
     world, expected = crash_world
     root = str(tmp_path / "world")
     _copy_world(world, root)
     if point.endswith("_grouped"):
-        monkeypatch.setattr(closure, "SMALL_COMPONENT_EDGES", 0)
+        monkeypatch.setattr(augdiff, "DRIVER_SCOPE_ROWS", 0)
     crash_seq, owner, method = CRASH_POINTS[point]
     state, index, log = _open_world(root)
     for seq in CRASH_SEQS[:crash_seq]:

@@ -1,21 +1,18 @@
 """Route parity for the per-batch pipeline.
 
-A batch whose closure is small runs on the driver route (histories,
+Every batch closes on the driver.  A batch whose scope fits
+``augdiff.DRIVER_SCOPE_ROWS`` then runs on the driver route (histories,
 geometry and feature lines in driver Python); every other batch runs the
 grouped route (the same Python on executors, once per partition of whole
 root downsets, its deduplicated lines collected to the driver).  Both
 routes write every per-batch delta (feature file, state, index) from the
-driver.  Closing every batch on the distributed path
-(``closure.SMALL_COMPONENT_EDGES`` patched to 0) forces the grouped
-route; its leg is named "dataframe".  A third leg keeps the closure
-small but makes the scope collect overflow (``augdiff._driver_scope``
-returns None), which is what a large scope under a small closure hits:
-the grouped route then runs after the driver-side closure.  The same
-worlds run through all three and must leave byte-identical feature files
-and equal state, index and lineage rows; spies on
-``augdiff._grouped_features`` and on ``incremental_closure``'s 4th
-result (None only on the distributed fixpoint) prove each leg's route.
-The driver route's job count is pinned as a regression guard.
+driver.  ``augdiff.DRIVER_SCOPE_ROWS`` patched to 0 forces the grouped
+route; its leg is named "grouped".  The same worlds run through both
+legs and must leave byte-identical feature files and equal state, index
+and lineage rows; spies on ``augdiff._grouped_features`` and on
+``incremental_closure``'s 4th result (the driver closure's new-edge
+list) prove each leg's route.  Both legs' job counts are pinned as
+regression guards.
 """
 
 import glob
@@ -27,7 +24,6 @@ import pytest
 
 from augdiff_pipeline_spark import fixtures
 from augdiff_pipeline_spark.fixtures import _node_row, _rel_row, _way_row, _ts
-from augdiff_pipeline_spark.operators import closure
 from augdiff_pipeline_spark.operators.closure import edges_from_rows, transitive_closure
 from augdiff_pipeline_spark.plans import augdiff
 from augdiff_pipeline_spark.plans.lineage import LineageLog
@@ -105,7 +101,7 @@ def _run_world(spark, root, base_rows, batches):
     state.init(base_df)
     index.overwrite(transitive_closure(edges_from_rows(base_df)))
 
-    calls = {"grouped": 0, "small": []}
+    calls = {"grouped": 0, "closure": []}
     grouped_features, incremental_closure = augdiff._grouped_features, augdiff.incremental_closure
 
     def grouped_spy(rows):
@@ -114,15 +110,15 @@ def _run_world(spark, root, base_rows, batches):
 
     def closure_spy(*args):
         out = incremental_closure(*args)
-        calls["small"].append(out[3] is not None)
+        calls["closure"].append(isinstance(out[3], list))
         return out
 
     sc = spark.sparkContext
-    files, names, jobs, grouped, small = {}, {}, {}, {}, {}
+    files, names, jobs, grouped, closed = {}, {}, {}, {}, {}
     for seq in sorted(batches):
         batch_df = spark.createDataFrame(batches[seq], OSM_SCHEMA)
         group = f"route-parity-{os.path.basename(root)}-{seq}"
-        calls["grouped"], calls["small"] = 0, []
+        calls["grouped"], calls["closure"] = 0, []
         sc.setJobGroup(group, "run_batch")
         try:
             with pytest.MonkeyPatch.context() as mp:
@@ -132,7 +128,7 @@ def _run_world(spark, root, base_rows, batches):
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         jobs[seq] = _jobs_in_group(spark, group)
-        grouped[seq], small[seq] = calls["grouped"], calls["small"]
+        grouped[seq], closed[seq] = calls["grouped"], calls["closure"]
         parts = sorted(glob.glob(os.path.join(out_dir, f"seq={seq:09d}", "part-*")))
         files[seq] = b"".join(Path(p).read_bytes() for p in parts)
         names[seq] = [os.path.basename(p) for p in parts]
@@ -154,7 +150,7 @@ def _run_world(spark, root, base_rows, batches):
         "names": names,
         "jobs": jobs,
         "grouped": grouped,
-        "small": small,
+        "closure": closed,
         "state": sorted(str(r) for r in state.read(spark).collect()),
         "index": sorted((r["a"], r["b"]) for r in index.read(spark, schema=INDEX_SCHEMA).collect()),
         "lineage": lineage,
@@ -166,12 +162,10 @@ def _run_world(spark, root, base_rows, batches):
 @pytest.fixture(scope="module")
 def routes(spark, tmp_path_factory):
     out = {}
-    for route in ("driver", "dataframe", "mixed"):
+    for route in ("driver", "grouped"):
         with pytest.MonkeyPatch.context() as mp:
-            if route == "dataframe":
-                mp.setattr(closure, "SMALL_COMPONENT_EDGES", 0)
-            elif route == "mixed":
-                mp.setattr(augdiff, "_driver_scope", lambda batch_rows, fetched: None)
+            if route == "grouped":
+                mp.setattr(augdiff, "DRIVER_SCOPE_ROWS", 0)
             for name, (base_rows, batches) in _worlds().items():
                 root = str(tmp_path_factory.mktemp(f"{route}-{name}"))
                 out[route, name] = _run_world(spark, root, base_rows, batches)
@@ -180,31 +174,27 @@ def routes(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("world", ["fixtures", "tombstone", "cycle", "incidental"])
 def test_routes_write_identical_outputs(routes, world):
-    drv = routes["driver", world]
+    drv, grp = routes["driver", world], routes["grouped", world]
     assert any(drv["files"].values()), "no features written"
     # each leg really took its route: the grouped render ran on every
-    # batch of the dataframe and mixed legs and on none of the driver
-    # leg's, and only the dataframe leg closed on the distributed
-    # fixpoint (incremental_closure's 4th result None)
+    # batch of the grouped leg and on none of the driver leg's, and
+    # every batch of both closed once on the driver (incremental_closure's
+    # 4th result a list)
     assert set(drv["grouped"].values()) == {0}, drv["grouped"]
-    assert all(s == [True] for s in drv["small"].values()), drv["small"]
-    mixed, dfr = routes["mixed", world], routes["dataframe", world]
-    assert set(mixed["grouped"].values()) == set(dfr["grouped"].values()) == {1}
-    assert all(s == [True] for s in mixed["small"].values()), mixed["small"]
-    assert all(s == [False] for s in dfr["small"].values()), dfr["small"]
-    # one writer: every leg writes the driver's one file and one
+    assert set(grp["grouped"].values()) == {1}, grp["grouped"]
+    for leg in (drv, grp):
+        assert all(c == [True] for c in leg["closure"].values()), leg["closure"]
+    # one writer: both legs write the driver's one file and one
     # partition -1 index lineage row
-    assert drv["index_parts"] == mixed["index_parts"] == dfr["index_parts"] == {-1}
-    assert all(n == ["part-00000.txt"] for n in drv["names"].values()), drv["names"]
-    for route in ("dataframe", "mixed"):
-        other = routes[route, world]
-        assert all(n == ["part-00000.txt"] for n in other["names"].values()), other["names"]
-        for seq in drv["files"]:
-            assert drv["files"][seq] == other["files"][seq], f"{world} {route} seq {seq}"
-        assert drv["committed"] == other["committed"] == sorted(drv["files"])
-        assert drv["state"] == other["state"], route
-        assert drv["index"] == other["index"], route
-        assert drv["lineage"] == other["lineage"], route
+    assert drv["index_parts"] == grp["index_parts"] == {-1}
+    for leg in (drv, grp):
+        assert all(n == ["part-00000.txt"] for n in leg["names"].values()), leg["names"]
+    for seq in drv["files"]:
+        assert drv["files"][seq] == grp["files"][seq], f"{world} seq {seq}"
+    assert drv["committed"] == grp["committed"] == sorted(drv["files"])
+    assert drv["state"] == grp["state"]
+    assert drv["index"] == grp["index"]
+    assert drv["lineage"] == grp["lineage"]
 
 
 def test_driver_route_job_count(routes):
@@ -212,12 +202,13 @@ def test_driver_route_job_count(routes):
     Spark jobs end to end (a quarter over the 8 measured), compacting
     batches included (batch collect, two index probes, scope collect,
     state compaction); the grouped route runs several times that, and
-    at most 71 (a quarter over the 57 measured, with its features,
-    state and index deltas written from the driver)."""
-    drv, dfr = routes["driver", "fixtures"], routes["dataframe", "fixtures"]
+    at most 52 (a quarter over the 41 measured, after the driver
+    closure, with its features, state and index deltas written from the
+    driver)."""
+    drv, grp = routes["driver", "fixtures"], routes["grouped", "fixtures"]
     assert max(drv["jobs"].values()) <= 10, drv["jobs"]
-    assert dfr["jobs"][0] > 2 * drv["jobs"][0], (drv["jobs"], dfr["jobs"])
-    assert max(dfr["jobs"].values()) <= 71, dfr["jobs"]
+    assert grp["jobs"][0] > 2 * drv["jobs"][0], (drv["jobs"], grp["jobs"])
+    assert max(grp["jobs"].values()) <= 52, grp["jobs"]
 
 
 def test_incidental_world_covers_its_case(routes):
