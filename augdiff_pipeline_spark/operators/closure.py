@@ -24,7 +24,8 @@ ceil(log2(d)) shuffle rounds plus the one that finds no new edge, at any
 depth.  localCheckpoint() per round truncates lineage.  At 10^12-row
 scale every step is a shuffle-partitioned join on the packed long key —
 no driver state at all.  Its two callers are the index build and
-``downset_partitions``; the incremental update never runs it.
+``downset_partitions`` (whose one caller is the polygon layer); the
+incremental update never runs it.
 """
 
 from __future__ import annotations
@@ -102,7 +103,8 @@ def downset_partitions(rows: DataFrame) -> DataFrame:
     """``rows`` hashed into defaultParallelism partitions of complete
     root downsets: every row lands in the partition of each root above
     it, so a partition holds every transitive member of each entity in
-    it (a row under two roots may arrive twice).
+    it (a row under two roots may arrive twice).  The polygon layer
+    renders each partition on an executor.
 
     Containment edges come from the rows themselves, every version
     included: a relation's older member may be present through another

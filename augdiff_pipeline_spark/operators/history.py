@@ -23,8 +23,7 @@ memory:
 
 An entity's history reads only its own rows and those of its transitive
 members, so any scope closed under membership yields the same history
-for every entity in it: the driver route passes the whole batch scope,
-the grouped route (plans/augdiff.py) one partition of whole downsets.
+for every entity in it; plans/augdiff.py passes the whole batch scope.
 """
 
 from __future__ import annotations

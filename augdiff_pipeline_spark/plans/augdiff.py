@@ -1,10 +1,9 @@
 """The per-minutely-batch augmented-diff pipeline (the engine's core DAG).
 
 Re-expresses the reference's driver loop (AugmentedDiff.scala:47-93 +
-osc2json).  Every batch closes on the driver; the scope's size then
-picks one of two render routes, which run the same history and render
-Python (history.all_histories → render.feature_lines_py) on the whole
-scope or on partitions of it:
+osc2json).  Every batch closes and renders on the driver, as the
+reference builds histories and geometries for the batch scope in driver
+memory (RowsToJson.scala:104-388):
 
   change batch ── ONE Arrow collect: the batch rows stay on the driver
                    │
@@ -13,32 +12,14 @@ scope or on partitions of it:
     packing.keyed: IN-lists, broadcast semi-joins over its key bound);
     closed in Python → new edges + fetch keys
                    │
-  point lookup of the fetch keys (only their p= dirs)
+  point lookup of the fetch keys (only their p= dirs), ONE Arrow
+    collect of the fetched rows (+ held batch, in_batch)
                    │
-       scope ≤ DRIVER_SCOPE_ROWS        │  larger scope (grouped route)
-       (driver route)                   │
-       ─────────────────────────────    │  ─────────────────────────────────
-       ONE Arrow collect of the fetched │  scope rows' own containment
-         rows (+ held batch, in_batch)  │    edges → closure → roots; each
-       all_histories → feature_lines_py │    row tagged with every root
-         on the driver                  │    above it, hashed on the root
-                                        │  per partition (whole downsets):
-                                        │    all_histories → feature_lines_py
-                                        │  ONE Arrow collect of the deduped
-                                        │    lines, sorted on the driver
+  history.all_histories → render.feature_lines_py on the driver
                    │
-       every delta written from the driver: feature file (_write_lines)
-         → state delta (pyarrow) → index delta (pyarrow) → lineage
-         commit marker
-
-The driver route is the reference's own shape (RowsToJson.scala:104-388
-builds histories and geometries for the batch scope in driver memory).
-A scope over DRIVER_SCOPE_ROWS runs the same Python on executors
-instead.  That is exact because an entity's history and geometry read
-only its own rows and those of its transitive members, and a partition
-holds whole downsets of the roots hashed to it; an entity under several
-roots renders identically in each, and the duplicates are dropped.  Both
-routes produce byte-identical feature files.
+  every delta written from the driver: feature file (_write_lines)
+    → state delta (pyarrow) → index delta (pyarrow) → lineage
+    commit marker
 
 State/index/lineage/metrics are snapshot-committed tables; the batch's
 own rows append to state AFTER the diff is computed (the diff joins the
@@ -53,34 +34,25 @@ import shutil
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..operators import history, render
-from ..operators.closure import downset_partitions, incremental_closure
+from ..operators.closure import incremental_closure
 from ..schemas import INDEX_SCHEMA, OSM_COLUMNS
 from ..sources.catalog import SnapshotTable
 from ..sources.state import StateTable
 from .lineage import LineageLog, StageTimer
-
-# A minutely batch's scope (the batch plus the state rows its closure
-# fetches) is small by construction, and the reference renders it in
-# driver memory.  Up to this many scope rows we do the same; a larger
-# scope takes the grouped route.  Read at call time.
-DRIVER_SCOPE_ROWS = 200_000
 
 
 def compute_batch_features(
     spark: SparkSession,
     state: StateTable,
     index: SnapshotTable,
-    batch_df: DataFrame,
     batch_rows: pa.Table,
     timer: StageTimer,
 ) -> tuple[list[str], list[tuple[int, int]]]:
     """(feature lines in sink order, new index edges) for one change
-    batch (no writes).  ``batch_rows`` is ``batch_df`` held on the
-    driver.
+    batch held on the driver as ``batch_rows`` (no writes).
 
     ``timer`` splits the diff into closure / histories / render
     sub-stages in the metrics table — the per-batch latency breakdown a
@@ -90,69 +62,21 @@ def compute_batch_features(
         index_df = index.read(spark, schema=INDEX_SCHEMA)
         _, _, fetch_keys, new_edge_rows = incremental_closure(index_df, batch_rows)
     with timer.time("histories"):
-        fetched = state.fetch_keys(spark, fetch_keys)
-        scope = _driver_scope(batch_rows, fetched)
-        if scope is not None:
-            hists = history.all_histories(scope)
-
+        fetched = state.fetch_keys(spark, fetch_keys).toArrow()
+        scope = [
+            {**r, "in_batch": in_batch}
+            for t, in_batch in ((batch_rows, True), (fetched, False))
+            for r in t.select(OSM_COLUMNS).to_pylist()
+        ]
+        hists = history.all_histories(scope)
     with timer.time("render"):
-        if scope is not None:
-            return [line for *_, line in render.feature_lines_py(*hists)], new_edge_rows
-        rows = (
-            batch_df.select(*OSM_COLUMNS).withColumn("in_batch", F.lit(True))
-            .unionByName(fetched.select(*OSM_COLUMNS).withColumn("in_batch", F.lit(False)))
-        )
-        return _grouped_features(rows), new_edge_rows
-
-
-def _driver_scope(batch_rows: pa.Table, fetched: DataFrame) -> list[dict] | None:
-    """The driver route's scope rows (``in_batch`` tagged), or None when
-    the scope overflows DRIVER_SCOPE_ROWS and takes the grouped route:
-    ONE Arrow collect of the fetched rows under the rest of the bound."""
-    room = DRIVER_SCOPE_ROWS - batch_rows.num_rows
-    if room < 0:
-        return None
-    tbl = fetched.limit(room + 1).toArrow()
-    if tbl.num_rows > room:
-        return None
-    return [
-        {**r, "in_batch": in_batch}
-        for t, in_batch in ((batch_rows, True), (tbl, False))
-        for r in t.select(OSM_COLUMNS).to_pylist()
-    ]
-
-
-def _grouped_features(rows: DataFrame) -> list[str]:
-    """Feature lines in sink order of a scope too large for the driver:
-    the driver route's Python, once per partition of complete root
-    downsets (closure.downset_partitions).  Only the deduplicated lines
-    come to the driver, in one Arrow collect."""
-    schema = pa.schema([("etype", pa.string()), ("id", pa.int64()),
-                        ("sub", pa.int32()), ("feature", pa.string())])
-
-    def kernel(batches):
-        batches = list(batches)
-        if batches:
-            # a row under two roots of this partition arrives twice;
-            # all_histories dedups it
-            scope = pa.Table.from_batches(batches).to_pylist()
-            feats = render.feature_lines_py(*history.all_histories(scope))
-            yield pa.RecordBatch.from_pylist([dict(zip(schema.names, f)) for f in feats], schema=schema)
-
-    # an entity under roots of two partitions renders identically in both
-    tbl = downset_partitions(rows).mapInArrow(
-        kernel, "etype string, id long, sub int, feature string"
-    ).dropDuplicates(["etype", "id", "sub"]).toArrow()
-    order = {"node": 0, "way": 1, "relation": 2}
-    feats = zip(tbl["etype"].to_pylist(), tbl["id"].to_pylist(),
-                tbl["sub"].to_pylist(), tbl["feature"].to_pylist())
-    return [f for *_, f in sorted(feats, key=lambda r: (order[r[0]], r[1], r[2]))]
+        return [line for *_, line in render.feature_lines_py(*hists)], new_edge_rows
 
 
 def _write_lines(path: str, lines: list[str]) -> None:
-    """The batch's feature file (both routes), in the Spark text
-    writer's ``part-*`` layout.  Like its overwrite mode, the directory
-    of any earlier attempt is replaced first; the file is written under
+    """The batch's feature file, in the Spark text writer's ``part-*``
+    layout.  Like its overwrite mode, the directory of any earlier
+    attempt is replaced first; the file is written under
     a hidden temp name inside it (ignored by ``part-*`` readers and
     partition discovery, deleted by the next attempt) and moved in with
     ``os.replace``."""
@@ -179,19 +103,14 @@ def run_batch(
     Compaction cadence: the state table compacts on ITS save_interval /
     keep_snapshots; the index follows the state table's knobs (one
     pipeline, one cadence), and the lineage/metrics tables follow the
-    LineageLog's own constructor knobs — tuning any table's cadence no
-    longer silently leaves the others on the module constants."""
+    LineageLog's own constructor knobs."""
     timer = StageTimer(log, spark, seq)
     # ONE collect holds the batch on the driver for the whole batch:
-    # closure, scope, state append.  The DataFrame the grouped route
-    # reads is a local relation over it; the driver route never scans it.
+    # closure, scope, state append
     batch_rows = batch_df.toArrow()
-    batch_df = spark.createDataFrame(batch_rows, schema=batch_df.schema)
 
     with timer.time("diff"):
-        lines, new_edge_rows = compute_batch_features(
-            spark, state, index, batch_df, batch_rows, timer
-        )
+        lines, new_edge_rows = compute_batch_features(spark, state, index, batch_rows, timer)
 
     path = os.path.join(out_dir, f"seq={seq:09d}")
     with timer.time("write_features"):

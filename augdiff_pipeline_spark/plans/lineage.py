@@ -232,11 +232,11 @@ class StageTimer:
 
         class _Ctx:
             def __enter__(self):
-                self.t0 = time.time()
+                self.t0 = time.perf_counter()
                 return self
 
             def __exit__(self, *exc):
-                dt = time.time() - self.t0
+                dt = time.perf_counter() - self.t0
                 timer.timings[stage] = round(dt, 4)
                 if record_to_log:
                     timer.log.record_metric(timer.spark, timer.seq, stage, "wall_sec", dt)

@@ -404,13 +404,11 @@ class _Crash(Exception):
 
 # every write of run_batch, in order: (crash seq, the object that
 # writes, its method); the crash comes right after the write lands.
-# The index delta leg renders on the grouped route; its new edges come
-# from the driver closure, as on every route.
 CRASH_POINTS = {
     "features": (1, lambda s, i, l: augdiff, "_write_lines"),
     "state_delta": (1, lambda s, i, l: s.table, "append_local"),
     "state_compaction": (1, lambda s, i, l: s.table, "compact"),
-    "index_delta_grouped": (1, lambda s, i, l: i, "append_local"),
+    "index_delta": (1, lambda s, i, l: i, "append_local"),
     "index_compaction": (1, lambda s, i, l: i, "compact"),
     "metrics_flush": (1, lambda s, i, l: l.metrics, "append_local"),
     "lineage_commit": (1, lambda s, i, l: l.lineage, "append_local"),
@@ -424,16 +422,12 @@ def test_crash_at_every_write_resumes_identically(spark, crash_world, tmp_path, 
     state delta and compaction, index delta and pre-commit compaction,
     metrics flush, lineage commit and post-commit compaction), then a
     resume with fresh tables and a fresh LineageLog, leaves feature
-    files, state and index equal to the uninterrupted run.  The
-    ``_grouped`` leg renders every batch on the grouped route, after the
-    driver closure."""
+    files, state and index equal to the uninterrupted run."""
     from augdiff_pipeline_spark.plans.runner import resume_and_run
 
     world, expected = crash_world
     root = str(tmp_path / "world")
     _copy_world(world, root)
-    if point.endswith("_grouped"):
-        monkeypatch.setattr(augdiff, "DRIVER_SCOPE_ROWS", 0)
     crash_seq, owner, method = CRASH_POINTS[point]
     state, index, log = _open_world(root)
     for seq in CRASH_SEQS[:crash_seq]:

@@ -1,40 +1,49 @@
-"""Route parity for the per-batch pipeline.
+"""Per-batch pipeline outputs locked against per-world goldens.
 
-Every batch closes on the driver.  A batch whose scope fits
-``augdiff.DRIVER_SCOPE_ROWS`` then runs on the driver route (histories,
-geometry and feature lines in driver Python); every other batch runs the
-grouped route (the same Python on executors, once per partition of whole
-root downsets, its deduplicated lines collected to the driver).  Both
-routes write every per-batch delta (feature file, state, index) from the
-driver.  ``augdiff.DRIVER_SCOPE_ROWS`` patched to 0 forces the grouped
-route; its leg is named "grouped".  The same worlds run through both
-legs and must leave byte-identical feature files and equal state, index
-and lineage rows; spies on ``augdiff._grouped_features`` and on
-``incremental_closure``'s 4th result (the driver closure's new-edge
-list) prove each leg's route.  Both legs' job counts are pinned as
-regression guards.
+Every batch closes on the driver and renders its whole scope there
+(histories, geometry and feature lines in driver Python), and every
+per-batch delta (feature file, state, index) is written from the
+driver.  The worlds below (the fixture and soak batches, the tombstone
+deletes, a containment cycle and an incidental before-version member)
+run through ``run_batch`` and must leave the feature files, state, index
+and lineage rows recorded in tests/data/batch_worlds_golden.json.  The
+golden was captured while a second, distributed render route still
+existed and agreed with this one byte for byte on every world.
+
+A spy on ``incremental_closure``'s 4th result (the driver closure's
+new-edge list) proves every batch closes once on the driver, and the
+fixture world's Spark job count is pinned as a regression guard.
+
+Regenerate the golden with ``python tests/test_route_parity.py``.
 """
 
 import glob
+import hashlib
 import json
 import os
+import sys
 from pathlib import Path
 
 import pytest
 
-from augdiff_pipeline_spark import fixtures
-from augdiff_pipeline_spark.fixtures import _node_row, _rel_row, _way_row, _ts
-from augdiff_pipeline_spark.operators.closure import edges_from_rows, transitive_closure
-from augdiff_pipeline_spark.plans import augdiff
-from augdiff_pipeline_spark.plans.lineage import LineageLog
-from augdiff_pipeline_spark.schemas import INDEX_SCHEMA, LINEAGE_SCHEMA, OSM_SCHEMA
-from augdiff_pipeline_spark.sources.catalog import SnapshotTable
-from augdiff_pipeline_spark.sources.state import StateTable
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import test_tombstone_golden as tombstone
+from augdiff_pipeline_spark import fixtures  # noqa: E402
+from augdiff_pipeline_spark.fixtures import _node_row, _rel_row, _way_row, _ts  # noqa: E402
+from augdiff_pipeline_spark.operators.closure import edges_from_rows, transitive_closure  # noqa: E402
+from augdiff_pipeline_spark.plans import augdiff  # noqa: E402
+from augdiff_pipeline_spark.plans.lineage import LineageLog  # noqa: E402
+from augdiff_pipeline_spark.schemas import INDEX_SCHEMA, LINEAGE_SCHEMA, OSM_SCHEMA  # noqa: E402
+from augdiff_pipeline_spark.sources.catalog import SnapshotTable  # noqa: E402
+from augdiff_pipeline_spark.sources.state import StateTable  # noqa: E402
+
+import test_tombstone_golden as tombstone  # noqa: E402
+
+GOLDEN = os.path.join(os.path.dirname(__file__), "data", "batch_worlds_golden.json")
+WORLDS = ["fixtures", "tombstone", "cycle", "incidental"]
 
 # two relations that contain each other: the histories fixpoint and the
-# render rounds must both stop on the cycle and agree across routes
+# render rounds must both stop on the cycle
 CYCLE_BASE = [
     _node_row(9501, 1, _ts(0), lon=30.0, lat=40.0),
     _node_row(9502, 1, _ts(0), lon=30.1, lat=40.0),
@@ -56,9 +65,9 @@ CYCLE_BATCHES = {
 }
 
 # a relation whose before-version member (node 9801) is in scope only
-# through way 9900, and a moved node (9802) under two roots (ways 9900
-# and 9901): the grouped route must still emit 9950's invisible v1 line
-# and 9802's lines once
+# through way 9900, and a moved node (9802) under two ways (9900 and
+# 9901): the batch must still emit 9950's invisible v1 line and 9802's
+# lines once
 INCIDENTAL_BASE = [
     _node_row(9801, 1, _ts(0), lon=31.0, lat=41.0),
     _node_row(9802, 1, _ts(0), lon=31.1, lat=41.0),
@@ -92,6 +101,10 @@ def _jobs_in_group(spark, group):
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _sha(text: str) -> str:
+    return hashlib.sha256(text.encode()).hexdigest()
+
+
 def _run_world(spark, root, base_rows, batches):
     state = StateTable(os.path.join(root, "state"))
     index = SnapshotTable(os.path.join(root, "index"))
@@ -101,34 +114,29 @@ def _run_world(spark, root, base_rows, batches):
     state.init(base_df)
     index.overwrite(transitive_closure(edges_from_rows(base_df)))
 
-    calls = {"grouped": 0, "closure": []}
-    grouped_features, incremental_closure = augdiff._grouped_features, augdiff.incremental_closure
-
-    def grouped_spy(rows):
-        calls["grouped"] += 1
-        return grouped_features(rows)
+    closures: list = []
+    incremental_closure = augdiff.incremental_closure
 
     def closure_spy(*args):
         out = incremental_closure(*args)
-        calls["closure"].append(isinstance(out[3], list))
+        closures.append(isinstance(out[3], list))
         return out
 
     sc = spark.sparkContext
-    files, names, jobs, grouped, closed = {}, {}, {}, {}, {}
+    files, names, jobs, closed = {}, {}, {}, {}
     for seq in sorted(batches):
         batch_df = spark.createDataFrame(batches[seq], OSM_SCHEMA)
-        group = f"route-parity-{os.path.basename(root)}-{seq}"
-        calls["grouped"], calls["closure"] = 0, []
+        group = f"batch-worlds-{os.path.basename(root)}-{seq}"
+        closures.clear()
         sc.setJobGroup(group, "run_batch")
         try:
             with pytest.MonkeyPatch.context() as mp:
-                mp.setattr(augdiff, "_grouped_features", grouped_spy)
                 mp.setattr(augdiff, "incremental_closure", closure_spy)
                 augdiff.run_batch(spark, state, index, log, batch_df, seq, out_dir)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         jobs[seq] = _jobs_in_group(spark, group)
-        grouped[seq], closed[seq] = calls["grouped"], calls["closure"]
+        closed[seq] = list(closures)
         parts = sorted(glob.glob(os.path.join(out_dir, f"seq={seq:09d}", "part-*")))
         files[seq] = b"".join(Path(p).read_bytes() for p in parts)
         names[seq] = [os.path.basename(p) for p in parts]
@@ -138,8 +146,8 @@ def _run_world(spark, root, base_rows, batches):
     for r in log.lineage.read(spark, schema=LINEAGE_SCHEMA).collect():
         if r["stage"] == "index_append":
             index_parts.add(r["partition_id"])
-        # every stage writes one partition -1 row; the totals per stage
-        # are what the routes must agree on
+        # every stage writes one partition -1 row; the golden holds the
+        # total per stage
         key = (r["seq"], r["stage"], r["input_snapshot"], r["output_snapshot"])
         total = lineage.get(key)
         if r["row_count"] is not None:
@@ -149,7 +157,6 @@ def _run_world(spark, root, base_rows, batches):
         "files": files,
         "names": names,
         "jobs": jobs,
-        "grouped": grouped,
         "closure": closed,
         "state": sorted(str(r) for r in state.read(spark).collect()),
         "index": sorted((r["a"], r["b"]) for r in index.read(spark, schema=INDEX_SCHEMA).collect()),
@@ -159,66 +166,75 @@ def _run_world(spark, root, base_rows, batches):
     }
 
 
+def world_digest(world: dict) -> dict:
+    """The golden's record of one world's run: sha256 of each seq's
+    feature file, of the sorted state rows and of the sorted index
+    rows (with their counts), the lineage totals and the committed seqs."""
+    return {
+        "files": {str(seq): hashlib.sha256(b).hexdigest() for seq, b in sorted(world["files"].items())},
+        "state": [len(world["state"]), _sha("\n".join(world["state"]))],
+        "index": [len(world["index"]), _sha(json.dumps(world["index"]))],
+        "lineage": sorted(([*k, v] for k, v in world["lineage"].items()), key=str),
+        "committed": world["committed"],
+    }
+
+
+def _run_worlds(spark, mktemp):
+    return {name: _run_world(spark, mktemp(name), base_rows, batches)
+            for name, (base_rows, batches) in _worlds().items()}
+
+
 @pytest.fixture(scope="module")
-def routes(spark, tmp_path_factory):
-    out = {}
-    for route in ("driver", "grouped"):
-        with pytest.MonkeyPatch.context() as mp:
-            if route == "grouped":
-                mp.setattr(augdiff, "DRIVER_SCOPE_ROWS", 0)
-            for name, (base_rows, batches) in _worlds().items():
-                root = str(tmp_path_factory.mktemp(f"{route}-{name}"))
-                out[route, name] = _run_world(spark, root, base_rows, batches)
-    return out
+def worlds(spark, tmp_path_factory):
+    return _run_worlds(spark, lambda name: str(tmp_path_factory.mktemp(name)))
 
 
-@pytest.mark.parametrize("world", ["fixtures", "tombstone", "cycle", "incidental"])
-def test_routes_write_identical_outputs(routes, world):
-    drv, grp = routes["driver", world], routes["grouped", world]
-    assert any(drv["files"].values()), "no features written"
-    # each leg really took its route: the grouped render ran on every
-    # batch of the grouped leg and on none of the driver leg's, and
-    # every batch of both closed once on the driver (incremental_closure's
-    # 4th result a list)
-    assert set(drv["grouped"].values()) == {0}, drv["grouped"]
-    assert set(grp["grouped"].values()) == {1}, grp["grouped"]
-    for leg in (drv, grp):
-        assert all(c == [True] for c in leg["closure"].values()), leg["closure"]
-    # one writer: both legs write the driver's one file and one
-    # partition -1 index lineage row
-    assert drv["index_parts"] == grp["index_parts"] == {-1}
-    for leg in (drv, grp):
-        assert all(n == ["part-00000.txt"] for n in leg["names"].values()), leg["names"]
-    for seq in drv["files"]:
-        assert drv["files"][seq] == grp["files"][seq], f"{world} seq {seq}"
-    assert drv["committed"] == grp["committed"] == sorted(drv["files"])
-    assert drv["state"] == grp["state"]
-    assert drv["index"] == grp["index"]
-    assert drv["lineage"] == grp["lineage"]
+@pytest.mark.parametrize("world", WORLDS)
+def test_world_matches_golden(worlds, world):
+    got = worlds[world]
+    assert any(got["files"].values()), "no features written"
+    # every batch closed once on the driver (incremental_closure's 4th
+    # result a list)
+    assert all(c == [True] for c in got["closure"].values()), got["closure"]
+    # one writer: the driver's one file and one partition -1 index
+    # lineage row
+    assert got["index_parts"] == {-1}
+    assert all(n == ["part-00000.txt"] for n in got["names"].values()), got["names"]
+    assert got["committed"] == sorted(got["files"])
+    with open(GOLDEN) as fh:
+        golden = json.load(fh)[world]
+    assert json.loads(json.dumps(world_digest(got))) == golden
 
 
-def test_driver_route_job_count(routes):
-    """Every fixture and soak batch on the driver route runs at most 10
-    Spark jobs end to end (a quarter over the 8 measured), compacting
-    batches included (batch collect, two index probes, scope collect,
-    state compaction); the grouped route runs several times that, and
-    at most 52 (a quarter over the 41 measured, after the driver
-    closure, with its features, state and index deltas written from the
-    driver)."""
-    drv, grp = routes["driver", "fixtures"], routes["grouped", "fixtures"]
-    assert max(drv["jobs"].values()) <= 10, drv["jobs"]
-    assert grp["jobs"][0] > 2 * drv["jobs"][0], (drv["jobs"], grp["jobs"])
-    assert max(grp["jobs"].values()) <= 52, grp["jobs"]
+def test_driver_route_job_count(worlds):
+    """Every fixture and soak batch runs at most 10 Spark jobs end to
+    end (a quarter over the 8 measured), compacting batches included
+    (batch collect, two index probes, scope collect, state compaction)."""
+    jobs = worlds["fixtures"]["jobs"]
+    assert max(jobs.values()) <= 10, jobs
 
 
-def test_incidental_world_covers_its_case(routes):
+def test_incidental_world_covers_its_case(worlds):
     """The incidental world's batch emits relation 9950's invisible v1
     line, which reads node 9801 (in scope only through way 9900), and
-    one line per side for node 9802 (under two roots); the other legs
-    match these bytes per test_routes_write_identical_outputs."""
-    lines = routes["driver", "incidental"]["files"][0].decode().splitlines()
+    one line per side for node 9802 (under two ways)."""
+    lines = worlds["incidental"]["files"][0].decode().splitlines()
     keys = [(p["type"], p["id"], p["version"], p["visible"])
             for p in (json.loads(line)["properties"] for line in lines)]
     assert len(keys) == len(set(keys)) == 8, keys
     assert ("relation", 9950, 1, False) in keys, keys
     assert ("node", 9802, 1, False) in keys and ("node", 9802, 2, True) in keys, keys
+
+
+if __name__ == "__main__":
+    import tempfile
+
+    from augdiff_pipeline_spark.session import get_spark
+
+    s = get_spark("batch-worlds-golden", cores=4, shuffle_partitions=8)
+    with tempfile.TemporaryDirectory() as tmp:
+        runs = _run_worlds(s, lambda name: os.path.join(tmp, name))
+    with open(GOLDEN, "w") as fh:
+        json.dump({name: world_digest(runs[name]) for name in WORLDS}, fh, indent=1)
+        fh.write("\n")
+    s.stop()
