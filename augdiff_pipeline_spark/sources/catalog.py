@@ -20,8 +20,10 @@ ids, so swapping in Iceberg changes only this module.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import shutil
 import time
 import uuid
 from dataclasses import dataclass
@@ -37,6 +39,18 @@ class Snapshot:
     data_dirs: list[str]
     committed_at_ms: int
     summary: dict
+
+
+def copy_tables(src: str, dst: str) -> None:
+    """Copy a directory of snapshot tables to ``dst``.  Manifests name
+    their data dirs by absolute path, so each copied manifest is
+    re-pointed at the copy's own dirs."""
+    shutil.copytree(src, dst)
+    for m in glob.glob(os.path.join(dst, "*", "_meta", "snapshots.json")):
+        with open(m) as fh:
+            text = fh.read()
+        with open(m, "w") as fh:
+            fh.write(text.replace(src, dst))
 
 
 class SnapshotTable:

@@ -24,7 +24,6 @@ sha256 of the feature file.
 from __future__ import annotations
 
 import argparse
-import glob
 import hashlib
 import json
 import os
@@ -33,6 +32,8 @@ import shutil
 import subprocess
 import sys
 import time
+
+from perfbench import harness
 
 ROOT = os.path.dirname(os.path.abspath(__file__))
 LEGS = ["create250k", "import60k", "rel4k", "rel50k"]
@@ -114,24 +115,15 @@ def build(leg: str, leg_dir: str) -> None:
     open(os.path.join(leg_dir, "built"), "w").close()
 
 
-def _copy_world(src: str, dst: str) -> None:
-    """A copy of a world whose manifests name the copy's own data dirs."""
-    shutil.rmtree(dst, ignore_errors=True)
-    shutil.copytree(src, dst)
-    for m in glob.glob(os.path.join(dst, "*", "_meta", "snapshots.json")):
-        with open(m) as fh:
-            text = fh.read()
-        with open(m, "w") as fh:
-            fh.write(text.replace(src, dst))
-
-
 def run(leg: str, leg_dir: str) -> dict:
     """One batch over a fresh copy of the leg's world."""
     from augdiff_pipeline_spark.plans.augdiff import run_batch
     from augdiff_pipeline_spark.schemas import OSM_SCHEMA
+    from augdiff_pipeline_spark.sources.catalog import copy_tables
 
     root = os.path.join(leg_dir, "run")
-    _copy_world(os.path.join(leg_dir, "world"), root)
+    shutil.rmtree(root, ignore_errors=True)
+    copy_tables(os.path.join(leg_dir, "world"), root)
     spark = _spark(f"overbound-{leg}")
     sc = spark.sparkContext
     batch_df = spark.read.schema(OSM_SCHEMA).parquet(os.path.join(leg_dir, "batch.parquet"))
@@ -181,7 +173,8 @@ def main() -> None:
     # package from this checkout
     env = dict(os.environ, PYTHONPATH=os.pathsep.join(
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p))
-    env.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
+    # the driver JVM size perfbench runs under: a quarter of host RAM
+    env.setdefault("SPARK_GRAFT_DRIVER_MEM", harness.driver_memory())
     for leg in legs:
         cmd = [sys.executable, os.path.abspath(__file__), "--leg", leg, "--work", args.work]
         if not os.path.exists(os.path.join(args.work, leg, "built")):

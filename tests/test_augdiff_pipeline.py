@@ -5,7 +5,6 @@ checks against the oracle and crash-resume."""
 import glob
 import json
 import os
-import shutil
 from pathlib import Path
 
 import pytest
@@ -18,7 +17,7 @@ from augdiff_pipeline_spark.plans import augdiff
 from augdiff_pipeline_spark.plans.augdiff import run_batch
 from augdiff_pipeline_spark.plans.lineage import LineageLog
 from augdiff_pipeline_spark.schemas import INDEX_SCHEMA, OSM_SCHEMA
-from augdiff_pipeline_spark.sources.catalog import SnapshotTable
+from augdiff_pipeline_spark.sources.catalog import SnapshotTable, copy_tables
 from augdiff_pipeline_spark.sources.state import StateTable
 
 import oracle_augdiff as oracle
@@ -351,14 +350,6 @@ def test_resume_after_crash_between_state_and_index_append(spark, pipeline_run, 
 CRASH_SEQS = (0, 1, 2)
 
 
-def _copy_world(src, dst):
-    """A copy of an initialized world whose manifests name the copy's
-    own data dirs."""
-    shutil.copytree(src, dst)
-    for m in glob.glob(os.path.join(dst, "*", "_meta", "snapshots.json")):
-        Path(m).write_text(Path(m).read_text().replace(src, dst))
-
-
 def _open_world(root):
     """State, index and lineage of a world, on a cadence at which batch 1
     compacts state and index, batch 1 flushes metrics and batch 2
@@ -391,7 +382,7 @@ def crash_world(spark, tmp_path_factory):
     state.init(base_df)
     index.overwrite(transitive_closure(edges_from_rows(base_df)))
     ref = root + "-uninterrupted"
-    _copy_world(root, ref)
+    copy_tables(root, ref)
     state, index, log = _open_world(ref)
     for seq in CRASH_SEQS:
         run_batch(spark, state, index, log, fixtures.change_batch_df(spark, seq), seq, ref + "/out")
@@ -427,7 +418,7 @@ def test_crash_at_every_write_resumes_identically(spark, crash_world, tmp_path, 
 
     world, expected = crash_world
     root = str(tmp_path / "world")
-    _copy_world(world, root)
+    copy_tables(world, root)
     crash_seq, owner, method = CRASH_POINTS[point]
     state, index, log = _open_world(root)
     for seq in CRASH_SEQS[:crash_seq]:
