@@ -17,27 +17,33 @@ Semantics (locked by fixture tests, no code copied):
   already stored.
 
 Spark-first realization of the batch build: the reference's GraphX
-Pregel (``maxIter = Int.MaxValue``) becomes an iterative DataFrame
-self-join with *doubling* composition (R_{2k} = R_k ∪ R_k∘R_k), run to a
-true fixpoint like the Pregel: a nesting depth of d closes in
-ceil(log2(d)) shuffle rounds plus the one that finds no new edge, at any
-depth.  localCheckpoint() per round truncates lineage.  At 10^12-row
-scale every step is a shuffle-partitioned join on the packed long key —
-no driver state at all.  Its two callers are the index build and
+Pregel (Indexer.scala:14-60, ``maxIter = Int.MaxValue``) becomes a
+closure by OSM type with no loop.  Ways hold only nodes, so every
+containment path is x -> way -> relation* or x -> relation -> relation*:
+with W the edges into ways, M the edges into relations and RR+ the
+closure of M's relation -> relation edges, the closure is
+W ∪ C ∪ W∘C with C = M ∪ M∘RR+, two joins at any nesting depth.  RR+ is
+closed on the driver with ``_close_edges_py`` (the shape of the
+reference's driver-side ComputeIndexLocal.scala:49-89); every other
+edge stays in Spark.  Its two callers are the index build and
 ``downset_partitions`` (whose one caller is the polygon layer); the
 incremental update never runs it.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.packing import keyed, pair_to_long, pair_to_long_py
+from ..schemas import TYPE_CODES
 
 
-def edges_from_rows(rows: DataFrame, include_node_self_edges: bool = True) -> DataFrame:
-    """DataFrame[a: long, b: long] containment edges from entity rows."""
+def edges_from_rows(rows: DataFrame) -> DataFrame:
+    """DataFrame[a: long, b: long] containment edges from entity rows:
+    ``edges_from_rows_py``'s edges without the node self-edges, which
+    ``transitive_closure`` would drop."""
     b_col = pair_to_long(F.col("id"), F.col("type"))
 
     way_edges = (
@@ -50,19 +56,14 @@ def edges_from_rows(rows: DataFrame, include_node_self_edges: bool = True) -> Da
         .select(F.explode("members").alias("m"), b_col.alias("b"))
         .select(pair_to_long(F.col("m.ref"), F.col("m.type")).alias("a"), "b")
     )
-    edges = way_edges.unionByName(rel_edges)
-    if include_node_self_edges:
-        node_self = (
-            rows.filter(F.col("type") == "node")
-            .select(b_col.alias("a"), b_col.alias("b"))
-        )
-        edges = edges.unionByName(node_self)
-    return edges
+    return way_edges.unionByName(rel_edges)
 
 
 def edges_from_rows_py(rows: list[dict], include_node_self_edges: bool = True) -> list[tuple[int, int]]:
     """Driver-side twin of ``edges_from_rows`` over row dicts (an Arrow
-    table's ``to_pylist``): the same (a, b) edges, duplicates kept."""
+    table's ``to_pylist``): the same (a, b) edges, duplicates kept, and
+    with ``include_node_self_edges`` one (b, b) per node row, which
+    ``incremental_closure``'s touched set reads."""
     edges = []
     for r in rows:
         b = pair_to_long_py(r["id"], r["type"])
@@ -76,27 +77,41 @@ def edges_from_rows_py(rows: list[dict], include_node_self_edges: bool = True) -
 
 
 def transitive_closure(edges: DataFrame) -> DataFrame:
-    """Closure of (a,b) containment edges, self-loops removed.
+    """Closure of (a,b) containment edges, self-loops removed, by OSM
+    type (module docstring): W ∪ C ∪ W∘C with C = M ∪ M∘RR+, where
+    ``ways`` is W, ``rels`` M and ``contained`` C.
 
-    Doubling fixpoint: each round composes the current closure with
-    itself ((a,b) ∧ (b,c) → (a,c)) and unions, until the edge count
-    stops growing.  Each round = one shuffle join on ``b``/``a`` + one
-    distinct; AQE handles skewed containers (a mega-relation's key fans
-    out on the build side).
-    """
+    The one set held on the driver is M's relation -> relation edges
+    and their closure RR+, which this design relies on fitting there:
+    one Arrow collect, ``_close_edges_py``, and RR+ back as a broadcast
+    local relation.  Edges into nodes are dropped: only a node's
+    self-edge has one.  The distinct edges are checkpointed once, for
+    the collect and the two joins to scan."""
     cur = edges.select("a", "b").distinct().localCheckpoint(eager=True)
-    n = cur.count()
-    while True:
-        composed = (
-            cur.alias("l")
-            .join(cur.alias("r"), F.col("l.b") == F.col("r.a"))
-            .select(F.col("l.a").alias("a"), F.col("r.b").alias("b"))
-        )
-        cur = cur.unionByName(composed).distinct().localCheckpoint(eager=True)
-        n2 = cur.count()
-        if n2 == n:
-            return cur.filter(F.col("a") != F.col("b"))
-        n = n2
+    into = F.col("b").bitwiseAND(3)
+    ways = cur.filter(into == TYPE_CODES["way"])
+    rels = cur.filter(into == TYPE_CODES["relation"])
+    rr = rels.filter(F.col("a").bitwiseAND(3) == TYPE_CODES["relation"]).toArrow()
+    rr_plus = _close_edges_py(set(zip(rr["a"].to_pylist(), rr["b"].to_pylist())))
+    rr_plus_df = cur.sparkSession.createDataFrame(pa.table({
+        "a": pa.array([a for a, _ in rr_plus], pa.int64()),
+        "b": pa.array([b for _, b in rr_plus], pa.int64()),
+    }))
+    contained = rels.unionByName(_compose(rels, F.broadcast(rr_plus_df)))
+    # a fixed sort-merge join: left to AQE, it becomes a broadcast join
+    # or not by which side's shuffle finishes first, and the job count
+    # varies from run to run
+    closed = ways.unionByName(contained).unionByName(_compose(ways, contained.hint("merge")))
+    return closed.distinct().filter(F.col("a") != F.col("b"))
+
+
+def _compose(left: DataFrame, right: DataFrame) -> DataFrame:
+    """(a,b) ∧ (b,c) → (a,c) over two edge frames."""
+    return (
+        left.alias("l")
+        .join(right.alias("r"), F.col("l.b") == F.col("r.a"))
+        .select(F.col("l.a").alias("a"), F.col("r.b").alias("b"))
+    )
 
 
 def downset_partitions(rows: DataFrame) -> DataFrame:
@@ -111,7 +126,7 @@ def downset_partitions(rows: DataFrame) -> DataFrame:
     container alone.  A root is a key none of whose containers lacks the
     reverse edge, so every member of a containment cycle is a root."""
     rows = rows.withColumn("_k", pair_to_long(F.col("id"), F.col("type"))).localCheckpoint(eager=True)
-    closed = transitive_closure(edges_from_rows(rows, include_node_self_edges=False))
+    closed = transitive_closure(edges_from_rows(rows))
     reverse = closed.select(F.col("b").alias("a"), F.col("a").alias("b"))
     contained = closed.join(reverse, ["a", "b"], "left_anti").select(F.col("a").alias("_k"))
     roots = rows.select("_k").distinct().join(contained, "_k", "left_anti")
@@ -131,8 +146,9 @@ def _close_edges_py(edges: set[tuple[int, int]]) -> set[tuple[int, int]]:
     """Transitive closure of an edge set, driver-side.
 
     Iterative successor-set propagation (semi-naive: a node's closure is
-    the union of its successors' closures), looping until fixpoint —
-    equivalent to the distributed doubling fixpoint on the same input.
+    the union of its successors' closures), looping until fixpoint.
+    ``incremental_closure`` closes every batch with it and
+    ``transitive_closure`` its relation -> relation edges.
     """
     succ: dict[int, set[int]] = {}
     for a, b in edges:

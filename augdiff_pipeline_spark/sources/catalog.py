@@ -20,7 +20,6 @@ ids, so swapping in Iceberg changes only this module.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import shutil
@@ -39,18 +38,6 @@ class Snapshot:
     data_dirs: list[str]
     committed_at_ms: int
     summary: dict
-
-
-def copy_tables(src: str, dst: str) -> None:
-    """Copy a directory of snapshot tables to ``dst``.  Manifests name
-    their data dirs by absolute path, so each copied manifest is
-    re-pointed at the copy's own dirs."""
-    shutil.copytree(src, dst)
-    for m in glob.glob(os.path.join(dst, "*", "_meta", "snapshots.json")):
-        with open(m) as fh:
-            text = fh.read()
-        with open(m, "w") as fh:
-            fh.write(text.replace(src, dst))
 
 
 class SnapshotTable:
@@ -75,6 +62,12 @@ class SnapshotTable:
     def current_id(self) -> int | None:
         cur = self.current()
         return cur.snapshot_id if cur else None
+
+    def data_path(self, data_dir: str) -> str:
+        """A manifest's data dir as a path.  Manifests name their dirs
+        relative to the table root, so a moved or copied table reads its
+        own files; an absolute name, as older manifests hold, is kept."""
+        return os.path.join(self.path, data_dir)
 
     def _write_manifest(self, snaps: list[Snapshot]) -> None:
         tmp = self.manifest_path + f".tmp.{uuid.uuid4().hex}"
@@ -102,11 +95,11 @@ class SnapshotTable:
 
     # --------------------------------------------------------------- write
     def _write_data(self, df: DataFrame, writer_conf) -> str:
-        d = os.path.join(self.path, f"data-{uuid.uuid4().hex}")
+        d = f"data-{uuid.uuid4().hex}"
         writer = df.write.mode("overwrite")
         if writer_conf:
             writer = writer_conf(writer)
-        writer.parquet(d)
+        writer.parquet(self.data_path(d))
         return d
 
     def append_local(self, rows, arrow_schema,
@@ -125,8 +118,8 @@ class SnapshotTable:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        d = os.path.join(self.path, f"data-{uuid.uuid4().hex}")
-        os.makedirs(d, exist_ok=True)
+        d = f"data-{uuid.uuid4().hex}"
+        os.makedirs(self.data_path(d), exist_ok=True)
         if isinstance(rows, pa.Table):
             tbl = rows.select(arrow_schema.names).cast(arrow_schema)
         else:
@@ -135,7 +128,7 @@ class SnapshotTable:
                 {f.name: pa.array(list(c), type=f.type)
                  for f, c in zip(arrow_schema, cols)}
             )
-        pq.write_table(tbl, os.path.join(d, "part-00000.parquet"))
+        pq.write_table(tbl, os.path.join(self.data_path(d), "part-00000.parquet"))
         return self._commit(operation, [d], summary, append=True)
 
     def append(self, df: DataFrame, operation: str = "append", summary: dict | None = None, writer_conf=None) -> int:
@@ -201,8 +194,6 @@ class SnapshotTable:
         time-travel targets).  The manifest rewrite commits atomically
         BEFORE any deletion, so a crash mid-expiry never leaves the
         manifest pointing at missing files.  Returns deleted dirs."""
-        import shutil
-
         snaps = self.snapshots()
         if len(snaps) <= keep_last:
             return []
@@ -211,7 +202,7 @@ class SnapshotTable:
         doomed = sorted({d for s in dropped for d in s.data_dirs} - referenced)
         self._write_manifest(kept)
         for d in doomed:
-            shutil.rmtree(d, ignore_errors=True)
+            shutil.rmtree(self.data_path(d), ignore_errors=True)
         return doomed
 
     def rollback_to(self, snapshot_id: int) -> int:
@@ -253,7 +244,7 @@ class SnapshotTable:
             subdirs = [s for s in (os.path.join(d, f"p={p}") for p in partitions) if os.path.isdir(s)]
             return reader.option("basePath", d).parquet(*subdirs) if subdirs else None
 
-        loads = [df for df in map(load, snap.data_dirs) if df is not None]
+        loads = [df for df in (load(self.data_path(d)) for d in snap.data_dirs) if df is not None]
         if not loads:
             return spark.createDataFrame([], schema)
         out = loads[0]

@@ -119,11 +119,10 @@ def run(leg: str, leg_dir: str) -> dict:
     """One batch over a fresh copy of the leg's world."""
     from augdiff_pipeline_spark.plans.augdiff import run_batch
     from augdiff_pipeline_spark.schemas import OSM_SCHEMA
-    from augdiff_pipeline_spark.sources.catalog import copy_tables
 
     root = os.path.join(leg_dir, "run")
     shutil.rmtree(root, ignore_errors=True)
-    copy_tables(os.path.join(leg_dir, "world"), root)
+    shutil.copytree(os.path.join(leg_dir, "world"), root)
     spark = _spark(f"overbound-{leg}")
     sc = spark.sparkContext
     batch_df = spark.read.schema(OSM_SCHEMA).parquet(os.path.join(leg_dir, "batch.parquet"))

@@ -5,6 +5,7 @@ checks against the oracle and crash-resume."""
 import glob
 import json
 import os
+import shutil
 from pathlib import Path
 
 import pytest
@@ -17,7 +18,7 @@ from augdiff_pipeline_spark.plans import augdiff
 from augdiff_pipeline_spark.plans.augdiff import run_batch
 from augdiff_pipeline_spark.plans.lineage import LineageLog
 from augdiff_pipeline_spark.schemas import INDEX_SCHEMA, OSM_SCHEMA
-from augdiff_pipeline_spark.sources.catalog import SnapshotTable, copy_tables
+from augdiff_pipeline_spark.sources.catalog import SnapshotTable
 from augdiff_pipeline_spark.sources.state import StateTable
 
 import oracle_augdiff as oracle
@@ -28,9 +29,9 @@ def canon(features):
     return sorted(json.dumps(f, sort_keys=True) for f in features)
 
 
-# a relation chain deeper than the 64 edges six doubling rounds close:
-# relation 9_200_000 holds 9_200_001, ..., the last one holds way
-# 9_100_000, which holds node 9_000_000 (101 edges from node to top)
+# a relation chain 100 deep: relation 9_200_000 holds 9_200_001, ...,
+# the last one holds way 9_100_000, which holds node 9_000_000 (101
+# edges from node to top)
 CHAIN_DEPTH = 100
 CHAIN_TOP = 9_200_000
 
@@ -47,10 +48,18 @@ def deep_chain_rows() -> list[tuple]:
 
 
 def test_batch_index_closure_matches_oracle(spark):
-    """The doubling fixpoint closes the fixture world and the 100-deep
-    relation chain exactly as the oracle's loop: it runs until no edge
-    is added, at any depth."""
-    for rows in (fixtures.base_state_rows(), deep_chain_rows()):
+    """The closure by OSM type closes the fixture world, the 100-deep
+    relation chain, and the route-parity cycle and incidental worlds
+    (base rows plus every batch: a containment cycle, an incidental
+    before-version member) exactly as the oracle's loop, at any depth."""
+    import test_route_parity as parity
+
+    parity_worlds = parity._worlds()
+    worlds = [fixtures.base_state_rows(), deep_chain_rows()] + [
+        base + [r for b in batches.values() for r in b]
+        for base, batches in (parity_worlds["cycle"], parity_worlds["incidental"])
+    ]
+    for rows in worlds:
         expected = {(a, b) for a, b in oracle.close_edges(oracle.edges_from_rows(rows)) if a != b}
         df = spark.createDataFrame(rows, OSM_SCHEMA)
         got = {
@@ -84,7 +93,11 @@ def test_incremental_closure_matches_oracle(spark):
     from augdiff_pipeline_spark.operators import closure
 
     base_rows = fixtures.base_state_rows()
-    index_df = transitive_closure(edges_from_rows(spark.createDataFrame(base_rows, OSM_SCHEMA)))
+    # materialized, as the stored index run_batch probes: the closure's
+    # own joins would otherwise rerun in every probe
+    index_df = transitive_closure(
+        edges_from_rows(spark.createDataFrame(base_rows, OSM_SCHEMA))
+    ).localCheckpoint(eager=True)
     oracle_index = {(a, b) for a, b in oracle.close_edges(oracle.edges_from_rows(base_rows)) if a != b}
     changes = fixtures.change_batch_rows()
     batches = [changes[seq] for seq in (0, 2, 5, 6)] + [deep_chain_rows()]
@@ -129,19 +142,21 @@ def test_downset_partitions_keeps_deep_chain(spark):
 
 
 def test_transitive_closure_job_count(spark):
-    """transitive_closure runs the 25 Spark jobs on the fixture world it
-    ran when six doubling rounds capped the loop: the fixpoint exits at
-    the same round without the cap."""
+    """transitive_closure runs the same 3 Spark jobs on the fixture
+    world and on the 100-deep relation chain: the checkpoint of the
+    distinct edges and the relation -> relation collect, whatever the
+    nesting depth."""
     sc = spark.sparkContext
-    edges = edges_from_rows(fixtures.base_state_df(spark))
-    group = "transitive-closure-jobs"
-    sc.setJobGroup(group, "transitive_closure")
-    try:
-        transitive_closure(edges)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 25
+    for name, rows in (("fixtures", fixtures.base_state_rows()), ("chain", deep_chain_rows())):
+        edges = edges_from_rows(spark.createDataFrame(rows, OSM_SCHEMA))
+        group = f"transitive-closure-jobs-{name}"
+        sc.setJobGroup(group, "transitive_closure")
+        try:
+            transitive_closure(edges)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3, name
 
 
 @pytest.fixture(scope="module")
@@ -321,7 +336,7 @@ def test_resume_after_crash_between_state_and_index_append(spark, pipeline_run, 
     monkeypatch.undo()
     delta = state.table.current()
     assert delta.operation == "append" and delta.summary["seq"] == 1
-    assert os.listdir(delta.data_dirs[-1]) == ["part-00000.parquet"]  # the pyarrow write
+    assert os.listdir(state.table.data_path(delta.data_dirs[-1])) == ["part-00000.parquet"]  # the pyarrow write
 
     state = StateTable(os.path.join(root, "state"))
     index = SnapshotTable(os.path.join(root, "index"))
@@ -382,7 +397,7 @@ def crash_world(spark, tmp_path_factory):
     state.init(base_df)
     index.overwrite(transitive_closure(edges_from_rows(base_df)))
     ref = root + "-uninterrupted"
-    copy_tables(root, ref)
+    shutil.copytree(root, ref)
     state, index, log = _open_world(ref)
     for seq in CRASH_SEQS:
         run_batch(spark, state, index, log, fixtures.change_batch_df(spark, seq), seq, ref + "/out")
@@ -418,7 +433,7 @@ def test_crash_at_every_write_resumes_identically(spark, crash_world, tmp_path, 
 
     world, expected = crash_world
     root = str(tmp_path / "world")
-    copy_tables(world, root)
+    shutil.copytree(world, root)
     crash_seq, owner, method = CRASH_POINTS[point]
     state, index, log = _open_world(root)
     for seq in CRASH_SEQS[:crash_seq]:

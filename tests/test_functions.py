@@ -56,10 +56,9 @@ def test_edges_from_rows_py_matches_dataframe(spark):
         base, batches = worlds[name]
         df = spark.createDataFrame(base + [r for b in batches.values() for r in b], OSM_SCHEMA)
         rows = df.toArrow().to_pylist()
-        for self_edges in (True, False):
-            want = sorted((r["a"], r["b"]) for r in edges_from_rows(df, self_edges).collect())
-            assert want, name
-            assert sorted(edges_from_rows_py(rows, self_edges)) == want, (name, self_edges)
+        want = sorted((r["a"], r["b"]) for r in edges_from_rows(df).collect())
+        assert want, name
+        assert sorted(edges_from_rows_py(rows, False)) == want, name
 
 
 def test_is_area(spark):

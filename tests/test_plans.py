@@ -55,7 +55,7 @@ def test_state_point_lookup_lists_only_its_partitions(spark, tmp_path, monkeypat
     rows = fixtures.base_state_rows()
     picked = {(r[1], r[2]) for r in rows[::7]}
     keys = [pair_to_long_py(i, t) for i, t in picked]
-    data_dir = state.table.current().data_dirs[0]
+    data_dir = state.table.data_path(state.table.current().data_dirs[0])
     allowed = {os.path.join(data_dir, f"p={partition_number_py(i, t)}") for i, t in picked}
     assert len([n for n in os.listdir(data_dir) if n.startswith("p=")]) > len(allowed)
 
@@ -225,7 +225,7 @@ def test_state_compaction_bounds_dirs_and_preserves_reads(spark, tmp_path):
     assert "compact" in ops
     # manifest is bounded and no dead dirs linger beyond kept snapshots
     assert len(state.table.snapshots()) <= 4 + 3  # keep_snapshots + save_interval
-    live = {d for s in state.table.snapshots() for d in s.data_dirs}
+    live = {state.table.data_path(d) for s in state.table.snapshots() for d in s.data_dirs}
     on_disk = {
         os.path.join(str(tmp_path / "state"), n)
         for n in os.listdir(str(tmp_path / "state"))
@@ -238,6 +238,26 @@ def test_state_compaction_bounds_dirs_and_preserves_reads(spark, tmp_path):
     plan = fetched._jdf.queryExecution().toString()
     assert "PushedFilters" in plan and "In(id" in plan.replace(" ", "").replace("[", "(")
     assert {(r["id"], r["type"]) for r in fetched.collect()} == {(2000, "way"), (2001, "way")}
+
+
+def test_copied_table_reads_after_original_is_deleted(spark, tmp_path):
+    """A table copied with shutil.copytree reads the same rows, through
+    its partitioned init dir and its driver-written delta alike, once
+    the original is deleted."""
+    import shutil
+
+    state = StateTable(str(tmp_path / "state"))
+    state.init(fixtures.base_state_df(spark))
+    batch = fixtures.base_state_df(spark).limit(5).withColumn("id", F.col("id") + F.lit(100000))
+    state.append_batch(batch.toArrow(), seq=1, spark=spark)
+    keys = [8001, 8005]  # ways 2000 and 2001
+    want = (sorted(str(r) for r in state.read(spark).collect()),
+            sorted(str(r) for r in state.fetch_keys(spark, keys).collect()))
+    shutil.copytree(tmp_path / "state", tmp_path / "copy")
+    shutil.rmtree(tmp_path / "state")
+    copy = StateTable(str(tmp_path / "copy"))
+    assert (sorted(str(r) for r in copy.read(spark).collect()),
+            sorted(str(r) for r in copy.fetch_keys(spark, keys).collect())) == want
 
 
 def test_rollback_skips_uncommitted_compaction(spark, tmp_path):

@@ -28,8 +28,8 @@ from augdiff_pipeline_spark.schemas import OSM_SCHEMA  # noqa: E402
 
 GOLDEN = os.path.join(os.path.dirname(__file__), "data", "polygon_layer_golden.json")
 CHAIN_DEPTH = 12
-# fixture-world layer jobs, measured at 39; the bound allows a quarter more
-MAX_LAYER_JOBS = 48
+# fixture-world layer jobs, as measured
+MAX_LAYER_JOBS = 22
 
 
 def _mp(rid, members, version=1, hours=0, **tags):

@@ -157,7 +157,7 @@ def test_streaming_soak_long_horizon(spark, tmp_path):
         # expiry actually reclaimed disk: on-disk data dirs match the
         # manifest's references (no orphan accumulation)
         on_disk = {d for d in glob.glob(os.path.join(tbl.path, "data-*"))}
-        referenced = {d for s in tbl.snapshots() for d in s.data_dirs}
+        referenced = {tbl.data_path(d) for s in tbl.snapshots() for d in s.data_dirs}
         assert on_disk == referenced, tbl.path
 
     # the compacted state still answers correctly: final row count equals
